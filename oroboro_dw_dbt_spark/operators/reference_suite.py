@@ -15,6 +15,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from oroboro_dw_dbt_spark.engine.dag import ModelGraph, SourceRegistry
 from oroboro_dw_dbt_spark.models.fixtures import FIXTURE_SQL, register_fixture_views
@@ -27,35 +28,54 @@ from oroboro_dw_dbt_spark.models.reference_models import build_reference_graph
 from oroboro_dw_dbt_spark.operators.catalog import query
 
 
-_FIXTURE_DIRS: dict[str, str] = {}
+_FIXTURES: dict[str, tuple[str, dict[str, T.StructType]]] = {}
 
 
-def _fixture_parquet_dir(spark: SparkSession, sf_dir: str) -> str:
+def _fixtures(spark: SparkSession, sf_dir: str) -> tuple[str, dict[str, T.StructType]]:
     """Materialize the 14 raw-source fixtures as parquet tables, once
-    per sf_dir per process. dbt sources are warehouse TABLES
+    per sf_dir per process; return their directory and each table's
+    schema. dbt sources are warehouse TABLES
     (ref: models/sources.yml:7-20), not derived views — registering the
     fixture SQL as lazy temp views made every ``source()`` reference
     re-derive the fixture inside the consumer's plan (the users fixture
     is referenced by 4 attribution routes → 4 recomputes). Scanning
     written parquet is both the faithful semantic and ~5× faster for the
     full mart DAG (measured 17.6 s → 3.4 s + one-time 4.2 s write at
-    sf0.1)."""
-    if sf_dir not in _FIXTURE_DIRS:
+    sf0.1).
+
+    Each schema is taken from the analyzed plan of the frame being
+    written (no job) and ``reference_graph`` registers it with the
+    source, so loading a source starts no parquet schema-inference job
+    (a build loads sources 15 times). Reading each table back to learn
+    its schema would cost a job per table."""
+    if sf_dir not in _FIXTURES:
         from concurrent.futures import ThreadPoolExecutor
 
         register_fixture_views(spark, sf_dir)
         out = tempfile.mkdtemp(prefix="ref_fixtures_")
 
-        def write(name: str) -> None:
-            spark.table(name).write.mode("overwrite").parquet(f"{out}/{name}")
+        def write(name: str) -> T.StructType:
+            df = spark.table(name)
+            df.write.mode("overwrite").parquet(f"{out}/{name}")
+            # the parquet reader returns every (flat) column nullable
+            return T.StructType(
+                [T.StructField(f.name, f.dataType, True, f.metadata) for f in df.schema]
+            )
 
         # 14 independent tiny writes: submit concurrently (Spark job
         # submission is thread-safe) — serial submission pays 14×
         # job-scheduling latency for KB-scale work
         with ThreadPoolExecutor(max_workers=8) as pool:
-            list(pool.map(write, FIXTURE_SQL))
-        _FIXTURE_DIRS[sf_dir] = out
-    return _FIXTURE_DIRS[sf_dir]
+            schemas = dict(zip(FIXTURE_SQL, pool.map(write, FIXTURE_SQL)))
+        _FIXTURES[sf_dir] = (out, schemas)
+    return _FIXTURES[sf_dir]
+
+
+def _fixture_parquet_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Directory of the 14 fixture parquet tables (see ``_fixtures``);
+    ``{dir}/{name}`` reads back with the schema ``reference_graph``
+    registers for ``name``."""
+    return _fixtures(spark, sf_dir)[0]
 
 
 def reference_graph(
@@ -65,10 +85,10 @@ def reference_graph(
     With a ``warehouse_dir`` the mart materializes as a Parquet TABLE
     (dbt's actual config, dbt_project.yml:15-17); without one,
     everything is a view (cheaper for plan-only tests)."""
-    fixdir = _fixture_parquet_dir(spark, sf_dir)
+    fixdir, schemas = _fixtures(spark, sf_dir)
     sources = SourceRegistry()
-    for name in FIXTURE_SQL:
-        sources.add_path(name, f"{fixdir}/{name}")
+    for name, schema in schemas.items():
+        sources.add_path(name, f"{fixdir}/{name}", schema=schema)
     return build_reference_graph(sources, warehouse_dir=warehouse_dir)
 
 

@@ -252,6 +252,50 @@ class TestLocationsCleanBranches:
         assert seoul > 0
 
 
+class TestPerBuildFixedCost:
+    """A repeated build must not redo work whose result cannot change
+    between builds: compiling generated classes (the session's codegen
+    cache holds a whole build) and inferring the fixture sources'
+    schemas (pinned when the fixtures are written)."""
+
+    def test_warm_build_reuses_generated_classes(self, spark, tmp_path):
+        codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+        def build(i):
+            graph = reference_graph(spark, SF, warehouse_dir=str(tmp_path / f"wh{i}"))
+            graph.run(spark)
+
+        build(0)
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        build(1)
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount() - before
+        assert compiled <= 30, f"warm build compiled {compiled} classes"
+
+    def test_fixture_sources_load_with_pinned_schema(self, spark):
+        from oroboro_dw_dbt_spark.models.fixtures import FIXTURE_SQL
+        from oroboro_dw_dbt_spark.operators.reference_suite import (
+            _fixture_parquet_dir,
+        )
+
+        graph = reference_graph(spark, SF)
+        fixdir = _fixture_parquet_dir(spark, SF)
+        assert graph.sources.names() == sorted(FIXTURE_SQL)
+        assert len(FIXTURE_SQL) == 14
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        group = "test_fixture_source_load"
+        before = list(tracker.getJobIdsForGroup(group))
+        sc.setJobGroup(group, "load the pinned fixture sources")
+        try:
+            loaded = {n: graph.sources.load(spark, n).schema for n in FIXTURE_SQL}
+        finally:
+            sc.setJobGroup(None, None)
+        assert before == []
+        assert list(tracker.getJobIdsForGroup(group)) == [], "a source load ran a job"
+        for name, schema in loaded.items():
+            assert schema == spark.read.parquet(f"{fixdir}/{name}").schema, name
+
+
 class TestR12OptimizationEquivalence:
     """Optimization r12 rewrote two model subtrees; each rewrite must be
     row-multiset-identical to the spelling it replaced (the DuckDB

@@ -11,7 +11,8 @@ SparkSession (no factory confs: INT96 timestamps, default timezone,
 default shuffle partitions) — the driver's environment. An entry that
 is green under the factory session but red under --bare has a hidden
 session-conf dependence (r07's `eng_metadata_count`: zone maps missing
-because INT96 footers carry no timestamp statistics).
+because INT96 footers carry no timestamp statistics). It takes only
+the factory's host-sized core count and heap.
 """
 
 from __future__ import annotations
@@ -171,11 +172,13 @@ def main() -> int:
     if bare:
         from pyspark.sql import SparkSession
 
+        from oroboro_dw_dbt_spark.session import driver_memory, host_cpus
+
         spark = (
-            SparkSession.builder.master("local[32]")
+            SparkSession.builder.master(f"local[{host_cpus()}]")
             .appName("correctness_check_bare")
             .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "24g")
+            .config("spark.driver.memory", driver_memory())
             .getOrCreate()
         )
         print(

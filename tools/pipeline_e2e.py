@@ -44,7 +44,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench import _await_quiet_host, _host_load  # noqa: E402
-from oroboro_dw_dbt_spark.session import get_spark  # noqa: E402
+from oroboro_dw_dbt_spark.session import driver_memory, get_spark  # noqa: E402
 
 
 def _parse_args(argv=None):
@@ -151,10 +151,9 @@ def resolve_stage_confs(sf_dir: str):
     )
     est_docs = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
     if ckpt_level is None:
-        heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
         from oroboro_dw_dbt_spark.dedup.dedup import _parse_mem
 
-        ckpt_level = "disk" if est_docs * 1200 > 0.25 * _parse_mem(heap) else None
+        ckpt_level = "disk" if est_docs * 1200 > 0.25 * _parse_mem(driver_memory()) else None
     extra = None
     n_shuffle = None
     if ckpt_level == "disk":
