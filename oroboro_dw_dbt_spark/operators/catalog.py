@@ -93,67 +93,6 @@ def _driver_history(
     return covered, appeared
 
 
-# When more new entries exist than one driver window certifies, these
-# families go first (order within the list is the order used). Round-7
-# rule (VERDICT r06 Next #2): the list below IS the entire 73-entry
-# backlog — 72 r06 registrations plus dd_semdedup_ivf, the round's ONE
-# new entry — in certification-value order, and registrations are
-# FROZEN until the backlog fits inside a single driver window (~50).
-# The stuck tier (dd_lsh_recall_report, oracle CAST fixed this round)
-# front-runs everything via catalog_order().
-FRESH_PRIORITY: tuple[str, ...] = (
-    # --- bench headliners with public wall times but no driver record
-    # (VERDICT r06 Next #5: a timed-but-untested query is the wrong
-    # risk profile) — these four go first
-    "st_drift_monitor", "ev_last_touch", "ev_sequence_match",
-    "ts_interpolate",
-    # --- the two entries whose oracles were repaired this round: the
-    # repaired dtype class must earn a driver record immediately
-    "ml_bootstrap_ci",
-    # (dd_lsh_recall_report is in the stuck tier, ahead of all of these)
-    # --- the round-7 headline: trained-cell SemDeDup (Next #7)
-    "dd_semdedup_ivf",
-    # --- dedup / split completions (training-data pipeline core)
-    "dd_url_canonical", "dd_containment", "sp_dedup_aware_split",
-    # --- storage/lifecycle verbs (r06 headline claims)
-    "eng_wap_publish", "eng_branch_publish", "eng_snapshot_diff",
-    "eng_stats_skipping", "eng_dynamic_partition_overwrite",
-    "eng_metadata_count", "eng_file_provenance", "eng_text_source",
-    # --- graph completions
-    "gr_degree_stats", "gr_bipartite_projection", "gr_jaccard_neighbors",
-    # --- ML-eval / calibration / drift family (the largest r06 wave)
-    "ml_confusion_threshold", "ml_calibration_bins", "ml_brier_logloss",
-    "ml_ndcg_at_k", "ml_pr_curve", "ml_chi_square", "ml_ks_drift",
-    "ml_psi_drift", "ml_regression_metrics", "ml_ab_proportions",
-    "ml_multiclass_report", "ml_lift_gains", "ml_cooccurrence_pmi",
-    # --- labeling / preference-data ops
-    "lab_majority_vote", "lab_agreement", "lab_pref_pairs",
-    # --- feature engineering
-    "fe_target_encode", "fe_scaler_suite", "fe_quantile_bins",
-    "fe_onehot_topk", "fe_hashed_cross",
-    # --- time series
-    "ts_ewma_trailing", "ts_time_weighted_avg", "ts_autocorr",
-    "ts_period_over_period",
-    # --- events
-    "ev_rfm_segments", "ev_overlap_concurrency", "ev_attribution_credit",
-    # --- joins / sketch composition / chunking / text
-    "j_interval_overlap", "tj_asof_tolerance", "sk_bucket_prefilter_join",
-    "ch_dataset_card", "t_frequency_cutoff_curve",
-    # --- multimodal
-    "mm_resize_blocks", "mm_audio_energy", "mm_scene_cuts",
-    # --- SQL surface / generators / observability
-    "sql_tvf_surface", "p_observe_metrics", "p_generator_suite",
-    # --- aggregates and windows
-    "a_mode_exact", "a_weighted_percentile", "a_gini_impurity",
-    "a_bool_agg_suite", "w_value_suite", "w_streak_lengths",
-    "w_sliding_window",
-    # --- scalar-function suites (lowest certification risk, so last:
-    # these are the ones that can safely wait for the r08 window)
-    "f_regex_suite", "f_bitwise_suite", "f_url_suite", "f_string_suite2",
-    "f_json_suite2", "m_decimal_suite", "m_try_suite",
-)
-
-
 # Already-green entries whose IMPLEMENTATION changed after their last
 # driver certification (VERDICT r08 Next #4): their standing record
 # predates the current code, so they jump the done-tier queue and
@@ -203,8 +142,7 @@ def catalog_order() -> list[str]:
        these lose another full round if they miss the window, so they
        outrank brand-new entries when the uncovered backlog exceeds
        the window size);
-    2. never appeared at all (new entries): FRESH_PRIORITY members in
-       list order first, then the rest in insertion order;
+    2. never appeared at all (new entries), in insertion order;
     3. already green but code-changed since certification (RECERTIFY);
     4. already green (their record stands).
     """
@@ -212,11 +150,9 @@ def catalog_order() -> list[str]:
     names = list(QUERIES)
     stuck = [n for n in names if n in appeared and n not in covered]
     fresh = [n for n in names if n not in appeared and n not in covered]
-    prio = [n for n in FRESH_PRIORITY if n in fresh]
-    rest = [n for n in fresh if n not in FRESH_PRIORITY]
     recert = [n for n in RECERTIFY if n in covered]
     done = [n for n in names if n in covered and n not in recert]
-    return stuck + prio + rest + recert + done
+    return stuck + fresh + recert + done
 
 
 def queries_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

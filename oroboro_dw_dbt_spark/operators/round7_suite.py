@@ -1351,8 +1351,8 @@ def dd_semdedup_ivf_greedy_np2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dd_semdedup_ivf_greedy at nprobe=2: the descent scores the two
     best pivots per level (~2× probe work, still ≪ the exact path's C
     dots) and :func:`_score_groups`' min_by folds the multi-group
-    winners exactly. The recall census (tools/greedy_recall_census.py)
-    measures what the extra probe buys on uniform geometry."""
+    winners exactly. The recall census (BENCH_r10_greedy_recall*.json)
+    measured what the extra probe buys on uniform geometry."""
     v = _load_greedy_vectors(spark, sf_dir)
     return semdedup_ivf_core(  # callable C rule: one corpus scan (r13)
         v, ivf_cells_capped, assign="greedy", occupancy_cap=8 * 128, nprobe=2

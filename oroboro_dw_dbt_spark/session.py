@@ -12,9 +12,12 @@ One place to pin every config that affects correctness or scale:
   on skewed keys (NULL-heavy FKs, hot partners) is delegated here
   rather than hand-salted, matching how the reference delegated the
   same concerns to BigQuery (SURVEY §4).
-- Host-sized parallelism: without ``SPARK_GRAFT_CPUS`` the master is
-  ``local[os.cpu_count()]`` with as many shuffle partitions, not a
-  32-core assumption.
+- Host-sized parallelism and heap: without ``SPARK_GRAFT_CPUS`` the
+  master is ``local[os.cpu_count()]`` with as many shuffle partitions,
+  not a 32-core assumption; without ``SPARK_GRAFT_DRIVER_MEM`` the heap
+  is 60% of physical RAM, not 24g. Every size rule that reads
+  ``spark.driver.memory`` (the broadcast gate, the LSH spelling and
+  checkpoint-level choices) then believes a heap the host can back.
 - Generated classes are reused across repeated builds. The codegen
   cache holds ``CODEGEN_CACHE_ENTRIES`` classes, not Spark's default
   100: a build of the reference mart has 117 distinct classes (after
@@ -45,25 +48,13 @@ def host_cpus() -> int:
 
 
 def driver_memory() -> str:
-    """``SPARK_GRAFT_DRIVER_MEM`` if set, else 24g (not yet host-sized)."""
-    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
-
-
-def extra_conf_pairs(raw: str) -> list[tuple[str, str]]:
-    """Parse ``SPARK_GRAFT_EXTRA_CONF``: ``;``-separated ``key=value``
-    pairs, blanks ignored. A pair without ``=`` or with an empty key
-    raises, so a typo fails at session start instead of being dropped."""
-    pairs = []
-    for pair in raw.split(";"):
-        if not pair.strip():
-            continue
-        k, eq, v = pair.partition("=")
-        if not eq or not k.strip():
-            raise ValueError(
-                f"SPARK_GRAFT_EXTRA_CONF: malformed pair {pair!r} (want key=value)"
-            )
-        pairs.append((k.strip(), v.strip()))
-    return pairs
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else 60% of the host's
+    physical RAM, in MiB."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{int(0.6 * ram) >> 20}m"
 
 
 def get_spark(
@@ -78,7 +69,6 @@ def get_spark(
     local runs; on a real cluster, set it to 2-3× total executor cores
     (or rely on AQE coalescing from a higher initial value).
     """
-    extra_env = extra_conf_pairs(os.environ.get("SPARK_GRAFT_EXTRA_CONF", ""))
     cpus = host_cpus()
     master = master or f"local[{cpus}]"
     n_shuffle = shuffle_partitions or cpus
@@ -104,13 +94,6 @@ def get_spark(
         .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    # Session-conf A/B hook (optimization r13, guide §9): semicolon-
-    # separated k=v pairs, applied last. The driver never sets this —
-    # defaults above are the product config; the hook exists so config
-    # candidates (shuffle codec, join strategy) can be benched with the
-    # IDENTICAL harness instead of hand-edited session code.
-    for k, v in extra_env:
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()

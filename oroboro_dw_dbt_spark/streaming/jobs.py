@@ -86,11 +86,7 @@ def _stream_state_partitions(src_dir: str) -> int:
     ~32 MB of source bytes (the same bytes-per-partition discipline
     AQE applies to batch shuffles, guide §2.2), clamped to [1, 4096].
     At sf0.1 (events ≈ 2 MB) that is 1 partition; a 1 TB/trigger feed
-    gets its full multi-thousand width. SPARK_GRAFT_STREAM_STATE_PARTS
-    overrides for deployments that size state stores explicitly."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-    if env:
-        return max(1, int(env))
+    gets its full multi-thousand width."""
     target = 32 * 1024 * 1024
     total = 0
     try:

@@ -128,8 +128,8 @@ _BPE_BATCH = 8
 # hard disjointness stop into arithmetic (VERDICT r09 Next #7).
 _BPE_TRI_WINDOW = 4
 
-# Pass counter for the jobs ∝ vocab/batch probe (tools/bpe_probe):
-# number of pair-counting passes the last train() call ran.
+# Number of pair-counting passes the last train() call ran (the
+# jobs ∝ vocab/batch check in tests/test_feature_bpe.py reads it).
 LAST_TRAIN_PASSES = 0
 
 

@@ -32,3 +32,19 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def catalog_schemas(spark):
+    """Every catalog entry's output schema at ``SF_SMOKE``, or the error
+    its builder raised. Building an entry runs its eager checkpoints and
+    counts, so the tests that only read schemas share this one pass."""
+    from oroboro_dw_dbt_spark.operators import QUERIES
+
+    schemas = {}
+    for name, spec in QUERIES.items():
+        try:
+            schemas[name] = spec.builder(spark, SF_SMOKE).schema
+        except Exception as e:  # noqa: BLE001
+            schemas[name] = f"{type(e).__name__}: {e}"
+    return schemas

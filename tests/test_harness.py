@@ -17,7 +17,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 from check_correctness import complex_cols  # noqa: E402
 
-from oroboro_dw_dbt_spark.operators import QUERIES  # noqa: E402
 from oroboro_dw_dbt_spark.operators import catalog as cat  # noqa: E402
 
 
@@ -40,16 +39,17 @@ class TestMirrorComplexTypeGuard:
         cols = ["i", "f", "s", "b", "t", "n", "d", "ts"]
         assert complex_cols(cols, rows) == []
 
-    def test_no_catalog_entry_returns_complex_columns(self, spark):
+    def test_no_catalog_entry_returns_complex_columns(self, catalog_schemas):
         """Every entry's declared schema must be scalar-only: the driver
         hashes cells with pandas and crashes on array/map/struct."""
         from pyspark.sql import types as T
 
+        errors = {n: s for n, s in catalog_schemas.items() if isinstance(s, str)}
+        assert not errors, f"entries failed to build: {errors}"
         complex_types = (T.ArrayType, T.MapType, T.StructType)
         bad = {}
-        for name, spec in QUERIES.items():
-            df = spec.builder(spark, "/root/testdata/sf0.001")
-            cols = [f.name for f in df.schema.fields
+        for name, schema in catalog_schemas.items():
+            cols = [f.name for f in schema.fields
                     if isinstance(f.dataType, complex_types)]
             if cols:
                 bad[name] = cols
@@ -131,13 +131,20 @@ class TestWindowRotation:
         assert order[: len(stuck)] == stuck
 
 
-class TestFreshPriorityDrift:
-    def test_every_fresh_priority_name_is_a_catalog_entry(self):
-        """FRESH_PRIORITY is hand-maintained; a renamed/mistyped entry
-        would silently lose its certification-window priority because
-        catalog_order filters unknown names out. Fail loudly instead."""
-        unknown = [n for n in cat.FRESH_PRIORITY if n not in QUERIES]
-        assert not unknown, f"FRESH_PRIORITY names not in catalog: {unknown}"
 
-    def test_fresh_priority_has_no_duplicates(self):
-        assert len(set(cat.FRESH_PRIORITY)) == len(cat.FRESH_PRIORITY)
+class TestProbeEntries:
+    def test_record_holds_sink_wall_and_spark_counts(self, spark, tmp_path):
+        """The per-entry profiler times the noop sink and records the
+        fastest pass's job/stage/task counts from its job group."""
+        from probe_entries import main
+
+        sf = "/root/testdata/sf0.001"
+        out = tmp_path / "probe.json"
+        main([str(out), "q1_pricing_summary", sf])
+        rec = json.loads(out.read_text())["dirs"][sf]
+        assert rec["queries"]["q1_pricing_summary"] > 0
+        assert rec["queries"]["q1_pricing_summary"] == min(
+            rec["passes_raw"]["q1_pricing_summary"]
+        )
+        prof = rec["profile"]["q1_pricing_summary"]
+        assert prof["jobs"] >= 1 and prof["stages"] >= 1 and prof["tasks"] >= 1

@@ -1,6 +1,6 @@
 """tools/pipeline_e2e.py CLI surface (VERDICT r11 Next #7): the
-recall knobs are promoted from typo-silent env strings to CLI args,
-and the artifact records what a rung actually ran with."""
+recall knobs are CLI args, not typo-silent env strings, and the
+artifact records what a rung actually ran with."""
 
 import json
 import sys
@@ -8,30 +8,28 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from tools.pipeline_e2e import _parse_args, _resolve_knob, main  # noqa: E402
+from tools.pipeline_e2e import _parse_args, _recall_knobs, main  # noqa: E402
 
 
 class TestKnobResolution:
     def test_cli_wins_over_env(self, monkeypatch):
+        """The old env spelling of a knob is not read at all."""
         monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_MARGIN", "0.5")
-        assert _resolve_knob(0.1, "SPARK_GRAFT_SEMDEDUP_MARGIN", float) == (
-            0.1,
-            "cli",
-        )
-
-    def test_env_fallback(self, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_SPILL", "0.3")
-        assert _resolve_knob(None, "SPARK_GRAFT_SEMDEDUP_SPILL", float) == (
-            0.3,
-            "env",
-        )
+        knobs = _recall_knobs(_parse_args(["o.json", "/d", "--margin", "0.1"]))
+        assert knobs["probe_margin"] == 0.1
+        assert knobs["source"]["probe_margin"] == "cli"
 
     def test_default_off(self, monkeypatch):
-        monkeypatch.delenv("SPARK_GRAFT_SEMDEDUP_MARGIN", raising=False)
-        assert _resolve_knob(None, "SPARK_GRAFT_SEMDEDUP_MARGIN", float) == (
-            None,
-            "default",
-        )
+        monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_SPILL", "0.3")
+        assert _recall_knobs(_parse_args(["o.json", "/d"])) == {
+            "nprobe": 1,
+            "probe_margin": None,
+            "group_spill": None,
+            "spill_cap": 8,
+            "source": dict.fromkeys(
+                ("nprobe", "probe_margin", "group_spill", "spill_cap"), "default"
+            ),
+        }
 
     def test_parse_args_positional_compat(self):
         a = _parse_args(["OUT.json", "/x/sf0.1"])
@@ -51,9 +49,6 @@ class TestPipelineSmoke:
         and the usual stage walls/counts. (get_spark reuses the test
         session, so this is in-process, not a second JVM.)"""
         monkeypatch.setenv("SPARK_GRAFT_BENCH_MAX_WAITS", "0")
-        monkeypatch.delenv("SPARK_GRAFT_SEMDEDUP_MARGIN", raising=False)
-        monkeypatch.delenv("SPARK_GRAFT_SEMDEDUP_SPILL", raising=False)
-        monkeypatch.delenv("SPARK_GRAFT_SEMDEDUP_NPROBE", raising=False)
         out = tmp_path / "pipe.json"
         main(
             [str(out), "/root/testdata/sf0.001", "--margin", "0.1",
@@ -80,7 +75,6 @@ class TestPipelineSmoke:
             "semdedup_ivf",
             "pack_shards",
         }
-        assert rec["semdedup_mode"] == "linear"
 
 
 class TestChainPlanAudit:
@@ -118,10 +112,9 @@ class TestShuffleWidth:
     the clean sf1000 corpus measured a corpus-scaled width (1024)
     dead even in-chain on the LSH stage, +37% on the semantic stage,
     and +6% on the rung total — the scaled rule was reverted
-    (SCALE.md round 12). SPARK_GRAFT_PIPE_SHUFFLE overrides for A/B
-    probes; widening past 256 must drop the AQE advisory to 24m or
-    coalescePartitions merges the extra partitions straight back.
-    Memory rungs keep n_shuffle=None (session default)."""
+    (SCALE.md round 12). Memory rungs keep n_shuffle=None (session
+    default). The level comes from the footer doc count against the
+    driver heap."""
 
     def _tiny_dir(self, tmp_path):
         import pyarrow as pa
@@ -138,25 +131,16 @@ class TestShuffleWidth:
     def test_disk_rung_constant_width(self, monkeypatch, tmp_path):
         from tools.pipeline_e2e import resolve_stage_confs
 
-        monkeypatch.setenv("SPARK_GRAFT_PIPE_CKPT_LEVEL", "disk")
-        monkeypatch.delenv("SPARK_GRAFT_PIPE_SHUFFLE", raising=False)
+        # 8 docs × ~1.2 KB of live text overrun 25% of a 16 KiB heap
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "16k")
         ck, extra, n = resolve_stage_confs(self._tiny_dir(tmp_path))
-        assert n == 256
+        assert ck == "disk" and n == 256
+        assert extra["spark.rdd.compress"] == "true"
         assert "spark.sql.adaptive.advisoryPartitionSizeInBytes" not in extra
-
-    def test_override_widens_and_sets_advisory(self, monkeypatch, tmp_path):
-        from tools.pipeline_e2e import resolve_stage_confs
-
-        monkeypatch.setenv("SPARK_GRAFT_PIPE_CKPT_LEVEL", "disk")
-        monkeypatch.setenv("SPARK_GRAFT_PIPE_SHUFFLE", "1024")
-        ck, extra, n = resolve_stage_confs(self._tiny_dir(tmp_path))
-        assert n == 1024
-        assert extra["spark.sql.adaptive.advisoryPartitionSizeInBytes"] == "24m"
 
     def test_memory_rung_no_width(self, monkeypatch):
         from tools.pipeline_e2e import resolve_stage_confs
 
-        monkeypatch.delenv("SPARK_GRAFT_PIPE_CKPT_LEVEL", raising=False)
-        monkeypatch.delenv("SPARK_GRAFT_PIPE_SHUFFLE", raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
         ck, extra, n = resolve_stage_confs("/root/testdata/sf0.001")
         assert ck is None and extra is None and n is None

@@ -38,7 +38,7 @@ class TestStreaming:
         }
         assert stream == batch
 
-    def test_stream_state_width_rule(self, spark, tmp_path, monkeypatch):
+    def test_stream_state_width_rule(self, spark, tmp_path):
         """Optimization r13: the stream's state-partition width is
         sized from input bytes (1 per ~32 MB, clamped [1, 4096]) — AQE
         cannot coalesce stateful shuffles, so the width must be derived,
@@ -57,9 +57,6 @@ class TestStreaming:
         assert _stream_state_partitions(str(d)) == 1  # 5 MB -> 1
         (d / "b.parquet").write_bytes(b"\0" * (60 * 1024 * 1024))
         assert _stream_state_partitions(str(d)) == 3  # 65 MB -> ceil
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", "7")
-        assert _stream_state_partitions(str(d)) == 7  # override wins
-        monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTS")
         assert _stream_state_partitions("/nonexistent_dir") == 0  # default
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         with _state_width(spark, 3):

@@ -217,12 +217,12 @@ def build_plan_frames(spark, sf_dir: str) -> dict[str, "object"]:
 
 def chain_plan_frames(
     spark, sf_dir: str, margin: float = 0.1, spill: float = 0.3,
-    nprobe: int = 16, occ: int = 128,
+    nprobe: int = 16,
 ) -> dict[str, "object"]:
     """The 4-stage training-data chain (VERDICT r11 Next #8), built
     from THE SAME stage builders tools/pipeline_e2e.py main() times
     (corpus_frame/neardup_frame/semantic_frame/final_frame/
-    shards_frame — one composition, three consumers, so the audited
+    shards_frame — one composition, two consumers, so the audited
     plan cannot drift from what the rungs run), with the same
     stage-boundary eager checkpoints and the headline recall knobs on.
     Yields each stage's pre-checkpoint frame: the tree that stage
@@ -249,7 +249,7 @@ def chain_plan_frames(
     deduped = deduped_pre.localCheckpoint(eager=True)
     v = semantic_vectors(spark, sf_dir, deduped)
     sem, _ = semantic_frame(
-        v, v.count(), occ=occ, nprobe=nprobe, probe_margin=margin,
+        v, v.count(), nprobe=nprobe, probe_margin=margin,
         group_spill=spill,
     )
     frames["chain:semdedup_ivf"] = sem

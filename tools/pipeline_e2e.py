@@ -25,17 +25,15 @@ Usage: python tools/pipeline_e2e.py OUT.json [SF_DIR]
                 [--margin M] [--spill S] [--nprobe N]
 Prints one JSON line; full record written to OUT.json.
 
-The recall knobs are CLI args (VERDICT r11 Next #7 — env strings are
-typo-silent; the artifact must say what a rung ran with). The old env
-vars (SPARK_GRAFT_SEMDEDUP_MARGIN/SPILL/NPROBE) still work as
-defaults; an explicit flag wins, and the resolved values plus their
-source land in the artifact's ``recall_knobs`` field either way.
+The recall knobs are CLI args only (VERDICT r11 Next #7 — env strings
+are typo-silent; the artifact must say what a rung ran with): the
+resolved values and their source (``cli`` or ``default``) land in the
+artifact's ``recall_knobs`` field.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
@@ -56,59 +54,71 @@ def _parse_args(argv=None):
     ap.add_argument(
         "--margin", type=float, default=None,
         help="semantic-stage probe_margin (adaptive vector-side "
-        "multiprobe; default: SPARK_GRAFT_SEMDEDUP_MARGIN env or off)",
+        "multiprobe; default: off)",
     )
     ap.add_argument(
         "--spill", type=float, default=None,
         help="semantic-stage group_spill (cell-side multi-assignment; "
-        "default: SPARK_GRAFT_SEMDEDUP_SPILL env or off)",
+        "default: off)",
     )
     ap.add_argument(
         "--nprobe", type=int, default=None,
         help="pivots probed per descent level (margin makes this a "
-        "width cap; default: SPARK_GRAFT_SEMDEDUP_NPROBE env or 1)",
+        "width cap; default: 1)",
     )
     ap.add_argument(
         "--spill-cap", type=int, default=None, dest="spill_cap",
         help="max pivot groups a spilled cell may join per level — a "
         "wide --spill silently saturates here, so large-C censuses "
-        "must raise it (default: SPARK_GRAFT_SEMDEDUP_SPILL_CAP env "
-        "or 8)",
+        "must raise it (default: 8)",
     )
     return ap.parse_args(argv)
 
 
-def _resolve_knob(cli_val, env_name, cast):
-    """(value, source) — explicit CLI wins, env is the fallback."""
-    if cli_val is not None:
-        return cli_val, "cli"
-    env_s = os.environ.get(env_name)
-    if env_s:
-        return cast(env_s), "env"
-    return None, "default"
+# Semantic-stage target cell occupancy (vectors per cell; the cells ∝ N
+# operating point, see semantic_frame).
+_OCC = 128
+
+# Disk-rung shuffle width (see resolve_stage_confs).
+_DISK_SHUFFLE = 256
+
+
+def _recall_knobs(args) -> dict:
+    """The semantic stage's recall knobs: each CLI flag, else its
+    default (nprobe 1 = the certified point, margin/spill off), plus
+    where each value came from."""
+    defaults = {"nprobe": 1, "probe_margin": None, "group_spill": None, "spill_cap": 8}
+    given = {
+        "nprobe": args.nprobe,
+        "probe_margin": args.margin,
+        "group_spill": args.spill,
+        "spill_cap": args.spill_cap,
+    }
+    knobs = {k: defaults[k] if v is None else v for k, v in given.items()}
+    knobs["source"] = {k: "default" if v is None else "cli" for k, v in given.items()}
+    return knobs
 
 
 # --- shared stage machinery -------------------------------------------
-# These are THE chain's stage definitions: main() times them,
-# tools/lsh_stage_probe.py re-runs stages 1–2 in isolation, and
+# These are THE chain's stage definitions: main() times them and
 # tools/explain_audit.py --chain audits their plans. One composition,
-# three consumers — so a composition change cannot drift between the
+# two consumers — so a composition change cannot drift between the
 # rung artifacts and the audit (code-review r12 finding).
 
 
 def resolve_stage_confs(sf_dir: str):
     """(ckpt_level, extra_conf, n_shuffle) for the chain session.
 
-    SPARK_GRAFT_PIPE_CKPT_LEVEL=disk routes every corpus-sized
-    stage-boundary checkpoint (and the LSH stage's per-doc frame) to
-    DISK_ONLY: at the sf1000 rung the cumulative pinned state
-    (corpus + deduped + LSH base + semantic vectors) overran a 64 g
-    heap; from disk the same chain runs clean. A cluster spreads
-    these bytes thin and the default (memory+disk) is right there.
-    Unset = AUTO (VERDICT r10 Next #4): estimate the doc count from
-    the parquet footers (no JVM needed) and go DISK_ONLY when ~2
-    live text checkpoints (~1.2 KB/doc) would overrun 25% of the
-    driver heap — the same sizing rule the LSH spelling uses.
+    The "disk" level routes every corpus-sized stage-boundary
+    checkpoint (and the LSH stage's per-doc frame) to DISK_ONLY: at
+    the sf1000 rung the cumulative pinned state (corpus + deduped +
+    LSH base + semantic vectors) overran a 64 g heap; from disk the
+    same chain runs clean. A cluster spreads these bytes thin and the
+    default (memory+disk) is right there. The level is chosen from the
+    input (VERDICT r10 Next #4): estimate the doc count from the
+    parquet footers (no JVM needed) and go DISK_ONLY when ~2 live text
+    checkpoints (~1.2 KB/doc) would overrun 25% of the driver heap —
+    the same sizing rule the LSH spelling uses.
 
     DISK_ONLY blocks are serialized but UNcompressed by default
     (spark.rdd.compress=false); a corpus-text checkpoint that is
@@ -125,7 +135,7 @@ def resolve_stage_confs(sf_dir: str):
     files from coexisting with the live stage (the first sf1000
     attempt's disk-full abort).
 
-    Shuffle WIDTH stays a CONSTANT 256 — a corpus-scaled width rule
+    Shuffle WIDTH is a CONSTANT 256 — a corpus-scaled width rule
     (≤ ~50 k docs per reduce partition → 1024 at sf1000) was built,
     measured in a full 2×2 on the clean sf1000 corpus, and REVERTED:
     stage-only the wider LSH shuffle won ~8% (50.4 → 46.4 µs/doc,
@@ -133,15 +143,7 @@ def resolve_stage_confs(sf_dir: str):
     dead even (58.4 vs 58.5, BENCH_r12_pipe_sf1000{,_w1024}.json) and
     the global width regressed the semantic stage +37% (661 → 908 s
     — finer partitions dilute the per-cell GEMM batches), total rung
-    +6%. Victim/survivor counts were bit-identical at both widths.
-    SPARK_GRAFT_PIPE_SHUFFLE overrides for A/B probes; when the
-    override widens past 256 the AQE advisory partition size drops to
-    24 MB so coalescePartitions (64 MB target) cannot merge the extra
-    partitions straight back. The open sf300→sf1000 in-chain per-doc
-    uptick is attributed to neither width nor steal; per-stage
-    iowait/disk-sector deltas are now in the artifacts to adjudicate
-    the I/O-saturation hypothesis."""
-    ckpt_level = os.environ.get("SPARK_GRAFT_PIPE_CKPT_LEVEL")
+    +6%. Victim/survivor counts were bit-identical at both widths."""
     import glob
 
     import pyarrow.parquet as pq
@@ -149,43 +151,29 @@ def resolve_stage_confs(sf_dir: str):
     paths = glob.glob(f"{sf_dir}/documents.parquet/*.parquet") or glob.glob(
         f"{sf_dir}/documents.parquet"
     )
-    est_docs = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
-    if ckpt_level is None:
-        from oroboro_dw_dbt_spark.dedup.dedup import _parse_mem
+    from oroboro_dw_dbt_spark.dedup.dedup import _parse_mem
 
-        ckpt_level = "disk" if est_docs * 1200 > 0.25 * _parse_mem(driver_memory()) else None
-    extra = None
-    n_shuffle = None
-    if ckpt_level == "disk":
-        extra = {
-            "spark.rdd.compress": "true",
-            "spark.cleaner.periodicGC.interval": "2min",
-        }
-        width_env = os.environ.get("SPARK_GRAFT_PIPE_SHUFFLE")
-        n_shuffle = int(width_env) if width_env else 256
-        if n_shuffle > 256:
-            extra["spark.sql.adaptive.advisoryPartitionSizeInBytes"] = "24m"
-    return ckpt_level, extra, n_shuffle
+    est_docs = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+    if est_docs * 1200 <= 0.25 * _parse_mem(driver_memory()):
+        return None, None, None
+    extra = {
+        "spark.rdd.compress": "true",
+        "spark.cleaner.periodicGC.interval": "2min",
+    }
+    return "disk", extra, _DISK_SHUFFLE
 
 
 def resolve_lsh_spelling(corpus, n_corpus: int, ckpt_level):
     """(verify, checkpoint_level, decision-record) for stage 2.
 
-    AUTO by default (VERDICT r10 Next #4): carry+memory when
+    Sized from the corpus (VERDICT r10 Next #4): carry+memory when
     ~0.7 KB/doc of verify state fits 25% of executor storage (sf30),
-    reshingle+disk when it doesn't (the single-box sf1000 rung).
-    SPARK_GRAFT_LSH_VERIFY overrides for A/B probes; a disk-level
-    chain forces the LSH checkpoint to disk either way."""
-    lsh_verify = os.environ.get("SPARK_GRAFT_LSH_VERIFY", "auto")
-    if lsh_verify == "auto":
-        from oroboro_dw_dbt_spark.dedup.dedup import _auto_lsh_spelling
+    reshingle+disk when it doesn't (the single-box sf1000 rung). A
+    disk-level chain forces the LSH checkpoint to disk either way."""
+    from oroboro_dw_dbt_spark.dedup.dedup import _auto_lsh_spelling
 
-        lsh_verify, auto_ckpt, decision = _auto_lsh_spelling(corpus, n_corpus)
-        lsh_ckpt = "disk" if ckpt_level == "disk" else auto_ckpt
-    else:
-        decision = {"choice": lsh_verify, "source": "env-override"}
-        lsh_ckpt = "disk" if ckpt_level == "disk" else None
-    return lsh_verify, lsh_ckpt, decision
+    lsh_verify, auto_ckpt, decision = _auto_lsh_spelling(corpus, n_corpus)
+    return lsh_verify, "disk" if ckpt_level == "disk" else auto_ckpt, decision
 
 
 def corpus_frame(spark, sf_dir: str):
@@ -212,16 +200,15 @@ def neardup_frame(corpus, n_corpus: int, lsh_verify, lsh_ckpt):
     return corpus.join(victims, "doc_id", "left_anti")
 
 
-def semantic_vectors(spark, sf_dir: str, deduped, compact: bool = True):
+def semantic_vectors(spark, sf_dir: str, deduped):
     """Stage-3 input: micro-scaled int vectors of the SURVIVORS only
     (vec_id keys doc_id — a doc removed upstream must not dominate
-    anyone downstream; that is what "chained" means). ``compact``
-    (default ON) stores v as array<float> / vi as array<int> — halves
-    the corpus checkpoint the stage pins (the r09 sf1000 probe hit
-    GCLocker retries at ~22 GB on a 24 g heap; the full-width r10
-    rerun OOMed). Kernels upcast to f64/i64 at compute time so
-    victims are unchanged; micro coords |vi| ≤ ~3e7 fit int32 by
-    construction."""
+    anyone downstream; that is what "chained" means). Stored compact,
+    v as array<float> / vi as array<int> — halves the corpus
+    checkpoint the stage pins (the r09 sf1000 probe hit GCLocker
+    retries at ~22 GB on a 24 g heap; the full-width r10 rerun
+    OOMed). Kernels upcast to f64/i64 at compute time so victims are
+    unchanged; micro coords |vi| ≤ ~3e7 fit int32 by construction."""
     from oroboro_dw_dbt_spark.operators.round7_suite import _IVF_FP
     from oroboro_dw_dbt_spark.similarity.search import _as_double
 
@@ -232,17 +219,15 @@ def semantic_vectors(spark, sf_dir: str, deduped, compact: bool = True):
         "vi",
         F.transform(F.col("v"), lambda x: F.floor(x * _IVF_FP).cast("long")),
     )
-    if compact:
-        v = v.select(
-            "vec_id",
-            F.transform("v", lambda x: x.cast("float")).alias("v"),
-            F.transform("vi", lambda x: x.cast("int")).alias("vi"),
-        )
-    return v
+    return v.select(
+        "vec_id",
+        F.transform("v", lambda x: x.cast("float")).alias("v"),
+        F.transform("vi", lambda x: x.cast("int")).alias("vi"),
+    )
 
 
 def semantic_frame(
-    v, n_vec: int, occ: int = 128, nprobe: int = 1,
+    v, n_vec: int, nprobe: int = 1,
     probe_margin=None, group_spill=None, spill_cap: int = 8,
 ):
     """Stage 3 (pre-checkpoint): the cells ∝ N greedy operating point
@@ -256,9 +241,9 @@ def semantic_frame(
         semdedup_ivf_core,
     )
 
-    n_cells = ivf_cells_capped(n_vec, occ)
+    n_cells = ivf_cells_capped(n_vec, _OCC)
     sem = semdedup_ivf_core(
-        v, n_cells, assign="greedy", occupancy_cap=8 * occ,
+        v, n_cells, assign="greedy", occupancy_cap=8 * _OCC,
         nprobe=nprobe, probe_margin=probe_margin,
         group_spill=group_spill, spill_cap=spill_cap,
     )
@@ -282,11 +267,7 @@ def main(argv=None) -> None:
     args = _parse_args(argv)
     out_path = args.out_path
     sf_dir = args.sf_dir
-
-    from oroboro_dw_dbt_spark.operators.round7_suite import (
-        ivf_cells_for,
-        semdedup_ivf_core,
-    )
+    recall_knobs = _recall_knobs(args)
 
     ckpt_level, extra, n_shuffle = resolve_stage_confs(sf_dir)
     spark = get_spark("pipeline_e2e", shuffle_partitions=n_shuffle, extra_conf=extra)
@@ -358,59 +339,16 @@ def main(argv=None) -> None:
     free_dead_state()
 
     # -- 3. semantic dedup -------------------------------------------------
-    # SPARK_GRAFT_SEMDEDUP_MODE=sqrt restores the r08 exact operating
-    # point (√-scaled cells, exact assignment) for A/B probes; the
-    # default is the linear greedy point (semantic_frame).
+    # nprobe > 1 = the recall middle point (VERDICT r09 Next #4);
+    # margin/spill = the adaptive knobs (SCALE.md r11 census).
     t0 = time.monotonic()
-    mode = os.environ.get("SPARK_GRAFT_SEMDEDUP_MODE", "linear")
-    recall_knobs = None  # sqrt mode has no descent knobs
-    if mode == "sqrt":
-        v = semantic_vectors(spark, sf_dir, deduped, compact=False)
-        n_vec = v.count()
-        n_cells = ivf_cells_for(n_vec)
-        sem = semdedup_ivf_core(v, n_cells, assign="exact")
-    else:
-        occ = int(os.environ.get("SPARK_GRAFT_SEMDEDUP_OCC", "128"))
-        # nprobe > 1 = the recall middle point (VERDICT r09 Next #4);
-        # margin/spill = the adaptive knobs (SCALE.md r11 census);
-        # unset = the certified np1 point. CLI flags override the env
-        # vars (VERDICT r11 Next #7); resolved values + source
-        # recorded in the artifact below.
-        nprobe, nprobe_src = _resolve_knob(
-            args.nprobe, "SPARK_GRAFT_SEMDEDUP_NPROBE", int
-        )
-        nprobe = nprobe or 1
-        probe_margin, margin_src = _resolve_knob(
-            args.margin, "SPARK_GRAFT_SEMDEDUP_MARGIN", float
-        )
-        group_spill, spill_src = _resolve_knob(
-            args.spill, "SPARK_GRAFT_SEMDEDUP_SPILL", float
-        )
-        spill_cap, cap_src = _resolve_knob(
-            args.spill_cap, "SPARK_GRAFT_SEMDEDUP_SPILL_CAP", int
-        )
-        spill_cap = spill_cap or 8
-        recall_knobs = {
-            "nprobe": nprobe,
-            "probe_margin": probe_margin,
-            "group_spill": group_spill,
-            "spill_cap": spill_cap,
-            "source": {
-                "nprobe": nprobe_src,
-                "probe_margin": margin_src,
-                "group_spill": spill_src,
-                "spill_cap": cap_src,
-            },
-        }
-        v = semantic_vectors(
-            spark, sf_dir, deduped,
-            compact=os.environ.get("SPARK_GRAFT_SEMDEDUP_COMPACT", "1") == "1",
-        )
-        n_vec = v.count()
-        sem, n_cells = semantic_frame(
-            v, n_vec, occ=occ, nprobe=nprobe, probe_margin=probe_margin,
-            group_spill=group_spill, spill_cap=spill_cap,
-        )
+    v = semantic_vectors(spark, sf_dir, deduped)
+    sem, n_cells = semantic_frame(
+        v, v.count(), nprobe=recall_knobs["nprobe"],
+        probe_margin=recall_knobs["probe_margin"],
+        group_spill=recall_knobs["group_spill"],
+        spill_cap=recall_knobs["spill_cap"],
+    )
     final = ckpt(final_frame(deduped, sem))
     counts["after_semantic"] = final.count()
     stages["semdedup_ivf"] = round(time.monotonic() - t0, 3)
@@ -441,7 +379,6 @@ def main(argv=None) -> None:
         "stage_load": stage_load,
         "counts": counts,
         "n_cells": n_cells,
-        "semdedup_mode": mode,
         "recall_knobs": recall_knobs,
         "quiet_gate": gate,
         "lsh_spelling": {
