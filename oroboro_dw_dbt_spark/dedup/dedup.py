@@ -154,16 +154,15 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     band_rows: int = 2,
     threshold: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate pairs from LSH bucket collisions, then exact-Jaccard
     verified. The O(n²) compare only ever touches bucket collisions;
     shingles and the band index are materialized once and reused on both
     sides of the self-join (and in the verify step)."""
-    sh = _shingled(docs, n, materialize)
-    index = minhash_band_index(docs, n, num_hashes, band_rows, _shingles_df=sh)
-    if materialize:
-        index = index.localCheckpoint(eager=True)
+    sh = _shingled(docs, n, materialize=True)
+    index = minhash_band_index(
+        docs, n, num_hashes, band_rows, _shingles_df=sh
+    ).localCheckpoint(eager=True)
     a, b = index.alias("a"), index.alias("b")
     candidates = (
         a.join(
@@ -354,7 +353,6 @@ def minhash_lsh_victims(
     num_hashes: int = 8,
     band_rows: int = 2,
     threshold: float = 0.5,
-    materialize: bool = True,
     checkpoint_level: str | None = None,
     verify: str = "auto",
     approx_docs: int | None = None,
@@ -476,38 +474,34 @@ def minhash_lsh_victims(
         base = with_minhash_signature(
             sh, "sh", num_hashes, out="sig", verify_out="vh"
         ).select("doc_id", "sig", "vh")
-        if materialize:
-            # ONE corpus pass computes shingles + both salted md5
-            # arrays; everything downstream (band explode ×2
-            # consumers, verify ×2 sides) derives from this frame.
-            base = base.localCheckpoint(eager=True, storageLevel=big_level)
-            if n_docs is not None:
-                base = base.coalesce(_ckpt_scan_width(
-                    n_docs, _CARRY_BYTES_PER_DOC,
-                    base.rdd.getNumPartitions(),
-                ))
+        # ONE corpus pass computes shingles + both salted md5
+        # arrays; everything downstream (band explode ×2
+        # consumers, verify ×2 sides) derives from this frame.
+        base = base.localCheckpoint(eager=True, storageLevel=big_level)
+        if n_docs is not None:
+            base = base.coalesce(_ckpt_scan_width(
+                n_docs, _CARRY_BYTES_PER_DOC,
+                base.rdd.getNumPartitions(),
+            ))
         index = _band_explode(base, num_hashes, band_rows)
     else:
         sig = with_minhash_signature(sh, "sh", num_hashes, out="sig").select(
             "doc_id", "sig"
         )
         index = _band_explode(sig, num_hashes, band_rows)
-        if materialize:
-            index = index.localCheckpoint(eager=True, storageLevel=big_level)
-            if n_docs is not None:
-                index = index.coalesce(_ckpt_scan_width(
-                    n_docs, _INDEX_BYTES_PER_DOC,
-                    index.rdd.getNumPartitions(),
-                ))
+        index = index.localCheckpoint(eager=True, storageLevel=big_level)
+        if n_docs is not None:
+            index = index.coalesce(_ckpt_scan_width(
+                n_docs, _INDEX_BYTES_PER_DOC,
+                index.rdd.getNumPartitions(),
+            ))
     rep = index.groupBy("band", "band_key").agg(F.min("doc_id").alias("rep"))
     edges = (
         index.join(rep, ["band", "band_key"])
         .where(F.col("doc_id") > F.col("rep"))
         .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
         .dropDuplicates()
-    )
-    if materialize:
-        edges = edges.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     # Semi-join reduction BEFORE the verify joins (the sf1000 rung's
     # lesson): joining edges against the full corpus-sized vh frame
     # shuffles the whole checkpoint TWICE — ~2× corpus of shuffle
@@ -524,17 +518,16 @@ def minhash_lsh_victims(
         .unionByName(edges.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    if materialize:
-        n_cand = cand_ids.count()  # cheap: derives from the edge checkpoint
-        # both gates (ADVICE r11): the row cap bounds the driver-side
-        # collect, the heap gate keeps the hashed-relation build
-        # (~64 B/row, 3-5× raw) inside 10% of the smallest JVM
-        if (
-            n_cand <= _CAND_BCAST_MAX
-            and n_cand * _BCAST_ROW_BYTES
-            <= _BCAST_HEAP_SHARE * _per_jvm_heap_bytes(docs)
-        ):
-            cand_ids = F.broadcast(cand_ids)
+    n_cand = cand_ids.count()  # cheap: derives from the edge checkpoint
+    # both gates (ADVICE r11): the row cap bounds the driver-side
+    # collect, the heap gate keeps the hashed-relation build
+    # (~64 B/row, 3-5× raw) inside 10% of the smallest JVM
+    if (
+        n_cand <= _CAND_BCAST_MAX
+        and n_cand * _BCAST_ROW_BYTES
+        <= _BCAST_HEAP_SHARE * _per_jvm_heap_bytes(docs)
+    ):
+        cand_ids = F.broadcast(cand_ids)
     if verify == "carry":
         vh = base.join(cand_ids, "doc_id", "left_semi").select("doc_id", "vh")
     else:
@@ -552,13 +545,12 @@ def minhash_lsh_victims(
                 )
             ).alias("vh"),
         )
-    if materialize:
-        vh = vh.localCheckpoint(eager=True)
-        # n_cand is exact here (counted for the broadcast gate): the
-        # verify scans this frame twice (doc_a side, doc_b side)
-        vh = vh.coalesce(_ckpt_scan_width(
-            n_cand, _CARRY_BYTES_PER_DOC, vh.rdd.getNumPartitions()
-        ))
+    vh = vh.localCheckpoint(eager=True)
+    # n_cand is exact here (counted for the broadcast gate): the
+    # verify scans this frame twice (doc_a side, doc_b side)
+    vh = vh.coalesce(_ckpt_scan_width(
+        n_cand, _CARRY_BYTES_PER_DOC, vh.rdd.getNumPartitions()
+    ))
     jac = (
         F.size(F.array_intersect(F.col("sa.vh"), F.col("sb.vh"))).cast("double")
         / F.size(F.array_union(F.col("sa.vh"), F.col("sb.vh")))

@@ -26,6 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oroboro_dw_dbt_spark.dedup.semdedup import (
+    SEMDEDUP_TAU,
+    dominance_pairs,
+    sem_planes_for,
+)
 from oroboro_dw_dbt_spark.operators.catalog import query
 from oroboro_dw_dbt_spark.operators.training_suite import _planes_dot_sql
 from oroboro_dw_dbt_spark.similarity.search import (
@@ -35,26 +40,7 @@ from oroboro_dw_dbt_spark.similarity.search import (
 )
 from oroboro_dw_dbt_spark.sources.testdata import load_table
 
-_SEM_TAU = 0.4
-_SEM_PLANES = 6  # floor; sf0.01 (500 vectors) stays exactly here
 _SEM_DIM = 64
-_SEM_OCC = 32  # target vectors per LSH cell
-
-
-def sem_planes_for(n: int) -> int:
-    """Plane count ≈ log2(N / target_occupancy), floored at the sf0.01
-    value so the certified hash never moves.
-
-    Within-cell pair work is quadratic in occupancy, so a pinned cell
-    count makes SemDeDup quadratic in the corpus (the r06 10× probe
-    measured 9.5× wall, VERDICT r06 What's-wrong #4). Deriving planes
-    from a cheap count() holds occupancy ~constant: pair work ∝ N,
-    bucket assignment ∝ N·log N — the linear scale path. The oracle
-    pins the sf0.01 plane count (6); mirror runs at other SFs would
-    use more planes than the oracle and are out of contract."""
-    import math
-
-    return max(_SEM_PLANES, math.ceil(math.log2(max(1.0, n / _SEM_OCC))))
 
 
 @query(
@@ -71,7 +57,7 @@ def sem_planes_for(n: int) -> int:
     dom AS (
       SELECT c.vec_id AS victim, CAST(min(q.vec_id) AS BIGINT) AS removed_by
       FROM b q JOIN b c ON q.bucket = c.bucket AND q.vec_id < c.vec_id
-      WHERE round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) >= {_SEM_TAU}
+      WHERE round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) >= {SEMDEDUP_TAU}
       GROUP BY c.vec_id
     )
     SELECT b.vec_id, CAST(b.bucket AS INT) AS bucket,
@@ -97,8 +83,6 @@ def dd_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd_semdedup_ivf (round7_suite) — k-means-style Voronoi cells, same
     dominance plan. Norms are hoisted per vector (3 folds/pair → 1),
     bit-identical to the per-pair spelling."""
-    from oroboro_dw_dbt_spark.dedup.semdedup import dominance_pairs
-
     v = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
     )
@@ -108,7 +92,7 @@ def dd_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         hyperplane_bucket(F.col("v"), planes).alias("bucket"),
     ).localCheckpoint(eager=True)
-    dom = dominance_pairs(b, "bucket", _SEM_TAU)
+    dom = dominance_pairs(b, "bucket", SEMDEDUP_TAU)
     return (
         b.join(dom, F.col("vec_id") == F.col("victim"), "left")
         .select(

@@ -22,9 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _as_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
+from oroboro_dw_dbt_spark.similarity.search import _as_double
 
 
 def int8_codes(vec: Column) -> tuple[Column, Column]:

@@ -144,3 +144,27 @@ class TestShuffleWidth:
         monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
         ck, extra, n = resolve_stage_confs("/root/testdata/sf0.001")
         assert ck is None and extra is None and n is None
+
+
+def test_tools_import_no_catalog_suite():
+    """Library code lives in the package: no tool imports from an
+    ``operators.*_suite`` catalog module, except the reference DAG
+    (``reference_suite.reference_graph``) the plan audit composes."""
+    import ast
+
+    allowed = {("oroboro_dw_dbt_spark.operators.reference_suite", "reference_graph")}
+    found = []
+    for path in sorted((Path(__file__).resolve().parents[1] / "tools").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                for alias in node.names:
+                    target = f"{node.module}.{alias.name}"
+                    if "operators." in target and "_suite" in target.rsplit("operators.", 1)[1]:
+                        if (node.module, alias.name) not in allowed:
+                            found.append((path.name, target))
+            elif isinstance(node, ast.Import):
+                found += [
+                    (path.name, a.name) for a in node.names
+                    if "operators." in a.name and a.name.endswith("_suite")
+                ]
+    assert found == [], found

@@ -426,25 +426,13 @@ class TestRound6cPlanShapes:
         """The pipeline's cells ∝ N operating point (greedy descent +
         occupancy cap): same invariants — every join is hash/equi,
         never all-pairs — plus the capped dominance path."""
-        from pyspark.sql import functions as F
-
-        from oroboro_dw_dbt_spark.operators.round7_suite import (
-            _IVF_FP,
+        from oroboro_dw_dbt_spark.dedup.semdedup import (
+            quantized_vectors,
             semdedup_ivf_core,
         )
-        from oroboro_dw_dbt_spark.similarity.search import _as_double
         from oroboro_dw_dbt_spark.sources.testdata import load_table
 
-        v = (
-            load_table(spark, SF, "embeddings")
-            .select("vec_id", _as_double("embedding").alias("v"))
-            .withColumn(
-                "vi",
-                F.transform(
-                    F.col("v"), lambda x: F.floor(x * _IVF_FP).cast("long")
-                ),
-            )
-        )
+        v = quantized_vectors(load_table(spark, SF, "embeddings"))
         df = semdedup_ivf_core(v, 16, assign="greedy", occupancy_cap=64)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, plan

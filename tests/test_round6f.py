@@ -8,10 +8,9 @@ import math
 
 import numpy as np
 
+from oroboro_dw_dbt_spark.dedup.semdedup import SEM_PLANES, SEMDEDUP_TAU
 from oroboro_dw_dbt_spark.operators.round6f_suite import (
     _SEM_DIM,
-    _SEM_PLANES,
-    _SEM_TAU,
     ch_dataset_card,
     dd_semdedup,
 )
@@ -29,7 +28,7 @@ class TestSemDedup:
         has rounded cosine ≥ τ, removed_by = min such id."""
         emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding").collect()
         vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in emb}
-        planes = lsh_planes(_SEM_PLANES, _SEM_DIM)
+        planes = lsh_planes(SEM_PLANES, _SEM_DIM)
 
         def bucket(v):
             out = 0
@@ -56,7 +55,7 @@ class TestSemDedup:
                        * math.sqrt(float(np.dot(vecs[i], vecs[i])))),
                     6,
                 )
-                >= _SEM_TAU
+                >= SEMDEDUP_TAU
             ]
             exp[i] = (bk[i], 0 if doms else 1, min(doms) if doms else None)
         got = {

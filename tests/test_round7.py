@@ -5,16 +5,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from oroboro_dw_dbt_spark.operators.round7_suite import (
-    _IVF_FP,
+from oroboro_dw_dbt_spark.dedup.semdedup import (
     _int_dot,
     assign_cells,
-    dd_semdedup_ivf,
     flat_assign,
     hier_assign,
     ivf_cells_for,
+    quantized_vectors,
 )
-from oroboro_dw_dbt_spark.similarity.search import _as_double
+from oroboro_dw_dbt_spark.operators.round7_suite import dd_semdedup_ivf
 from oroboro_dw_dbt_spark.sources.testdata import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -22,18 +21,9 @@ SF01 = "/root/testdata/sf0.01"
 
 
 def _quantized(spark, sf_dir):
-    v = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _as_double("embedding").alias("v"))
-        .withColumn(
-            "vi",
-            F.transform(
-                F.col("v"), lambda x: F.floor(x * _IVF_FP).cast("long")
-            ),
-        )
-        .withColumn("xn", _int_dot(F.col("vi"), F.col("vi")))
+    return quantized_vectors(load_table(spark, sf_dir, "embeddings")).withColumn(
+        "xn", _int_dot(F.col("vi"), F.col("vi"))
     )
-    return v
 
 
 def _flat_assign(v, cents):
@@ -98,7 +88,7 @@ class TestHierAssign:
         documented in SCALE.md.)"""
         import numpy as np
 
-        from oroboro_dw_dbt_spark.operators.round7_suite import (
+        from oroboro_dw_dbt_spark.dedup.semdedup import (
             hier_candidate_count,
         )
 
@@ -260,19 +250,19 @@ class TestAssignDispatch:
         """hier_assign with many salts (n_rows forces S > 1) must
         equal the unsalted spelling: subgroup minima of a min are the
         min, and (score, cell) ordering keeps the lowest-id ties."""
-        from oroboro_dw_dbt_spark.operators import round7_suite as r7
+        from oroboro_dw_dbt_spark.dedup import semdedup as sd
 
         v, cents, expect = self._frames(spark, seed=13)
         # duplicated centroids on top: ties must still break low
-        orig = r7._SALT_TARGET_ROWS
-        r7._SALT_TARGET_ROWS = 16  # 200 rows → S = 13
+        orig = sd._SALT_TARGET_ROWS
+        sd._SALT_TARGET_ROWS = 16  # 200 rows → S = 13
         try:
             salted = {
                 r["vec_id"]: r["cell"]
                 for r in hier_assign(v, cents, 24, n_rows=200).collect()
             }
         finally:
-            r7._SALT_TARGET_ROWS = orig
+            sd._SALT_TARGET_ROWS = orig
         assert salted == expect
 
 
@@ -319,7 +309,7 @@ class TestGreedyAssign:
         hash-sample pivots can place two pivots in one super-cluster,
         so a small boundary fraction may land in a neighboring cell —
         the recall trade the docstring owns)."""
-        from oroboro_dw_dbt_spark.operators.round7_suite import greedy_assign
+        from oroboro_dw_dbt_spark.dedup.semdedup import greedy_assign
 
         v, cents, n_cells, vi, ci = self._clustered(spark)
 
@@ -339,7 +329,7 @@ class TestGreedyAssign:
         exactly once to a real cell, identically across re-runs."""
         import numpy as np
 
-        from oroboro_dw_dbt_spark.operators.round7_suite import greedy_assign
+        from oroboro_dw_dbt_spark.dedup.semdedup import greedy_assign
 
         rng = np.random.default_rng(3)
         n, n_cells, dim = 300, 40, 8
@@ -366,12 +356,12 @@ class TestGreedyAssign:
         assert set(a.values()) <= set(range(n_cells))
 
     def test_capped_cells_scale_linearly(self):
-        from oroboro_dw_dbt_spark.operators.round7_suite import (
-            _IVF_CELLS,
+        from oroboro_dw_dbt_spark.dedup.semdedup import (
+            IVF_CELLS,
             ivf_cells_capped,
         )
 
-        assert ivf_cells_capped(500) == _IVF_CELLS  # sf0.01 stays floored
+        assert ivf_cells_capped(500) == IVF_CELLS  # sf0.01 stays floored
         assert ivf_cells_capped(1_280_000, 128) == 10_000
         assert ivf_cells_capped(2_560_000, 128) == 20_000  # cells ∝ N
 
@@ -382,7 +372,7 @@ class TestGreedyAssign:
         comparisons), bit-stable across re-runs."""
         from pyspark.sql import functions as F
 
-        from oroboro_dw_dbt_spark.operators.round7_suite import (
+        from oroboro_dw_dbt_spark.dedup.semdedup import (
             _cap_cell_occupancy,
             semdedup_ivf_core,
         )
@@ -424,7 +414,7 @@ class TestGreedyAssign:
         C = 16 never descends), d = 3 exactly past the fan-in budget,
         and the closure cap backs depth off instead of shipping a GB
         closure (the 100 TB design point C = 8e7 lands on d = 3)."""
-        from oroboro_dw_dbt_spark.operators.round7_suite import (
+        from oroboro_dw_dbt_spark.dedup.semdedup import (
             _DESCENT_FANIN,
             _descent_level_sizes,
         )
@@ -439,6 +429,20 @@ class TestGreedyAssign:
         assert len(hundred_tb) == 2  # d=4's 846k closure backed off
         assert hundred_tb[-1] <= 262_144
 
+    def test_past_closure_cap_raises(self, spark, monkeypatch):
+        """When even d = 2's √C exceeds the closure cap there is no
+        ladder to ship: greedy_assign must fail loudly, naming C and
+        the cap, instead of silently taking another path."""
+        import pytest
+
+        from oroboro_dw_dbt_spark.dedup import semdedup as sd
+
+        monkeypatch.setattr(sd, "_DESCENT_MAX_PIVOT_ROWS", 40)
+        v = spark.createDataFrame([], "vec_id long, vi array<long>, xn long")
+        cents = spark.createDataFrame([], "cell long, c array<long>, cn long")
+        with pytest.raises(ValueError, match=r"C = 3000 .* 40 rows"):
+            sd.greedy_assign(v, cents, 3000)
+
     def test_d3_total_deterministic_and_accurate_on_clustered(
         self, spark, monkeypatch
     ):
@@ -448,20 +452,20 @@ class TestGreedyAssign:
         the assignment total, bit-stable across re-runs, and in high
         agreement with the exact argmin — the same contract the d = 2
         path carries."""
-        from oroboro_dw_dbt_spark.operators import round7_suite as r7
+        from oroboro_dw_dbt_spark.dedup import semdedup as sd
 
-        monkeypatch.setattr(r7, "_DESCENT_FANIN", 4)
+        monkeypatch.setattr(sd, "_DESCENT_FANIN", 4)
         v, cents, n_cells, vi, ci = self._clustered(spark)
-        assert len(r7._descent_level_sizes(n_cells)) == 2  # d = 3
+        assert len(sd._descent_level_sizes(n_cells)) == 2  # d = 3
         scores = (ci * ci).sum(axis=1)[None, :] - 2 * (vi @ ci.T)
         expect = {i: int(scores[i].argmin()) for i in range(len(vi))}
         a = {
             r["vec_id"]: r["cell"]
-            for r in r7.greedy_assign(v, cents, n_cells, n_rows=600).collect()
+            for r in sd.greedy_assign(v, cents, n_cells, n_rows=600).collect()
         }
         b = {
             r["vec_id"]: r["cell"]
-            for r in r7.greedy_assign(v, cents, n_cells, n_rows=600).collect()
+            for r in sd.greedy_assign(v, cents, n_cells, n_rows=600).collect()
         }
         assert a == b  # bit-stable
         assert set(a) == set(expect)  # total
@@ -476,7 +480,7 @@ class TestGreedyAssign:
         scored). Uniform geometry — the case nprobe exists for."""
         import numpy as np
 
-        from oroboro_dw_dbt_spark.operators.round7_suite import greedy_assign
+        from oroboro_dw_dbt_spark.dedup.semdedup import greedy_assign
 
         rng = np.random.default_rng(11)
         n, n_cells, dim = 400, 48, 8
@@ -522,7 +526,7 @@ class TestGreedyAssign:
         geometry where nprobe = 1 genuinely disagrees."""
         import numpy as np
 
-        from oroboro_dw_dbt_spark.operators.round7_suite import greedy_assign
+        from oroboro_dw_dbt_spark.dedup.semdedup import greedy_assign
 
         rng = np.random.default_rng(23)
         n, n_cells, dim = 300, 40, 8
@@ -564,7 +568,7 @@ class TestGreedyAssign:
         deterministic across re-runs."""
         import numpy as np
 
-        from oroboro_dw_dbt_spark.operators.round7_suite import greedy_assign
+        from oroboro_dw_dbt_spark.dedup.semdedup import greedy_assign
 
         rng = np.random.default_rng(31)
         n, n_cells, dim = 300, 48, 8
@@ -614,7 +618,7 @@ class TestGreedyAssign:
         argmin; (c) deterministic."""
         import numpy as np
 
-        from oroboro_dw_dbt_spark.operators.round7_suite import greedy_assign
+        from oroboro_dw_dbt_spark.dedup.semdedup import greedy_assign
 
         rng = np.random.default_rng(41)
         n, n_cells, dim = 300, 48, 8  # G = ceil(sqrt(48)) = 7 <= 8
@@ -683,7 +687,7 @@ class TestGreedyAssign:
             assert got == want, f"{name} certified oracle text changed"
 
     def test_core_greedy_keep_semantics(self, spark):
-        from oroboro_dw_dbt_spark.operators.round7_suite import (
+        from oroboro_dw_dbt_spark.dedup.semdedup import (
             semdedup_ivf_core,
         )
 
@@ -696,154 +700,6 @@ class TestGreedyAssign:
                 assert r["removed_by"] is None
             else:
                 assert r["removed_by"] < r["vec_id"]
-
-
-class TestRoutedDescent:
-    """The distributed-routing fallback (VERDICT r10 Next #5): pivot
-    levels past the closure cap run as salted-cogroup equi-joins.
-    Synthetic small-N/huge-C regime simulated by shrinking the cap —
-    assignments must equal the closure path's bit-for-bit, because the
-    two paths share pivot sets, int64 scores, and tie-breaks."""
-
-    def _fixture(self, spark, n_cells=3000, n=200, dim=6):
-        import numpy as np
-
-        rng = np.random.default_rng(11)
-        ci = rng.integers(-500, 500, (n_cells, dim)).astype(np.int64)
-        vi = rng.integers(-500, 500, (n, dim)).astype(np.int64)
-        cents = spark.createDataFrame(
-            [
-                (int(i), [int(x) for x in ci[i]], int((ci[i] * ci[i]).sum()))
-                for i in range(n_cells)
-            ],
-            "cell long, c array<long>, cn long",
-        ).localCheckpoint(eager=True)
-        v = spark.createDataFrame(
-            [
-                (int(i), [int(x) for x in vi[i]], int((vi[i] * vi[i]).sum()))
-                for i in range(n)
-            ],
-            "vec_id long, vi array<long>, xn long",
-        ).localCheckpoint(eager=True)
-        return v, cents
-
-    def _assign(self, spark, v, cents, n_cells, **kw):
-        from oroboro_dw_dbt_spark.operators.round7_suite import greedy_assign
-
-        return {
-            r["vec_id"]: r["cell"]
-            for r in greedy_assign(v, cents, n_cells, **kw).collect()
-        }
-
-    def test_no_closure_prefix_single_routed_level(self, spark, monkeypatch):
-        """cap below even level 1: the whole descent is one routed
-        level over a single global group — the degenerate floor."""
-        import oroboro_dw_dbt_spark.operators.round7_suite as r7
-
-        v, cents = self._fixture(spark)
-        base = self._assign(spark, v, cents, 3000)
-        monkeypatch.setattr(r7, "_DESCENT_MAX_PIVOT_ROWS", 40)
-        routed = self._assign(spark, v, cents, 3000)
-        assert routed == base and len(routed) == 200
-
-    def test_closure_prefix_plus_routed_level(self, spark, monkeypatch):
-        """fan-in 16 → d=3 ladder [15, 209]; cap 40 puts level 1 in
-        the closure and level 2 on the routed path. Same ladder, same
-        assignment as the all-closure run."""
-        import oroboro_dw_dbt_spark.operators.round7_suite as r7
-
-        v, cents = self._fixture(spark)
-        monkeypatch.setattr(r7, "_DESCENT_FANIN", 16)
-        assert r7._descent_level_sizes(3000) == r7._fanin_sizes(3000)
-        base = self._assign(spark, v, cents, 3000)
-        monkeypatch.setattr(r7, "_DESCENT_MAX_PIVOT_ROWS", 40)
-        routed = self._assign(spark, v, cents, 3000)
-        assert routed == base and len(routed) == 200
-
-    def test_two_routed_levels_and_multiprobe(self, spark, monkeypatch):
-        """fan-in 8 → d=4 ladder [8, 55, 405]; cap 30 routes TWO
-        levels (the pivot-chain annotation path), at nprobe 1 and 2."""
-        import oroboro_dw_dbt_spark.operators.round7_suite as r7
-
-        v, cents = self._fixture(spark)
-        monkeypatch.setattr(r7, "_DESCENT_FANIN", 8)
-        sizes = r7._fanin_sizes(3000)
-        assert len(sizes) == 3 and sizes[0] <= 30 < sizes[1] <= sizes[2]
-        base1 = self._assign(spark, v, cents, 3000)
-        base2 = self._assign(spark, v, cents, 3000, nprobe=2)
-        monkeypatch.setattr(r7, "_DESCENT_MAX_PIVOT_ROWS", 30)
-        assert self._assign(spark, v, cents, 3000) == base1
-        assert self._assign(spark, v, cents, 3000, nprobe=2) == base2
-
-    def test_routed_margin_and_spill_equal_closure(self, spark, monkeypatch):
-        """VERDICT r11 Next #3: the recall knobs compose with the
-        routing — margin, spill, and margin+spill each produce
-        bit-identical assignments on the routed path (single routed
-        level), because the cross-group fold's head is the level's
-        global best and the (1+m)x compare sees the same exact BIGINT
-        d² the closure kernel filters on."""
-        import oroboro_dw_dbt_spark.operators.round7_suite as r7
-
-        v, cents = self._fixture(spark)
-        base_m = self._assign(spark, v, cents, 3000, nprobe=16,
-                              probe_margin=0.1)
-        base_s = self._assign(spark, v, cents, 3000, group_spill=0.3)
-        base_ms = self._assign(spark, v, cents, 3000, nprobe=16,
-                               probe_margin=0.1, group_spill=0.3)
-        monkeypatch.setattr(r7, "_DESCENT_MAX_PIVOT_ROWS", 40)
-        assert self._assign(spark, v, cents, 3000, nprobe=16,
-                            probe_margin=0.1) == base_m
-        assert self._assign(spark, v, cents, 3000,
-                            group_spill=0.3) == base_s
-        assert self._assign(spark, v, cents, 3000, nprobe=16,
-                            probe_margin=0.1, group_spill=0.3) == base_ms
-
-    def test_routed_margin_spill_two_levels(self, spark, monkeypatch):
-        """Same equality with a closure prefix + routed level (d=3
-        ladder, fan-in 16, cap 40): the knobs must filter identically
-        at BOTH the closure-prefix level (inside mapInPandas) and the
-        routed level (post-fold Column filter)."""
-        import oroboro_dw_dbt_spark.operators.round7_suite as r7
-
-        v, cents = self._fixture(spark)
-        monkeypatch.setattr(r7, "_DESCENT_FANIN", 16)
-        base = self._assign(spark, v, cents, 3000, nprobe=16,
-                            probe_margin=0.1, group_spill=0.3)
-        monkeypatch.setattr(r7, "_DESCENT_MAX_PIVOT_ROWS", 40)
-        assert self._assign(spark, v, cents, 3000, nprobe=16,
-                            probe_margin=0.1, group_spill=0.3) == base
-
-    def test_salted_routed_equals_unsalted(self, spark, monkeypatch):
-        """n_rows forces salts > 1 on the routed cogroups; subgroup
-        minima of a min are the min, so victims are salt-invariant."""
-        import oroboro_dw_dbt_spark.operators.round7_suite as r7
-
-        v, cents = self._fixture(spark)
-        monkeypatch.setattr(r7, "_DESCENT_MAX_PIVOT_ROWS", 40)
-        unsalted = self._assign(spark, v, cents, 3000)
-        salted = self._assign(spark, v, cents, 3000, n_rows=1_000_000)
-        assert salted == unsalted
-
-    def test_routed_plan_has_no_broadcast_nested_loop(self, spark, monkeypatch):
-        import oroboro_dw_dbt_spark.operators.round7_suite as r7
-        from oroboro_dw_dbt_spark.operators.round7_suite import greedy_assign
-
-        v, cents = self._fixture(spark)
-        monkeypatch.setattr(r7, "_DESCENT_FANIN", 16)
-        monkeypatch.setattr(r7, "_DESCENT_MAX_PIVOT_ROWS", 40)
-        df = greedy_assign(v, cents, 3000, nprobe=2)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-
-    def test_routed_empty_centroids(self, spark, monkeypatch):
-        import oroboro_dw_dbt_spark.operators.round7_suite as r7
-        from oroboro_dw_dbt_spark.operators.round7_suite import greedy_assign
-
-        v, _ = self._fixture(spark, n=10)
-        empty = spark.createDataFrame([], "cell long, c array<long>, cn long")
-        monkeypatch.setattr(r7, "_DESCENT_MAX_PIVOT_ROWS", 40)
-        assert greedy_assign(v, empty, 3000).count() == 0
 
 
 class TestSemDedupIvf:
@@ -863,7 +719,7 @@ class TestSemDedupIvf:
         PRESENT and produce the SAME clustering as the dense corpus —
         the old `vec_id < n_cells` predicate seeded nothing and the
         stage silently no-opped."""
-        from oroboro_dw_dbt_spark.operators.round7_suite import (
+        from oroboro_dw_dbt_spark.dedup.semdedup import (
             semdedup_ivf_core,
         )
 
@@ -889,7 +745,7 @@ class TestSemDedupIvf:
         as a CALLABLE so the core sizes C from its own checkpointed
         count (one corpus scan, not two). Equivalence pinned: callable
         and pre-counted int spellings must agree bit-for-bit."""
-        from oroboro_dw_dbt_spark.operators.round7_suite import (
+        from oroboro_dw_dbt_spark.dedup.semdedup import (
             ivf_cells_capped,
             semdedup_ivf_core,
         )
@@ -918,7 +774,7 @@ class TestLloydCentroidUpdate:
         index order) — any future re-spelling must keep this green.
         (An r12 per-element-sums spelling passed this test but measured
         2-3× slower at sf30 and was reverted; the pin stays.)"""
-        from oroboro_dw_dbt_spark.operators.round7_suite import (
+        from oroboro_dw_dbt_spark.dedup.semdedup import (
             _lloyd_centroids,
         )
 
@@ -955,7 +811,7 @@ class TestLloydCentroidUpdate:
         assert got == want and len(got) > 0
 
     def test_empty_input_yields_empty_centroids(self, spark):
-        from oroboro_dw_dbt_spark.operators.round7_suite import (
+        from oroboro_dw_dbt_spark.dedup.semdedup import (
             _lloyd_centroids,
         )
 

@@ -202,13 +202,11 @@ def main() -> int:
     # Spark side uses more cells than the oracle SQL and a hash
     # mismatch here is a false red, not a bug (ADVICE r07).
     n_emb = con.execute("SELECT count(*) FROM embeddings").fetchone()[0]
-    from oroboro_dw_dbt_spark.operators.round6f_suite import (
-        _SEM_PLANES,
-        sem_planes_for,
-    )
-    from oroboro_dw_dbt_spark.operators.round7_suite import (
-        _IVF_CELLS,
+    from oroboro_dw_dbt_spark.dedup.semdedup import (
+        IVF_CELLS,
+        SEM_PLANES,
         ivf_cells_for,
+        sem_planes_for,
     )
 
     # per-entry flags (ADVICE r08): each family leaves its oracle
@@ -216,8 +214,8 @@ def main() -> int:
     # dd_semdedup_ivf — so one family drifting past its pinned floor
     # must not cost the other its oracle coverage at this SF.
     _out_of_contract = {
-        "dd_semdedup": sem_planes_for(n_emb) > _SEM_PLANES,
-        "dd_semdedup_ivf": ivf_cells_for(n_emb) > _IVF_CELLS,
+        "dd_semdedup": sem_planes_for(n_emb) > SEM_PLANES,
+        "dd_semdedup_ivf": ivf_cells_for(n_emb) > IVF_CELLS,
     }
 
     failures = []

@@ -209,17 +209,12 @@ def semantic_vectors(spark, sf_dir: str, deduped):
     retries at ~22 GB on a 24 g heap; the full-width r10 rerun
     OOMed). Kernels upcast to f64/i64 at compute time so victims are
     unchanged; micro coords |vi| ≤ ~3e7 fit int32 by construction."""
-    from oroboro_dw_dbt_spark.operators.round7_suite import _IVF_FP
-    from oroboro_dw_dbt_spark.similarity.search import _as_double
+    from oroboro_dw_dbt_spark.dedup.semdedup import quantized_vectors
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").join(
         deduped.select(F.col("doc_id").alias("vec_id")), "vec_id"
     )
-    v = emb.select("vec_id", _as_double("embedding").alias("v")).withColumn(
-        "vi",
-        F.transform(F.col("v"), lambda x: F.floor(x * _IVF_FP).cast("long")),
-    )
-    return v.select(
+    return quantized_vectors(emb).select(
         "vec_id",
         F.transform("v", lambda x: x.cast("float")).alias("v"),
         F.transform("vi", lambda x: x.cast("int")).alias("vi"),
@@ -236,7 +231,7 @@ def semantic_frame(
     cells skew (measured p99 ≈ 9× average at sf10), and Σ occ² — the
     dominance GEMM — is what the cap bounds to N·cap. Returns
     (sem, n_cells)."""
-    from oroboro_dw_dbt_spark.operators.round7_suite import (
+    from oroboro_dw_dbt_spark.dedup.semdedup import (
         ivf_cells_capped,
         semdedup_ivf_core,
     )
