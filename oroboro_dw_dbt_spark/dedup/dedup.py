@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from oroboro_dw_dbt_spark.session import parse_mem
 from oroboro_dw_dbt_spark.text.analysis import (
     doc_fingerprint,
     shingles,
@@ -206,29 +207,37 @@ _BCAST_ROW_BYTES = 64
 _BCAST_HEAP_SHARE = 0.10
 
 
+def _driver_heap_bytes(sc, conf) -> int:
+    """The driver JVM's heap: ``spark.driver.memory``, else the JVM's
+    own ``Runtime.maxMemory()``, else 1 GiB.
+
+    maxMemory() runs ON the driver JVM — the accurate answer whether
+    local or cluster, and when the heap was set outside SparkConf
+    (pre-started JVM, spark-defaults not mirrored; ADVICE r11: a '1g'
+    default there underestimated storage and flipped the auto rule to
+    reshingle+disk on boxes that fit carry). Without it a cluster
+    session with driver.memory unset (Spark default 1g) would be sized
+    by executor memory alone and the broadcast gate would wave through
+    a build the 1g driver must collect and hash."""
+    mem = conf.get("spark.driver.memory", None)
+    if mem is not None:
+        return parse_mem(mem)
+    try:
+        return int(sc._jvm.java.lang.Runtime.getRuntime().maxMemory())
+    except Exception:
+        return 1 << 30
+
+
 def _per_jvm_heap_bytes(df: DataFrame) -> int:
     """Heap of the smallest JVM a broadcast build must fit: the driver
     in local mode; min(executor, driver) on a cluster (the driver
     builds the relation, every executor holds a copy)."""
     sc = df.sparkSession.sparkContext
     conf = sc.getConf()
-    drv = conf.get("spark.driver.memory", None)
-    if drv is not None:
-        drv_b = _parse_mem(drv)
-    else:
-        # Runtime.maxMemory() runs ON the driver JVM — the accurate
-        # answer whether local or cluster. Without it a cluster
-        # session with driver.memory unset (Spark default 1g) would
-        # be sized by executor memory alone and the gate would wave
-        # through a build the 1g driver must collect and hash — the
-        # exact OOM the gate exists to prevent.
-        try:
-            drv_b = int(sc._jvm.java.lang.Runtime.getRuntime().maxMemory())
-        except Exception:
-            drv_b = 1 << 30
+    drv_b = _driver_heap_bytes(sc, conf)
     if conf.get("spark.master", "local").startswith("local"):
         return drv_b
-    per_exec = _parse_mem(conf.get("spark.executor.memory", "4g"))
+    per_exec = parse_mem(conf.get("spark.executor.memory", "4g"))
     return min(per_exec, drv_b)
 
 # --- auto-selection of the verify/checkpoint spelling ----------------
@@ -266,26 +275,6 @@ def _ckpt_scan_width(n_rows: int, bytes_per_row: int, inherited: int) -> int:
     return max(1, min(inherited, -(-n_rows * bytes_per_row // _CKPT_SCAN_BYTES)))
 
 
-def _parse_mem(s: str) -> int:
-    """'24g' / '512m' / '4gb' / '1t' / bare bytes → bytes.
-
-    Spark accepts both the bare-letter ('4g') and the 'b'-suffixed
-    ('4gb') spellings for every memory conf; ADVICE r11 — the latter
-    used to raise here, crashing verify='auto' on a perfectly valid
-    spark.executor.memory. A trailing 'b' after a unit letter is
-    stripped; a LONE trailing 'b' ('1b') is Spark's explicit-bytes
-    spelling and parses as bare bytes."""
-    s = s.strip().lower()
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if len(s) >= 2 and s[-1] == "b" and s[-2] in mult:
-        s = s[:-1]
-    elif len(s) >= 2 and s[-1] == "b" and s[-2].isdigit():
-        s = s[:-1]
-    if s and s[-1] in mult:
-        return int(float(s[:-1]) * mult[s[-1]])
-    return int(float(s))
-
-
 def _executor_storage_bytes(df: DataFrame) -> int:
     """Total JVM heap backing cached/checkpointed blocks for this
     session: driver heap in local mode, Σ executor heap on a cluster
@@ -294,21 +283,8 @@ def _executor_storage_bytes(df: DataFrame) -> int:
     sc = df.sparkSession.sparkContext
     conf = sc.getConf()
     if conf.get("spark.master", "local").startswith("local"):
-        mem = conf.get("spark.driver.memory", None)
-        if mem is None:
-            # ADVICE r11: when the driver heap was set outside
-            # SparkConf (pre-started JVM, spark-defaults not mirrored)
-            # the old '1g' default underestimated storage and flipped
-            # the auto rule to reshingle+disk on boxes that fit carry.
-            # The JVM itself always knows its ceiling.
-            try:
-                return int(
-                    sc._jvm.java.lang.Runtime.getRuntime().maxMemory()
-                )
-            except Exception:
-                return 1 << 30
-        return _parse_mem(mem)
-    per_exec = _parse_mem(conf.get("spark.executor.memory", "4g"))
+        return _driver_heap_bytes(sc, conf)
+    per_exec = parse_mem(conf.get("spark.executor.memory", "4g"))
     inst = int(conf.get("spark.executor.instances", "0") or 0)
     if inst <= 0:
         cores = int(conf.get("spark.executor.cores", "4") or 4)

@@ -311,9 +311,6 @@ def hier_assign(
 
     ``cent_df``: (cell, c array<long>, cn long). ``v`` must carry
     ``xn`` = vi·vi; ``n_rows`` (if known) sizes the salt count."""
-    import numpy as np
-    import pandas as pd
-
     cand, grouped = _hier_parts(v, cent_df, n_cells)
     salts = _salt_count(v, n_rows)
     return _score_groups(cand, grouped.select("g", "cell", "c", "cn"), salts)
@@ -920,9 +917,7 @@ def _cap_cell_occupancy(b: DataFrame, cap: int) -> DataFrame:
     )
 
 
-def _lloyd_centroids(
-    v: DataFrame, a: DataFrame, n_rows: int | None = None
-) -> DataFrame:
+def _lloyd_centroids(v: DataFrame, a: DataFrame) -> DataFrame:
     """Exact integer Lloyd centroid update: (cell, c array<long>) with
     c[i] = sum(vi[i]) div count per cell.
 
@@ -934,9 +929,7 @@ def _lloyd_centroids(
     and 2-3× the stage wall at sf30/600k vectors (31-40 s vs 12-17 s;
     identical victims), so it was reverted (guide §1.1: the "ideal"
     plan lost to the gotcha — wide multi-aggregate rows evaluate far
-    worse than Spark's columnar explode+narrow-agg path). ``n_rows``
-    is accepted for call-site stability and ignored."""
-    del n_rows
+    worse than Spark's columnar explode+narrow-agg path)."""
     dims = (
         v.join(a, "vec_id")
         .select("cell", F.posexplode("vi").alias("i", "x"))
@@ -1046,7 +1039,7 @@ def semdedup_ivf_core(
 
     a0 = assign_fn(v, seeds, n_cells, n_rows=n_rows)
 
-    cents = _lloyd_centroids(v, a0, n_rows=n_rows)
+    cents = _lloyd_centroids(v, a0)
     cents = cents.withColumn("cn", _int_dot(F.col("c"), F.col("c")))
     # the updated centroids feed TWO hierarchical stages (grouping +
     # probe + argmin); pin them so the Lloyd lineage isn't re-run

@@ -1,31 +1,26 @@
 from oroboro_dw_dbt_spark.operators.catalog import QUERIES, QuerySpec, oracle_sql_map, queries_map, query  # noqa: F401
 
-# Importing these modules populates the catalog. Order matters for the
-# driver's bounded certification window (catalog_order keeps insertion
-# order within each tier): tpch_suite imports right after
-# analytics_suite so the "all 22 TPC-H shapes" claim certifies in the
-# round it ships rather than spilling behind smaller entries.
+# Importing these modules populates the catalog, one module per operator
+# family. catalog_order keeps insertion order within each tier, so the
+# first three modules (relational → analytics → tpch) fill the driver's
+# bounded certification window after the RECERTIFY names; no other
+# module may register an entry before them (pinned by
+# tests/test_harness.py::test_window_modules_lead_the_catalog).
 from oroboro_dw_dbt_spark.operators import (  # noqa: F401,E402
+    relational,
     analytics_suite,
     tpch_suite,
     events_suite,
     extended_suite,
     pipeline_suite,
     reference_suite,
-    relational,
     scalar,
     scale_suite,
     training_suite,
     lifecycle_suite,
-    round6_suite,
-    round6b_suite,
     ml_eval_suite,
     drift_suite,
-    round6c_suite,
-    round6d_suite,
     feature_suite,
-    round6e_suite,
-    round6f_suite,
-    round6g_suite,
-    round7_suite,
+    graph_suite,
+    semdedup_suite,
 )

@@ -1,6 +1,9 @@
 """Catalog entries widening the relational surface beyond the
-reference: temporal joins (as-of, bucketed range), analytic windows
-(lead/lag/frames), set operations, rollup, and pivot.
+reference: temporal and interval joins (as-of, tolerance, bucketed
+range, overlap), analytic windows (lead/lag/frames, value, distribution,
+session and sliding windows), exact aggregates, time series
+(interpolation, EWMA, period-over-period), set operations, rollup, and
+pivot.
 
 The reference uses none of these (SURVEY §2.12 absent-list), but a user
 migrating real warehouse workloads expects them; each is expressed as a
@@ -626,49 +629,6 @@ def a_regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "eng_incremental_run",
-    # two incremental runs: v1 loads all orders, v2 re-delivers 1999+
-    # orders; merged table keeps v1 rows whose key was not re-delivered
-    # and replaces the rest — the CASE below is exactly that contract
-    oracle="""
-    SELECT o_orderkey, o_totalprice,
-           CASE WHEN o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
-                THEN 'v2' ELSE 'v1' END AS batch
-    FROM orders
-    """,
-    survey_ref="engine S4/incremental: two-run delete+insert merge by "
-    "unique_key through the warehouse table path (dbt incremental "
-    "lifecycle, driver-certified)",
-)
-def eng_incremental_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from oroboro_dw_dbt_spark.engine.dag import ModelGraph, SourceRegistry, model
-
-    sources = SourceRegistry()
-    sources.add_provider("orders", lambda s: load_table(s, sf_dir, "orders"))
-    state = {"batch": "v1", "since": None}
-
-    @model(name="latest_orders", materialized="incremental", unique_key=("o_orderkey",))
-    def latest_orders(orders):
-        df = orders
-        if state["since"] is not None:
-            df = df.filter(F.col("o_orderdate") >= F.lit(state["since"]).cast("timestamp"))
-        return df.select(
-            "o_orderkey", "o_totalprice", F.lit(state["batch"]).alias("batch")
-        )
-
-    graph = ModelGraph(
-        sources, warehouse_dir=tempfile.mkdtemp(prefix="inc_wh_"), threads=1
-    )
-    graph.add(latest_orders)
-    graph.run(spark, select=["latest_orders"], run_tests=False)
-    state.update(batch="v2", since="1999-01-01 00:00:00")
-    graph.run(spark, select=["latest_orders"], run_tests=False)
-    return graph.frame("latest_orders")
-
-
-@query(
     "j_semi_anti",
     oracle="""
     SELECT c_custkey, 'has_orders' AS op FROM customer c
@@ -716,385 +676,6 @@ def m_safe_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("safe_div"),
         F.try_to_number(F.col("o_orderpriority"), F.lit("9")).cast("int").alias("bad_int"),
         F.substring("o_orderpriority", 1, 1).try_cast("int").alias("prio_num"),
-    )
-
-
-@query(
-    "eng_compact_run",
-    # identity contract: compaction must not add, drop, or alter a row.
-    # The oracle recomputes the same per-type aggregate straight from the
-    # source table — any lost/duplicated row in the rewrite breaks the
-    # hash. File-count mechanics are asserted in tests/test_engine.py
-    # (DuckDB can't see the filesystem layout).
-    oracle="""
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(event_id AS HUGEINT)) AS DOUBLE) AS id_sum
-    FROM events
-    GROUP BY event_type
-    """,
-    survey_ref="engine maintenance: small-file compaction through the "
-    "atomic swap (engine/maintenance.py), row identity driver-certified",
-)
-def eng_compact_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Land the events table as 16 deliberately-small files, compact to
-    ≈2, and aggregate from the COMPACTED table — the driver's hash match
-    against the raw source certifies the rewrite is row-identical."""
-    import tempfile
-    from pathlib import Path
-
-    from oroboro_dw_dbt_spark.engine import compact_table
-    from oroboro_dw_dbt_spark.engine.maintenance import data_file_stats
-
-    path = Path(tempfile.mkdtemp(prefix="compact_wh_")) / "events"
-    load_table(spark, sf_dir, "events").repartition(16).write.parquet(str(path))
-    _, total = data_file_stats(path)
-    compacted = compact_table(spark, path, target_file_bytes=(total + 1) // 2)
-    return compacted.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("event_id").cast("double").alias("id_sum"),
-    )
-
-
-@query(
-    "eng_acid_commit",
-    # ACID contract as data, all four phases recomputed independently by
-    # the oracle from the source table:
-    #   v1        — first commit (even event_ids)
-    #   crash     — a write that dies BETWEEN data write and pointer
-    #               commit must leave readers on v1 exactly
-    #   v2        — the retried commit (odd event_ids) is fully visible
-    #   timetravel— version 1 stays readable after v2 (snapshot isolation)
-    oracle="""
-    WITH ev AS (SELECT event_id, value FROM events),
-    agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(event_id AS HUGEINT)) AS DOUBLE) AS id_sum
-      FROM ev WHERE event_id % 2 = 0
-    ),
-    agg_odd AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(event_id AS HUGEINT)) AS DOUBLE) AS id_sum
-      FROM ev WHERE event_id % 2 = 1
-    )
-    SELECT 'v1' AS phase, n, id_sum FROM agg
-    UNION ALL SELECT 'after_crash', n, id_sum FROM agg
-    UNION ALL SELECT 'v2', n, id_sum FROM agg_odd
-    UNION ALL SELECT 'timetravel_v1', n, id_sum FROM agg
-    """,
-    survey_ref="engine storage: ManifestParquetFormat ACID commit — "
-    "atomic pointer swap, read-after-crash equivalence, time travel "
-    "(engine/table_format.py; the Delta/Iceberg seam made concrete)",
-)
-def eng_acid_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drive the manifest format through commit → injected crash →
-    retry → time travel, aggregating what a READER sees at each phase.
-    The crash is injected between the snapshot's data write and the
-    pointer swap (the widest vulnerable window); the driver's hash
-    match against pure source SQL certifies the reader was never
-    exposed to the half-written snapshot."""
-    import tempfile
-    from pathlib import Path
-
-    from oroboro_dw_dbt_spark.engine import ManifestParquetFormat
-
-    table = Path(tempfile.mkdtemp(prefix="acid_wh_")) / "events_acid"
-    ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-
-    fmt = ManifestParquetFormat()
-    fmt.write(ev.filter(F.col("event_id") % 2 == 0), table)  # v1
-
-    class Killed(RuntimeError):
-        pass
-
-    def die(path: Path, version: int) -> None:
-        raise Killed(f"chaos: killed before committing v{version}")
-
-    chaos = ManifestParquetFormat(before_commit=die)
-    try:
-        chaos.write(ev.filter(F.col("event_id") % 2 == 1), table)
-    except Killed:
-        pass  # data-XXXXX2 exists on disk but is unreferenced
-
-    def agg(df: DataFrame, phase: str) -> DataFrame:
-        return df.agg(
-            F.lit(phase).alias("phase"),
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("event_id").cast("double").alias("id_sum"),
-        ).select("phase", "n", "id_sum")
-
-    # reads pin a concrete immutable data dir, so laziness is safe:
-    # each phase's DataFrame keeps pointing at its own snapshot
-    phases = [agg(fmt.read(spark, table), "v1")]  # == first commit
-    phases.append(agg(fmt.read(spark, table), "after_crash"))  # still v1
-    fmt.write(ev.filter(F.col("event_id") % 2 == 1), table)  # retry commits v2
-    phases.append(agg(fmt.read(spark, table), "v2"))
-    phases.append(agg(fmt.read(spark, table, version=1), "timetravel_v1"))
-    out = phases[0]
-    for p in phases[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _zorder_entry_oracle() -> str:
-    from oroboro_dw_dbt_spark.engine.layout import zorder_oracle_expr
-
-    # bands are computed ONCE as BIGINTs in a CTE: DuckDB's `//` on a
-    # DOUBLE (epoch() returns fractional seconds) is plain division,
-    # not floor division — the interleave arithmetic needs integers
-    z = zorder_oracle_expr("xb", "yb")
-    return f"""
-    WITH banded AS (
-      SELECT event_type, value,
-             user_id % 256 AS xb,
-             CAST(floor(epoch(ts) / 3600) AS BIGINT) % 256 AS yb
-      FROM events
-    )
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(12,4))), 2) AS DOUBLE)
-             AS value_sum,
-           min({z}) AS min_z, max({z}) AS max_z
-    FROM banded
-    WHERE xb >= 64 AND xb < 96 AND yb >= 32 AND yb < 64
-    GROUP BY event_type
-    """
-
-
-@query(
-    "eng_zorder_layout",
-    # the same box query + Morton arithmetic restated over the RAW
-    # source: parity certifies both the z-value math (min/max z per
-    # group) and that the z-ordered rewrite lost/changed no rows
-    oracle=_zorder_entry_oracle(),
-    survey_ref="engine storage: Z-order (Morton) file layout — "
-    "multi-dimensional data skipping beyond 1-D Hive partitioning "
-    "(engine/layout.py; rectangle property footer-asserted in pytest)",
-)
-def eng_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order events by (user band, hour band), then answer a 2-D box
-    query from the rewritten files.
-
-    The write is one range-partition shuffle + local sort on the
-    interleaved key; each output file then covers a small rectangle of
-    the (user, hour) plane, so the box predicate prunes most files via
-    parquet footer min/max — the two-filter-column case that defeats
-    single-dimension Hive partitioning. Here the certified surface is
-    value identity (rewrite lost nothing) and exact z arithmetic; the
-    pruning claim itself is asserted on real file footers in
-    tests/test_zorder_layout.py rather than trusted."""
-    import tempfile
-
-    from oroboro_dw_dbt_spark.engine.layout import zorder_value, zorder_write
-
-    ev = load_table(spark, sf_dir, "events")
-    xband = F.col("user_id") % 256
-    yband = F.expr("unix_timestamp(ts) div 3600") % 256
-    zdir = tempfile.mkdtemp(prefix="zorder_wh_") + "/events_z"
-    zorder_write(ev, zdir, xband, yband, bits=8, n_files=16)
-
-    back = spark.read.parquet(zdir)
-    bx = F.col("user_id") % 256
-    by = F.expr("unix_timestamp(ts) div 3600") % 256
-    return (
-        back.filter(bx.between(64, 95) & by.between(32, 63))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.sum(F.col("value").cast("decimal(12,4)")), 2)
-            .cast("double")
-            .alias("value_sum"),
-            F.min(zorder_value(bx, by)).alias("min_z"),
-            F.max(zorder_value(bx, by)).alias("max_z"),
-        )
-    )
-
-
-@query(
-    "eng_delete_vectors",
-    # merge-on-read delete contract as data, each phase recomputed by
-    # the oracle from the source table:
-    #   v1          — full table committed
-    #   mor_delete  — equality-delete of negative balances: readers see
-    #                 the filtered table though no data file changed
-    #                 (file-immutability asserted in pytest)
-    #   timetravel  — version 1 still shows the deleted rows
-    #   compacted   — copy-on-write fold of the vectors: same result,
-    #                 now with zero delete files on the read path
-    oracle="""
-    WITH c AS (SELECT c_custkey, c_acctbal FROM customer),
-    full_t AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(12,4))), 2) AS DOUBLE)
-               AS bal_sum
-      FROM c
-    ),
-    kept AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(12,4))), 2) AS DOUBLE)
-               AS bal_sum
-      FROM c WHERE c_acctbal >= 0
-    )
-    SELECT 'v1' AS phase, n, bal_sum FROM full_t
-    UNION ALL SELECT 'mor_delete', n, bal_sum FROM kept
-    UNION ALL SELECT 'timetravel_v1', n, bal_sum FROM full_t
-    UNION ALL SELECT 'compacted', n, bal_sum FROM kept
-    """,
-    survey_ref="engine storage: merge-on-read equality deletes "
-    "(Iceberg-style delete vectors) — O(deleted keys) write "
-    "amplification, anti-join read path, copy-on-write compaction "
-    "(engine/table_format.py delete_keys/compact_deletes)",
-)
-def eng_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drive merge-on-read deletes through commit → delete → time
-    travel → compaction, aggregating what a reader sees at each phase.
-
-    The scale story IS the phase list: the delete writes only the key
-    set (a 1000-row delete on a 100 TB table stays a KB-scale commit),
-    readers apply vectors as a broadcast anti-join on the immutable
-    data files, history stays byte-identical for time travel, and
-    compaction is the explicitly-scheduled copy-on-write fold — never
-    an implicit one hiding in a delete call."""
-    import tempfile
-    from pathlib import Path
-
-    from oroboro_dw_dbt_spark.engine import ManifestParquetFormat
-
-    table = Path(tempfile.mkdtemp(prefix="mor_wh_")) / "customer_mor"
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-
-    fmt = ManifestParquetFormat()
-    fmt.write(cust, table)  # v1
-    bal = F.col("c_acctbal").cast("decimal(12,4)")
-
-    def agg(df: DataFrame, phase: str) -> DataFrame:
-        return df.agg(
-            F.lit(phase).alias("phase"),
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.sum(bal), 2).cast("double").alias("bal_sum"),
-        ).select("phase", "n", "bal_sum")
-
-    phases = [agg(fmt.read(spark, table), "v1")]
-    fmt.delete_keys(
-        spark, table, cust.filter(F.col("c_acctbal") < 0), "c_custkey"
-    )
-    phases.append(agg(fmt.read(spark, table), "mor_delete"))
-    phases.append(agg(fmt.read(spark, table, version=1), "timetravel_v1"))
-    fmt.compact_deletes(spark, table)
-    phases.append(agg(fmt.read(spark, table), "compacted"))
-    out = phases[0]
-    for p in phases[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-@query(
-    "eng_incremental_agg",
-    # the oracle is the FULL RECOMPUTE the incremental path must equal
-    # bit-for-bit: additive integer state (micro-quantized values) makes
-    # delta-merge associative, so three ingest steps == one big scan
-    oracle="""
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(round(sum(CAST(floor(value * 1000000 + 0.5) AS BIGINT))
-                      / 1000000.0, 6) AS DOUBLE) AS value_sum
-    FROM events
-    GROUP BY event_type
-    """,
-    survey_ref="engine lifecycle: incremental aggregate maintenance — "
-    "per-batch delta merge through the ACID table format equals full "
-    "recompute exactly (engine/maintenance.py merge_additive_state)",
-)
-def eng_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maintain an aggregate mart across three ingest batches without
-    rescanning history, then prove it equals the full recompute.
-
-    Each step pre-aggregates ONLY the new batch to the mart's grain and
-    merges it with the stored per-key state (union + re-aggregate, one
-    grain-key shuffle over state+delta rows); state persists through
-    the manifest format, so every step is an atomic snapshot commit.
-    Exactness hinges on the measures being additive over integers —
-    value is micro-quantized, so three-step merge == one-scan oracle
-    bit-for-bit (a float sum would drift with accumulation order).
-    At 100 TB: the history is never re-read; each day costs the day."""
-    import tempfile
-    from pathlib import Path
-
-    from oroboro_dw_dbt_spark.engine import ManifestParquetFormat
-    from oroboro_dw_dbt_spark.engine.maintenance import merge_additive_state
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.dayofmonth("ts").alias("day"),
-        F.floor(F.col("value") * 1_000_000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("micro"),
-    )
-    batches = [
-        ev.filter(F.col("day") <= 10),
-        ev.filter((F.col("day") > 10) & (F.col("day") <= 20)),
-        ev.filter(F.col("day") > 20),
-    ]
-    fmt = ManifestParquetFormat()
-    table = Path(tempfile.mkdtemp(prefix="incr_agg_wh_")) / "state"
-    state = None
-    for batch in batches:
-        delta = batch.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("micro").cast("bigint").alias("micro_sum"),
-        )
-        state = merge_additive_state(
-            state, delta, keys=["event_type"], sum_cols=["n", "micro_sum"]
-        )
-        fmt.write(state, table)  # atomic snapshot per ingest step
-        state = fmt.read(spark, table)
-    return state.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n"),
-        F.round(F.col("micro_sum") / 1_000_000.0, 6)
-        .cast("double")
-        .alias("value_sum"),
-    )
-
-
-@query(
-    "eng_manifest",
-    # the reference DAG's documented shape, as data: dbt docs-generate
-    # parity certified through the driver (3 nodes, their materialized
-    # configs, and model-vs-source dependency counts; user_base carries
-    # the two declared marts_schema.yml tests)
-    oracle="""
-    SELECT * FROM (VALUES
-      ('locations_clean', 'view', 0, 3, 0),
-      ('stacked_users_partners', 'view', 0, 10, 0),
-      ('user_base', 'table', 2, 2, 2)
-    ) AS t(model, materialized, n_model_deps, n_source_deps, n_tests)
-    """,
-    survey_ref="engine lifecycle: ModelGraph.manifest() lineage artifact "
-    "(dbt docs generate), ref: dbt_project.yml:9-17, marts_schema.yml:1-16",
-)
-def eng_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from oroboro_dw_dbt_spark.operators.reference_suite import reference_graph
-
-    import tempfile
-
-    m = reference_graph(
-        spark, sf_dir, warehouse_dir=tempfile.mkdtemp(prefix="manifest_wh_")
-    ).manifest()
-    rows = [
-        (
-            n["name"],
-            n["materialized"],
-            len(n["depends_on"]["models"]),
-            len(n["depends_on"]["sources"]),
-            len(n["tests"]),
-        )
-        for n in m["nodes"].values()
-    ]
-    return spark.createDataFrame(
-        rows,
-        "model string, materialized string, n_model_deps int, "
-        "n_source_deps int, n_tests int",
     )
 
 
@@ -1373,64 +954,6 @@ def p_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "eng_csv_seed",
-    # dbt seed lifecycle: a CSV lands as a source with an EXPLICIT
-    # schema (no inference pass — at 100 TB schema inference is a full
-    # extra read), flows through a model, and must aggregate exactly as
-    # the parquet original it was exported from
-    oracle="""
-    SELECT o_orderpriority,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-             AS total
-    FROM orders
-    WHERE o_orderkey % 10 = 0
-    GROUP BY o_orderpriority
-    """,
-    survey_ref="engine S1 csv source (dbt seed, ref: dbt seeds dir "
-    "convention): explicit-schema csv -> SourceRegistry -> model",
-)
-def eng_csv_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from oroboro_dw_dbt_spark.engine.dag import ModelGraph, SourceRegistry, model
-
-    seed_dir = tempfile.mkdtemp(prefix="csv_seed_")
-    subset = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderkey") % 10 == 0
-    ).select("o_orderkey", "o_orderpriority", "o_totalprice")
-    subset.write.mode("overwrite").option("header", "true").csv(seed_dir)
-
-    schema = T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType()),
-            T.StructField("o_orderpriority", T.StringType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-        ]
-    )
-    sources = SourceRegistry()
-    sources.add_path(
-        "seed_orders", seed_dir, schema=schema, format="csv",
-        options={"header": "true"},
-    )
-
-    @model(name="seed_rollup")
-    def seed_rollup(seed_orders):
-        return seed_orders.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("total"),
-        )
-
-    graph = ModelGraph(sources).add(seed_rollup)
-    graph.run(spark, select=["seed_rollup"], run_tests=False)
-    return graph.frame("seed_rollup")
-
-
-@query(
     "f_map_ops",
     # the map is engine-internal (map key order is unspecified, so maps
     # never appear in output); the entry certifies the MapType
@@ -1537,105 +1060,6 @@ def f_pandas_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "eng_json_source",
-    # same contract as eng_csv_seed for the JSON-lines reader: explicit
-    # schema (no inference pass), values surviving the text round-trip
-    oracle="""
-    SELECT o_orderpriority,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-             AS total
-    FROM orders
-    WHERE o_orderkey % 9 = 0
-    GROUP BY o_orderpriority
-    """,
-    survey_ref="engine S1 json source: explicit-schema JSON-lines -> "
-    "SourceRegistry -> model (the log-ingest landing format)",
-)
-def eng_json_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from oroboro_dw_dbt_spark.engine.dag import ModelGraph, SourceRegistry, model
-
-    land_dir = tempfile.mkdtemp(prefix="json_src_")
-    subset = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderkey") % 9 == 0
-    ).select("o_orderkey", "o_orderpriority", "o_totalprice")
-    subset.write.mode("overwrite").json(land_dir)
-
-    schema = T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType()),
-            T.StructField("o_orderpriority", T.StringType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-        ]
-    )
-    sources = SourceRegistry()
-    sources.add_path("landed_orders", land_dir, schema=schema, format="json")
-
-    @model(name="json_rollup")
-    def json_rollup(landed_orders):
-        return landed_orders.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("total"),
-        )
-
-    graph = ModelGraph(sources).add(json_rollup)
-    graph.run(spark, select=["json_rollup"], run_tests=False)
-    return graph.frame("json_rollup")
-
-
-@query(
-    "eng_orc_source",
-    # completes the source-format matrix (parquet everywhere, csv seed,
-    # json lines, orc here): ORC is columnar like parquet, so unlike
-    # the text formats the round-trip is binary-exact by construction —
-    # the entry certifies the reader wiring, schema application, and
-    # pushdown-capable scan
-    oracle="""
-    SELECT o_orderpriority,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-             AS total
-    FROM orders
-    WHERE o_orderkey % 8 = 0
-    GROUP BY o_orderpriority
-    """,
-    survey_ref="engine S1 orc source: the columnar alternative format "
-    "through SourceRegistry -> model",
-)
-def eng_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from oroboro_dw_dbt_spark.engine.dag import ModelGraph, SourceRegistry, model
-
-    land_dir = tempfile.mkdtemp(prefix="orc_src_")
-    load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 8 == 0).select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    ).write.mode("overwrite").orc(land_dir)
-
-    sources = SourceRegistry()
-    sources.add_path("orc_orders", land_dir, format="orc")
-
-    @model(name="orc_rollup")
-    def orc_rollup(orc_orders):
-        return orc_orders.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("total"),
-        )
-
-    graph = ModelGraph(sources).add(orc_rollup)
-    graph.run(spark, select=["orc_rollup"], run_tests=False)
-    return graph.frame("orc_rollup")
-
-
 # ---------------------------------------------------------------------------
 # Null-safe equality join (<=> / IS NOT DISTINCT FROM)
 # ---------------------------------------------------------------------------
@@ -1730,102 +1154,1046 @@ def a_string_agg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bucketed co-located join (storage-level shuffle elimination)
+# Window distribution functions: percent_rank / cume_dist / dense_rank /
+# ntile in one partitioning.
 # ---------------------------------------------------------------------------
 @query(
-    "eng_bucketed_join",
-    # value-identity certification of the bucketed path: the join result
-    # over bucketed catalog tables must equal the same join computed
-    # straight from the source parquet (the oracle). The shuffle-free
-    # plan property is asserted in tests/test_bucketing.py — DuckDB
-    # cannot see Spark's physical plan, but it can prove the rows.
+    "w_dist_suite",
+    # rank-family functions are deterministic under ties (value-based);
+    # ntile depends on ROW order so its window pins a unique composite
+    # ORDER BY. Both windows share the l_returnflag partitioning → ONE
+    # exchange feeds both sorts.
     oracle="""
-    SELECT c.c_mktsegment,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS total_price
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_mktsegment
+    WITH ranked AS (
+      SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity,
+             CAST(round(percent_rank() OVER vq, 6) AS DOUBLE) AS pct_rank,
+             CAST(round(cume_dist() OVER vq, 6) AS DOUBLE) AS cume,
+             CAST(dense_rank() OVER vq AS BIGINT) AS dense_rk,
+             CAST(ntile(10) OVER vu AS INT) AS decile
+      FROM lineitem
+      WINDOW vq AS (PARTITION BY l_returnflag ORDER BY l_quantity),
+             vu AS (PARTITION BY l_returnflag
+                    ORDER BY l_quantity, l_orderkey, l_linenumber)
+    )
+    SELECT * FROM ranked WHERE l_orderkey % 97 = 0
     """,
-    survey_ref="beyond-reference: bucketed co-located join — the "
-    "pay-the-shuffle-once storage lever (write bucketBy+sortBy, join "
-    "with zero Exchange; plan asserted in tests/test_bucketing.py)",
+    survey_ref="beyond-reference: window distribution-function surface "
+    "(percent_rank, cume_dist, dense_rank, ntile) — completes the "
+    "window family (W1–W4, w_rank_suite, w_ntile_distribution)",
 )
-def eng_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write orders and customer bucketed by the join key into the
-    session catalog, then join them co-located and aggregate. At 100 TB
-    this is the storage decision that turns every repeated fact-dim
-    join on the key into a zero-Exchange plan; bucket count is a
-    capacity choice (one bucket ≈ one core's memory)."""
-    from oroboro_dw_dbt_spark.sources.bucketing import colocated_join, write_bucketed
+def w_dist_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    vq = Window.partitionBy("l_returnflag").orderBy("l_quantity")
+    vu = Window.partitionBy("l_returnflag").orderBy(
+        "l_quantity", "l_orderkey", "l_linenumber"
+    )
+    return (
+        li.select(
+            "l_orderkey",
+            "l_linenumber",
+            "l_returnflag",
+            "l_quantity",
+            F.round(F.percent_rank().over(vq), 6).cast("double").alias("pct_rank"),
+            F.round(F.cume_dist().over(vq), 6).cast("double").alias("cume"),
+            F.dense_rank().over(vq).cast("bigint").alias("dense_rk"),
+            F.ntile(10).over(vu).cast("int").alias("decile"),
+        )
+        .filter(F.col("l_orderkey") % 97 == 0)
+    )
 
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    write_bucketed(
-        orders.select("o_orderkey", "o_custkey", "o_totalprice"),
-        "b_orders_entry", ["o_custkey"], 8,
+
+# ---------------------------------------------------------------------------
+# Time-series linear interpolation over the hourly grid.
+# ---------------------------------------------------------------------------
+@query(
+    "ts_interpolate",
+    # prev/next non-null neighbors are found WITHOUT `IGNORE NULLS` (its
+    # availability/semantics vary): hour and cents are packed into one
+    # BIGINT (epoch_hour * 100000 + cents, cents < 100000) whose
+    # running max/min over the frame is monotone in hour — an
+    # engine-portable argmax. Interpolation is exact-integer-in-double:
+    # one IEEE division, no rounding, identical bits on both engines.
+    oracle="""
+    WITH hourly AS (
+      SELECT user_id, date_trunc('hour', ts) AS hour,
+             CAST(round(max(CAST(value AS DECIMAL(12,4))) * 100, 0) AS BIGINT)
+               AS cents
+      FROM events GROUP BY 1, 2
+    ),
+    spans AS (
+      SELECT user_id, min(hour) AS hmin, max(hour) AS hmax
+      FROM hourly GROUP BY user_id
+    ),
+    grid AS (
+      SELECT user_id, unnest(generate_series(hmin, hmax,
+                                             INTERVAL 1 HOUR)) AS hour
+      FROM spans
+    ),
+    joined AS (
+      SELECT g.user_id, g.hour, h.cents,
+             CAST(epoch(g.hour) AS BIGINT) // 3600 AS eh
+      FROM grid g LEFT JOIN hourly h USING (user_id, hour)
+    ),
+    packed AS (
+      SELECT *,
+             max(CASE WHEN cents IS NOT NULL THEN eh * 100000 + cents END)
+               OVER (PARTITION BY user_id ORDER BY hour
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS prev_p,
+             min(CASE WHEN cents IS NOT NULL THEN eh * 100000 + cents END)
+               OVER (PARTITION BY user_id ORDER BY hour
+                     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+               AS next_p
+      FROM joined
     )
-    write_bucketed(
-        cust.select("c_custkey", "c_mktsegment"), "b_customer_entry", ["c_custkey"], 8
+    SELECT user_id, hour, cents IS NOT NULL AS observed,
+           CAST(CASE
+             WHEN cents IS NOT NULL THEN cents / 100.0
+             WHEN prev_p IS NULL OR next_p IS NULL THEN NULL
+             ELSE (prev_p % 100000
+                   + (next_p % 100000 - prev_p % 100000)
+                     * (eh - prev_p // 100000)
+                     / (next_p // 100000 - prev_p // 100000)) / 100.0
+           END AS DOUBLE) AS value_interp
+    FROM packed
+    """,
+    survey_ref="beyond-reference: time-series linear interpolation on "
+    "the hourly grid (gap fill's twin: ts_gap_fill forward-fills, this "
+    "interpolates between the surrounding observations)",
+)
+def ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Linear interpolation of each user's missing hourly values.
+
+    SEGMENT-EXPLODE formulation (round-6 rewrite, hash-identical to the
+    certified packed-argmax spelling the oracle still uses): one lead()
+    window over the OBSERVED hourly rows pairs each observation with
+    its successor, and exploding the [h, next−1h] range emits that
+    segment's grid rows with both endpoints already in hand. Compared
+    to the grid⋈hourly + two running-window plan this drops the join
+    and the second (30×-larger) sort: the noop-sink wall at sf0.1 fell
+    6.6 s → ~2 s. Physical shape (plan-asserted): ONE user_id exchange,
+    ONE sort — over observed rows only, never the exploded grid.
+    Interpolation arithmetic is exact-integer-in-double (one IEEE
+    division), bit-identical across engines; NULL beyond the first/last
+    observation (no extrapolation — inside the span both endpoints
+    exist by construction).
+    """
+    ev = load_table(spark, sf_dir, "events")
+    hourly = ev.groupBy(
+        "user_id", F.date_trunc("hour", "ts").alias("h0")
+    ).agg(
+        F.round(F.max(F.col("value").cast("decimal(12,4)")) * 100, 0)
+        .cast("bigint")
+        .alias("cents")
     )
-    joined = colocated_join(
-        spark, "b_orders_entry", "b_customer_entry",
-        F.col("o_custkey") == F.col("c_custkey"),
+    w = Window.partitionBy("user_id").orderBy("h0")
+    seg = hourly.select(
+        "user_id",
+        "h0",
+        "cents",
+        F.lead("h0").over(w).alias("h1"),
+        F.lead("cents").over(w).alias("c1"),
     )
-    return joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
+    # each observation owns the grid range [h0, h1 − 1h] (the last one
+    # owns just itself) — together: every hour in [first, last], once
+    grid = seg.select(
+        "user_id",
+        "h0",
+        "cents",
+        "c1",
+        (F.col("h0").cast("bigint") / 3600).cast("bigint").alias("eh0"),
+        (F.col("h1").cast("bigint") / 3600).cast("bigint").alias("eh1"),
+        F.explode(
+            F.sequence(
+                "h0",
+                F.coalesce(F.expr("h1 - INTERVAL 1 HOUR"), F.col("h0")),
+                F.expr("INTERVAL 1 HOUR"),
+            )
+        ).alias("hour"),
+    ).withColumn("eh", (F.col("hour").cast("bigint") / 3600).cast("bigint"))
+    observed = F.col("hour") == F.col("h0")
+    return grid.select(
+        "user_id",
+        "hour",
+        observed.alias("observed"),
+        F.when(observed, F.col("cents") / 100.0)
+        .otherwise(
+            (
+                F.col("cents")
+                + (F.col("c1") - F.col("cents"))
+                * (F.col("eh") - F.col("eh0"))
+                / (F.col("eh1") - F.col("eh0"))
+            )
+            / 100.0
+        )
         .cast("double")
-        .alias("total_price"),
+        .alias("value_interp"),
     )
+
+
+_CENTS_SQL = "CAST(round(CAST(value AS DECIMAL(12,4)) * 100, 0) AS BIGINT)"
+
+
+def _cents(col: str = "value") -> F.Column:
+    return F.round(F.col(col).cast("decimal(12,4)") * 100, 0).cast("bigint")
+
+
+# ---------------------------------------------------------------------------
+# Exact per-group mode.
+# ---------------------------------------------------------------------------
+@query(
+    "a_mode_exact",
+    # mode = argmax of the (user, type) count with a pinned tiebreak
+    # (count DESC, then event_type ASC) — value-deterministic
+    oracle="""
+    WITH counts AS (
+      SELECT user_id, event_type, count(*) AS n
+      FROM events GROUP BY 1, 2
+    ),
+    ranked AS (
+      SELECT user_id, event_type, n,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY n DESC, event_type) AS rn
+      FROM counts
+    )
+    SELECT user_id, event_type AS mode_event_type,
+           CAST(n AS BIGINT) AS n_events
+    FROM ranked WHERE rn = 1
+    """,
+    survey_ref="beyond-reference: exact per-group mode (most frequent "
+    "categorical value, deterministic tiebreak) — the exact twin of "
+    "sk_countmin_freq's approximate heavy hitters",
+)
+def a_mode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each user's most frequent event_type.
+
+    Scale: the first aggregation combines map-side, so the window's
+    input is |users|×|types| rows, not |events| — the top-1 window then
+    sorts ≤ |types| rows per user. Never windows the raw fact."""
+    ev = load_table(spark, sf_dir, "events")
+    counts = ev.groupBy("user_id", "event_type").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("n").desc(), F.col("event_type")
+    )
+    return (
+        counts.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "user_id",
+            F.col("event_type").alias("mode_event_type"),
+            F.col("n").cast("bigint").alias("n_events"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Trailing EWMA with power-of-two weights: exact integers end to end.
+# ---------------------------------------------------------------------------
+_EWMA_K = 8  # trailing taps; weight of lag j is 2^(K-1-j)
+
+
+def _ewma_terms_sql() -> tuple[str, str]:
+    def tap(j: int) -> str:
+        return "cents" if j == 0 else f"lag(cents, {j}) OVER vu"
+
+    num = " + ".join(
+        f"COALESCE({tap(j)}, 0) * {1 << (_EWMA_K - 1 - j)}"
+        for j in range(_EWMA_K)
+    )
+    den = " + ".join(
+        f"CASE WHEN {tap(j)} IS NOT NULL"
+        f" THEN {1 << (_EWMA_K - 1 - j)} ELSE 0 END"
+        for j in range(_EWMA_K)
+    )
+    return num, den
+
+
+_EWMA_NUM_SQL, _EWMA_DEN_SQL = _ewma_terms_sql()
 
 
 @query(
-    "eng_partitioned_prune",
-    # the oracle recomputes the week's aggregate straight from the raw
-    # table — a pruning bug that reads the wrong partitions (or a write
-    # that misassigns rows to partition dirs) breaks the hash. That the
-    # scan PHYSICALLY skips the other 23 partition dirs is asserted on
-    # the plan in tests/test_partition_prune.py (DuckDB can't see the
-    # directory layout).
-    oracle="""
-    SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS event_date,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(12,4))), 2) AS DOUBLE)
-             AS value_sum
-    FROM events
-    WHERE CAST(ts AS DATE) >= DATE '2024-01-08'
-      AND CAST(ts AS DATE) <= DATE '2024-01-14'
-    GROUP BY 1
-    """,
-    survey_ref="engine storage: Hive-partitioned table write + "
-    "partition-pruned read — the first-order 100 TB IO lever",
-)
-def eng_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write events Hive-partitioned by day, read one week back.
-
-    THE first-order scale lever: a date-partitioned 100 TB fact makes
-    any time-bounded query read only the matching partition dirs —
-    the filter binds at FILE LISTING time (PartitionFilters), before a
-    single byte of parquet is opened. Here 7 of 30 day-dirs survive
-    listing; the same layout at 1000x data prunes identically because
-    pruning cost scales with the PARTITION COUNT, not the data. The
-    partition column is written as its string form (Hive dirs are
-    strings) and the week filter is applied on the partition values."""
-    import tempfile
-    from pathlib import Path
-
-    path = Path(tempfile.mkdtemp(prefix="part_wh_")) / "events_by_day"
-    ev = load_table(spark, sf_dir, "events")
-    ev.withColumn(
-        "event_date", F.date_format("ts", "yyyy-MM-dd")
-    ).write.partitionBy("event_date").parquet(str(path))
-    week = spark.read.parquet(str(path)).filter(
-        (F.col("event_date") >= "2024-01-08") & (F.col("event_date") <= "2024-01-14")
+    "ts_ewma_trailing",
+    # α=1/2 makes every weight a power of two: numerator and weight-sum
+    # are exact BIGINTs, the value appears only after ONE IEEE division
+    # — bit-identical across engines, no tolerance, no rounding
+    oracle=f"""
+    WITH pts AS (
+      SELECT user_id, event_id, epoch_us(ts) AS us, {_CENTS_SQL} AS cents
+      FROM events
     )
-    return week.groupBy(F.col("event_date").cast("string").alias("event_date")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum(F.col("value").cast("decimal(12,4)")), 2)
-        .cast("double")
-        .alias("value_sum"),
+    SELECT user_id, event_id, cents,
+           ({_EWMA_NUM_SQL})
+             / (({_EWMA_DEN_SQL}) * 100.0) AS ewma_value
+    FROM pts
+    WINDOW vu AS (PARTITION BY user_id ORDER BY us, event_id)
+    """,
+    survey_ref="beyond-reference: trailing EWMA (α=1/2, 8 taps) — "
+    "exponential smoothing as a fixed-tap window, the streaming-safe "
+    "formulation of the classic recursive filter",
+)
+def ts_ewma_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exponentially-weighted trailing average of each user's values.
+
+    The recursive EWMA (y_t = αx_t + (1-α)y_{t-1}) is inherently
+    sequential; truncating at K taps (weight 2^-K ≈ 0.4% ignored) turns
+    it into K lags over ONE sort — all eight lag() calls share the same
+    window spec, so Spark computes them in a single Sort + Window pass.
+    Scale: one user_id shuffle; per-row state is K values regardless of
+    history; no driver iteration, no sequential dependency."""
+    ev = load_table(spark, sf_dir, "events")
+    pts = ev.select(
+        "user_id",
+        "event_id",
+        F.unix_micros("ts").alias("us"),
+        _cents().alias("cents"),
+    )
+    vu = Window.partitionBy("user_id").orderBy("us", "event_id")
+    num = None
+    den = None
+    for j in range(_EWMA_K):
+        wgt = 1 << (_EWMA_K - 1 - j)
+        lag = F.lag("cents", j).over(vu) if j else F.col("cents")
+        term = F.coalesce(lag, F.lit(0)) * wgt
+        avail = F.when(lag.isNotNull(), wgt).otherwise(0)
+        num = term if num is None else num + term
+        den = avail if den is None else den + avail
+    return pts.select(
+        "user_id",
+        "event_id",
+        "cents",
+        (num / (den * 100.0)).alias("ewma_value"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Time-weighted average: each value weighted by how long it was current.
+# ---------------------------------------------------------------------------
+@query(
+    "ts_time_weighted_avg",
+    # durations are integer milliseconds (BIGINT floor-div — DuckDB //
+    # on BIGINT and Spark's `div` agree; NEVER // on a double epoch),
+    # value×duration sums stay integers; one final division
+    oracle=f"""
+    WITH pts AS (
+      SELECT user_id, epoch_us(ts) AS us, event_id, {_CENTS_SQL} AS cents
+      FROM events
+    ),
+    spans AS (
+      SELECT user_id, cents,
+             (lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id)
+              - us) // 1000 AS dur_ms
+      FROM pts
+    )
+    SELECT user_id,
+           CAST(count(dur_ms) AS BIGINT) AS n_spans,
+           CAST(CAST(sum(cents * dur_ms) AS BIGINT) AS DOUBLE)
+             / (CAST(CAST(sum(dur_ms) AS BIGINT) AS DOUBLE) * 100.0)
+             AS twa_value
+    FROM spans WHERE dur_ms IS NOT NULL
+    GROUP BY user_id HAVING sum(dur_ms) > 0
+    """,
+    survey_ref="beyond-reference: time-weighted average (value × "
+    "holding-duration / total duration) — the correct mean for "
+    "irregularly-sampled series, where the arithmetic mean over-weights "
+    "bursts",
+)
+def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duration-weighted mean of each user's value series.
+
+    Scale: one user_id shuffle; lead() and the aggregation share the
+    partitioning, and the agg combines map-side. Integer ms durations
+    keep every sum exact until the single closing division."""
+    ev = load_table(spark, sf_dir, "events")
+    pts = ev.select(
+        "user_id",
+        F.unix_micros("ts").alias("us"),
+        "event_id",
+        _cents().alias("cents"),
+    )
+    # window spelled in SQL only because integer `div` has no Column
+    # operator; it is the one (user_id, ordering) sort of this plan
+    spans = pts.select(
+        "user_id",
+        "cents",
+        F.expr("(lead(us) over (partition by user_id order by us, event_id)"
+               " - us) div 1000").alias("dur_ms"),
+    ).filter(F.col("dur_ms").isNotNull())
+    return (
+        spans.groupBy("user_id")
+        .agg(
+            F.count("dur_ms").cast("bigint").alias("n_spans"),
+            (
+                F.sum(F.col("cents") * F.col("dur_ms"))
+                .cast("bigint")
+                .cast("double")
+                / (F.sum("dur_ms").cast("bigint").cast("double") * 100.0)
+            ).alias("twa_value"),
+            F.sum("dur_ms").alias("__den"),
+        )
+        .filter(F.col("__den") > 0)
+        .drop("__den")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Exact weighted percentiles.
+# ---------------------------------------------------------------------------
+@query(
+    "a_weighted_percentile",
+    # weighted quantile = first value whose cumulative weight crosses
+    # q·total, with a pinned unique ordering and INTEGER threshold
+    # comparisons (4·cw ≥ q·4·tw) — no float quantile arithmetic at all
+    oracle="""
+    WITH pts AS (
+      SELECT l_returnflag AS grp, l_extendedprice AS v,
+             CAST(l_quantity AS BIGINT) AS w, l_orderkey, l_linenumber
+      FROM lineitem
+    ),
+    tot AS (SELECT grp, CAST(SUM(w) AS BIGINT) AS tw FROM pts GROUP BY grp),
+    cum AS (
+      SELECT grp, v,
+             CAST(SUM(w) OVER (PARTITION BY grp
+                               ORDER BY v, l_orderkey, l_linenumber
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                                 AND CURRENT ROW) AS BIGINT) AS cw
+      FROM pts
+    )
+    SELECT grp, CAST(tw AS BIGINT) AS total_weight,
+           min(CASE WHEN 4 * cw >= tw THEN v END) AS p25_weighted,
+           min(CASE WHEN 2 * cw >= tw THEN v END) AS p50_weighted,
+           min(CASE WHEN 4 * cw >= 3 * tw THEN v END) AS p75_weighted
+    FROM cum JOIN tot USING (grp)
+    GROUP BY grp, tw
+    """,
+    survey_ref="beyond-reference: exact weighted percentiles (quantity-"
+    "weighted price quartiles) — the weighted twin of "
+    "a_exact_percentiles, selecting observed values via cumulative-"
+    "weight crossings",
+)
+def a_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantity-weighted price quartiles per return flag.
+
+    Scale: one grp shuffle feeds the cumulative-weight sort; totals are
+    a broadcast-sized aggregate joined back. Thresholds compare
+    integers (4·cw vs q·4·tw), and the reported quantiles are observed
+    data values — nothing interpolated, nothing float-accumulated. At
+    billions of rows per group the certified substitute for the
+    single-partition-per-group sort is w_rank_twophase's
+    range-partitioned offsets (same crossing rule on partial sums)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    pts = li.select(
+        F.col("l_returnflag").alias("grp"),
+        F.col("l_extendedprice").alias("v"),
+        F.col("l_quantity").cast("bigint").alias("w"),
+        "l_orderkey",
+        "l_linenumber",
+    )
+    tot = pts.groupBy("grp").agg(F.sum("w").cast("bigint").alias("tw"))
+    wcum = (
+        Window.partitionBy("grp")
+        .orderBy("v", "l_orderkey", "l_linenumber")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = pts.select(
+        "grp", "v", F.sum("w").over(wcum).cast("bigint").alias("cw")
+    )
+    return (
+        cum.join(F.broadcast(tot), "grp")
+        .groupBy("grp", "tw")
+        .agg(
+            F.min(F.when(4 * F.col("cw") >= F.col("tw"), F.col("v"))).alias(
+                "p25_weighted"
+            ),
+            F.min(F.when(2 * F.col("cw") >= F.col("tw"), F.col("v"))).alias(
+                "p50_weighted"
+            ),
+            F.min(
+                F.when(4 * F.col("cw") >= 3 * F.col("tw"), F.col("v"))
+            ).alias("p75_weighted"),
+        )
+        .select(
+            "grp",
+            F.col("tw").cast("bigint").alias("total_weight"),
+            "p25_weighted",
+            "p50_weighted",
+            "p75_weighted",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Window value functions: first/last/nth + offset defaults.
+# ---------------------------------------------------------------------------
+@query(
+    "w_value_suite",
+    # one (user_id, us, event_id) ordering serves both specs — the
+    # framed full-window trio and the default-frame offsets — so the
+    # plan needs one Exchange and one Sort
+    oracle=f"""
+    WITH pts AS (
+      SELECT user_id, event_id, epoch_us(ts) AS us, {_CENTS_SQL} AS cents
+      FROM events
+    )
+    SELECT user_id, event_id, cents,
+           first_value(cents) OVER vu AS first_cents,
+           last_value(cents) OVER vu AS last_cents,
+           nth_value(cents, 3) OVER vu AS third_cents,
+           lead(cents, 2, CAST(-1 AS BIGINT)) OVER vo AS lead2_cents,
+           lag(cents, 3, CAST(-1 AS BIGINT)) OVER vo AS lag3_cents
+    FROM pts
+    WINDOW vu AS (PARTITION BY user_id ORDER BY us, event_id
+                  ROWS BETWEEN UNBOUNDED PRECEDING
+                    AND UNBOUNDED FOLLOWING),
+           vo AS (PARTITION BY user_id ORDER BY us, event_id)
+    """,
+    survey_ref="beyond-reference: window value-function surface "
+    "(first_value / last_value / nth_value over an explicit full "
+    "frame; lead/lag with non-NULL defaults) — completes the window "
+    "family's value functions",
+)
+def w_value_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Window value functions with pinned frames and unique ordering.
+
+    last_value/nth_value are frame-sensitive: the explicit UNBOUNDED
+    FOLLOWING frame is the portable spelling (the default frame stops
+    at CURRENT ROW, making last_value a no-op — a classic silent bug
+    this entry pins)."""
+    ev = load_table(spark, sf_dir, "events")
+    pts = ev.select(
+        "user_id",
+        "event_id",
+        F.unix_micros("ts").alias("us"),
+        _cents().alias("cents"),
+    )
+    vu = (
+        Window.partitionBy("user_id")
+        .orderBy("us", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    vo = Window.partitionBy("user_id").orderBy("us", "event_id")
+    return pts.select(
+        "user_id",
+        "event_id",
+        "cents",
+        F.first("cents").over(vu).alias("first_cents"),
+        F.last("cents").over(vu).alias("last_cents"),
+        F.nth_value("cents", 3).over(vu).alias("third_cents"),
+        F.lead("cents", 2, -1).over(vo).alias("lead2_cents"),
+        F.lag("cents", 3, -1).over(vo).alias("lag3_cents"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Gini impurity of each user's event-type mix: exact rational arithmetic.
+# ---------------------------------------------------------------------------
+@query(
+    "a_gini_impurity",
+    # gini = 1 - Σ(nᵢ/N)² = (N² - Σnᵢ²)/N² — numerator and denominator
+    # are exact BIGINTs, one final division. (Shannon entropy is the
+    # usual alternative; ln() can differ by 1 ulp across libms, Gini
+    # cannot — see the house exact-arithmetic rule.)
+    oracle="""
+    WITH counts AS (
+      SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
+      FROM events GROUP BY 1, 2
+    )
+    SELECT user_id,
+           CAST(SUM(n) AS BIGINT) AS n_events,
+           CAST(count(*) AS BIGINT) AS n_types,
+           CAST(CAST(SUM(n) AS BIGINT) * CAST(SUM(n) AS BIGINT)
+                - CAST(SUM(n * n) AS BIGINT) AS DOUBLE)
+             / CAST(CAST(SUM(n) AS BIGINT) * CAST(SUM(n) AS BIGINT)
+                    AS DOUBLE) AS gini
+    FROM counts GROUP BY user_id
+    """,
+    survey_ref="beyond-reference: per-group Gini impurity (behavioral "
+    "diversity score) — the exact-rational alternative to entropy, "
+    "two map-side-combinable aggregations",
+)
+def a_gini_impurity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """How mixed is each user's event-type distribution (0 = single
+    type, →1 = uniform over many).
+
+    Scale: counts aggregate combines map-side; the second agg runs on
+    |users|×|types| rows. No window, no sort, exact integers into one
+    closing division."""
+    ev = load_table(spark, sf_dir, "events")
+    counts = ev.groupBy("user_id", "event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    n_sum = F.sum("n").cast("bigint")
+    sq_sum = F.sum(F.col("n") * F.col("n")).cast("bigint")
+    return counts.groupBy("user_id").agg(
+        n_sum.alias("n_events"),
+        F.count(F.lit(1)).cast("bigint").alias("n_types"),
+        (
+            (n_sum * n_sum - sq_sum).cast("double")
+            / (n_sum * n_sum).cast("double")
+        ).alias("gini"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Longest consecutive-day activity streak (gaps and islands).
+# ---------------------------------------------------------------------------
+@query(
+    "w_streak_lengths",
+    # the island id (day_num - row_number) is pure integer arithmetic;
+    # top-1 per user pins the (length DESC, start ASC) tiebreak
+    oracle="""
+    WITH days AS (
+      SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
+    ),
+    numbered AS (
+      SELECT user_id, d,
+             date_diff('day', DATE '2024-01-01', d)
+               - row_number() OVER (PARTITION BY user_id ORDER BY d)
+               AS grp
+      FROM days
+    ),
+    streaks AS (
+      SELECT user_id, CAST(count(*) AS BIGINT) AS streak_len,
+             min(d) AS streak_start
+      FROM numbered GROUP BY user_id, grp
+    ),
+    ranked AS (
+      SELECT *,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY streak_len DESC, streak_start)
+               AS rn,
+             CAST(SUM(streak_len) OVER (PARTITION BY user_id) AS BIGINT)
+               AS n_active_days
+      FROM streaks
+    )
+    SELECT user_id, streak_len AS longest_streak, streak_start,
+           n_active_days
+    FROM ranked WHERE rn = 1
+    """,
+    survey_ref="beyond-reference: gaps-and-islands longest streak "
+    "(consecutive active days per user) — the calendar twin of "
+    "st_sessionize's time-gap islands, pure integer island ids",
+)
+def w_streak_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each user's longest run of consecutive active days.
+
+    Scale: every window runs on the DISTINCT-days frame (≤ days/user
+    rows, never raw events); the distinct, both windows, and the
+    grouping all share the user_id partitioning — one shuffle feeds
+    the chain under AQE."""
+    ev = load_table(spark, sf_dir, "events")
+    days = ev.select(
+        "user_id", F.col("ts").cast("date").alias("d")
+    ).distinct()
+    wn = Window.partitionBy("user_id").orderBy("d")
+    numbered = days.withColumn(
+        "grp",
+        F.datediff("d", F.lit("2024-01-01").cast("date"))
+        - F.row_number().over(wn),
+    )
+    streaks = numbered.groupBy("user_id", "grp").agg(
+        F.count(F.lit(1)).cast("bigint").alias("streak_len"),
+        F.min("d").alias("streak_start"),
+    )
+    wr = Window.partitionBy("user_id").orderBy(
+        F.col("streak_len").desc(), F.col("streak_start")
+    )
+    wtot = Window.partitionBy("user_id")
+    return (
+        streaks.withColumn("rn", F.row_number().over(wr))
+        .withColumn(
+            "n_active_days", F.sum("streak_len").over(wtot).cast("bigint")
+        )
+        .filter(F.col("rn") == 1)
+        .select(
+            "user_id",
+            F.col("streak_len").alias("longest_streak"),
+            "streak_start",
+            "n_active_days",
+        )
+    )
+
+
+_BUCKET_DAYS = 7
+
+
+@query(
+    "j_interval_overlap",
+    # oracle: the plain inequality join DuckDB evaluates with its
+    # IEJoin — the semantics the bucketed plan must reproduce exactly
+    oracle=f"""
+    WITH l AS (
+      SELECT o_orderkey AS l_id, o_custkey % 40 AS key,
+             CAST(o_orderdate AS DATE) AS l_s,
+             CAST(o_orderdate AS DATE)
+               + INTERVAL (o_orderkey % 5 + 1) DAY AS l_e
+      FROM orders WHERE o_orderkey % 3 = 0
+    ),
+    r AS (
+      SELECT o_orderkey AS r_id, o_custkey % 40 AS key,
+             CAST(o_orderdate AS DATE) AS r_s,
+             CAST(o_orderdate AS DATE)
+               + INTERVAL (o_orderkey % 7 + 1) DAY AS r_e
+      FROM orders WHERE o_orderkey % 3 = 1
+    )
+    SELECT l.key AS key, l_id, r_id,
+           CAST(date_diff('day',
+                greatest(l_s, r_s), least(l_e, r_e)) AS BIGINT)
+             AS overlap_days
+    FROM l JOIN r ON l.key = r.key AND l_s <= r_e AND r_s <= l_e
+    """,
+    survey_ref="beyond-reference: interval×interval overlap join via "
+    "coarse-bucket explosion + emit-once guard — the distributed "
+    "substitute for the nested-loop inequality join (extends "
+    "tj_range_join from point-in-interval to interval-interval)",
+)
+def j_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Overlapping (left, right) interval pairs sharing a key.
+
+    Each interval explodes into the 7-day buckets it touches (≤2 here:
+    intervals are 1–7 days); the join is then a plain (key, bucket)
+    equi-join + residual overlap predicate. A pair sharing several
+    buckets would duplicate, so emit ONLY in the first bucket both
+    occupy — bucket == max(l_start_bucket, r_start_bucket) — an O(1)
+    guard instead of a distinct shuffle.
+
+    Scale: candidate work is O(overlapping pairs + bucket collisions),
+    never |L|·|R|; bucket width trades replication (interval_len/width
+    copies) against collision fan-in, exactly like tj_range_join. Both
+    sides shuffle once on (key, bucket) — AQE handles a hot bucket."""
+    orders = load_table(spark, sf_dir, "orders")
+
+    def side(mod: int, id_alias: str, s_alias: str, e_alias: str, span_mod: int) -> DataFrame:
+        return orders.filter(F.col("o_orderkey") % 3 == mod).select(
+            F.col("o_orderkey").alias(id_alias),
+            (F.col("o_custkey") % 40).alias("key"),
+            F.to_date("o_orderdate").alias(s_alias),
+            F.date_add(
+                F.to_date("o_orderdate"),
+                (F.col("o_orderkey") % span_mod + 1).cast("int"),
+            ).alias(e_alias),
+        )
+
+    left = side(0, "l_id", "l_s", "l_e", 5)
+    right = side(1, "r_id", "r_s", "r_e", 7)
+
+    def bucketed(df: DataFrame, s: str, e: str) -> DataFrame:
+        b_lo = F.expr(f"datediff({s}, DATE'1970-01-01') div {_BUCKET_DAYS}")
+        b_hi = F.expr(f"datediff({e}, DATE'1970-01-01') div {_BUCKET_DAYS}")
+        return df.withColumn(
+            "bucket", F.explode(F.sequence(b_lo, b_hi))
+        ).withColumn("s_bucket", b_lo)
+
+    lb = bucketed(left, "l_s", "l_e").withColumnRenamed("s_bucket", "l_sb")
+    rb = bucketed(right, "r_s", "r_e").withColumnRenamed("s_bucket", "r_sb")
+    joined = lb.join(rb, ["key", "bucket"]).filter(
+        (F.col("l_s") <= F.col("r_e"))
+        & (F.col("r_s") <= F.col("l_e"))
+        & (F.col("bucket") == F.greatest("l_sb", "r_sb"))
+    )
+    return joined.select(
+        F.col("key").cast("bigint").alias("key"),
+        "l_id",
+        "r_id",
+        F.datediff(
+            F.least("l_e", "r_e"), F.greatest("l_s", "r_s")
+        ).cast("bigint").alias("overlap_days"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Native session windows (batch F.session_window == gaps-and-islands).
+# ---------------------------------------------------------------------------
+_GAP_MIN = 30
+_CENTS = _CENTS_SQL
+
+
+@query(
+    "w_session_window",
+    # the oracle is the classic gaps-and-islands spelling: session id =
+    # running count of >30-min gaps per user; Spark runs the NATIVE
+    # session_window operator — the hash match certifies the two
+    # formulations compute the identical sessionization
+    oracle=f"""
+    WITH e AS (
+      SELECT user_id, ts, {_CENTS} AS cents,
+             CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (
+                    PARTITION BY user_id ORDER BY ts, event_id))
+                  > {_GAP_MIN} * 60 * 1000000 OR
+                  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                    IS NULL
+                  THEN 1 ELSE 0 END AS new_s
+      FROM events
+    ),
+    s AS (
+      SELECT *,
+             sum(new_s) OVER (
+               PARTITION BY user_id ORDER BY ts
+               ROWS UNBOUNDED PRECEDING
+             ) AS session_id
+      FROM e
+    )
+    SELECT user_id,
+           min(ts) AS session_start,
+           max(ts) + INTERVAL {_GAP_MIN} MINUTE AS session_end,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(sum(cents) AS BIGINT) AS cents
+    FROM s GROUP BY user_id, session_id
+    """,
+    survey_ref="beyond-reference: native batch session windows "
+    "(F.session_window) certified against the gaps-and-islands SQL "
+    "spelling — the two sessionization idioms proven equivalent",
+)
+def w_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user 30-minute-gap sessions via the NATIVE session_window.
+
+    The engine's session operator merges overlapping [ts, ts+gap)
+    intervals inside a single aggregation — one shuffle on user_id,
+    no window-function pass at all (contrast sessionize_batch's
+    lag+cumsum, and the streaming twin st_sessionize). Certifying it
+    against the gaps-and-islands oracle pins the exact boundary
+    semantics (session end = last event + gap; a gap of EXACTLY 30
+    min merges — [start, start+gap) intervals touching counts as
+    overlap on both engines' definitions)."""
+    e = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        "ts",
+        F.round(F.col("value").cast("decimal(12,4)") * 100, 0)
+        .cast("bigint")
+        .alias("cents"),
+    )
+    return (
+        e.groupBy(
+            "user_id", F.session_window("ts", f"{_GAP_MIN} minutes")
+        )
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.sum("cents").cast("bigint").alias("cents"),
+        )
+        .select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            F.col("session_window.end").alias("session_end"),
+            "n_events",
+            "cents",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Boolean-aggregate function surface.
+# ---------------------------------------------------------------------------
+@query(
+    "a_bool_agg_suite",
+    oracle="""
+    SELECT event_type,
+           bool_and(value > 0) AS all_pos,
+           bool_or(value > 990) AS any_high,
+           CAST(count_if(value > 500) AS BIGINT) AS n_big,
+           CAST(count_if(value IS NULL) AS BIGINT) AS n_null_val,
+           bool_and(user_id IS NOT NULL) AS users_complete
+    FROM events GROUP BY event_type
+    """,
+    survey_ref="beyond-reference: boolean aggregate surface "
+    "(bool_and/bool_or/count_if) — the data-quality assertion "
+    "primitives as plain aggregates",
+)
+def a_bool_agg_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """bool_and / bool_or / count_if per group, NULL semantics pinned.
+
+    These are the aggregate forms data-quality checks compile to
+    (engine/tests.py's not_null is a count_if at heart). Row-local
+    predicates, one combining groupBy — map-side partials carry one
+    boolean/long per (group, aggregate)."""
+    e = load_table(spark, sf_dir, "events")
+    return e.groupBy("event_type").agg(
+        F.bool_and(F.col("value") > 0).alias("all_pos"),
+        F.bool_or(F.col("value") > 990).alias("any_high"),
+        F.count_if(F.col("value") > 500).cast("bigint").alias("n_big"),
+        F.count_if(F.col("value").isNull())
+        .cast("bigint")
+        .alias("n_null_val"),
+        F.bool_and(F.col("user_id").isNotNull()).alias("users_complete"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Batch sliding windows (tumbling's overlapping sibling).
+# ---------------------------------------------------------------------------
+@query(
+    "w_sliding_window",
+    # every event lands in exactly size/slide = 4 overlapping windows;
+    # the oracle enumerates them arithmetically (start = aligned base
+    # minus j slides), Spark uses the native sliding window() operator
+    oracle=f"""
+    WITH e AS (
+      SELECT CAST(floor(epoch(ts)) AS BIGINT) AS ep, {_CENTS} AS cents
+      FROM events
+    ),
+    x AS (
+      SELECT (ep // 900) * 900 - j.j * 900 AS ws, cents
+      FROM e CROSS JOIN (SELECT unnest(range(0, 4)) AS j) j
+    )
+    SELECT make_timestamp(ws * 1000000) AS window_start,
+           make_timestamp((ws + 3600) * 1000000) AS window_end,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(cents) AS BIGINT) AS cents
+    FROM x GROUP BY ws
+    """,
+    survey_ref="beyond-reference: batch SLIDING windows "
+    "(window(ts, '1 hour', '15 minutes')) — the overlapping-window "
+    "aggregation, tumbling's sibling (st_windowed_counts)",
+)
+def w_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-hour windows sliding every 15 min over the event stream.
+
+    The native window() generator replicates each row into its
+    size/slide = 4 windows map-side, then ONE combining groupBy —
+    identical cost shape to explode+agg, with the overlap factor as
+    the explicit map-side multiplier (×4 rows into the partial agg,
+    never ×4 shuffle width: partials combine per window first)."""
+    e = load_table(spark, sf_dir, "events")
+    cents = (
+        F.round(F.col("value").cast("decimal(12,4)") * 100, 0)
+        .cast("bigint")
+    )
+    return (
+        e.select("ts", cents.alias("cents"))
+        .groupBy(F.window("ts", "1 hour", "15 minutes"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("cents").cast("bigint").alias("cents"),
+        )
+        .select(
+            F.col("window.start").alias("window_start"),
+            F.col("window.end").alias("window_end"),
+            "n",
+            "cents",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# As-of join with a match tolerance (the merge_asof tolerance knob).
+# ---------------------------------------------------------------------------
+_TOL_S = 6 * 3600
+
+
+@query(
+    "tj_asof_tolerance",
+    # DuckDB ASOF finds the unbounded backward match; the tolerance is
+    # then a NULL-out of matches older than the bound — the exact
+    # pandas merge_asof(tolerance=...) contract
+    oracle=f"""
+    SELECT p.event_id, p.user_id, p.ts,
+           CASE WHEN epoch_us(p.ts) - epoch_us(c.ts)
+                     <= CAST({_TOL_S} AS BIGINT) * 1000000
+                THEN c.ts END AS asof_ts
+    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      ON p.user_id = c.user_id AND c.ts <= p.ts
+    """,
+    survey_ref="beyond-reference: as-of join with tolerance — stale "
+    "matches become NULL, never a silently-ancient enrichment "
+    "(pandas merge_asof tolerance semantics; completes the as-of "
+    "family: backward/forward/nearest/point-in-time/tolerance)",
+)
+def tj_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Backward as-of where matches older than 6 h are discarded.
+
+    The production failure this prevents: a feature-store lookup
+    silently enriching from a week-stale snapshot. Same one-shuffle
+    union plan as tj_asof_join; tolerance is a row-local NULL-out
+    AFTER the running last() — exact integer-µs comparison (epoch
+    doubles lose ulps at 2024 scale)."""
+    from oroboro_dw_dbt_spark.ops.temporal import asof_join
+
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    clicks = ev.filter(F.col("event_type") == "click")
+    j = asof_join(purchases, clicks, key="user_id")
+    within = (
+        F.unix_micros(F.col("ts")) - F.unix_micros(F.col("asof_ts"))
+        <= _TOL_S * 1_000_000
+    )
+    return j.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.when(within, F.col("asof_ts")).alias("asof_ts"),
+    )
+
+
+_EPOCH = "1992-01-01"
+
+
+@query(
+    "ts_period_over_period",
+    oracle=f"""
+    WITH daily AS (
+      SELECT date_diff('day', DATE '{_EPOCH}', CAST(o_orderdate AS DATE))
+               AS day_idx,
+             CAST(sum(CAST(round(CAST(o_totalprice AS DECIMAL(14,4)) * 100, 0)
+                           AS BIGINT)) AS BIGINT)
+               AS revenue_cents
+      FROM orders GROUP BY 1
+    )
+    SELECT c.day_idx, c.revenue_cents,
+           CAST(round((c.revenue_cents - d1.revenue_cents) * 1000000.0
+                 / d1.revenue_cents, 0) AS BIGINT) AS dod_micro,
+           CAST(round((c.revenue_cents - d7.revenue_cents) * 1000000.0
+                 / d7.revenue_cents, 0) AS BIGINT) AS wow_micro
+    FROM daily c
+    LEFT JOIN daily d1 ON d1.day_idx = c.day_idx - 1
+    LEFT JOIN daily d7 ON d7.day_idx = c.day_idx - 7
+    """,
+    survey_ref="beyond-reference: day-over-day / week-over-week revenue "
+    "deltas — gap-safe day-offset joins, exact integer cents",
+)
+def ts_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-day revenue with DoD and WoW percent change (micro).
+
+    Scale: the daily rollup is the only corpus-wide shuffle (fully
+    partial-aggregating on integer cents); both period joins run on
+    the |days|-row result — KB forever. A LAG window would be one
+    sort cheaper but silently lags across gaps; the explicit offset
+    join is the correct-by-construction spelling."""
+    cents = (
+        F.round(F.col("o_totalprice").cast("decimal(14,4)") * 100, 0)
+        .cast("long")
+    )
+    daily = (
+        load_table(spark, sf_dir, "orders")
+        .select(
+            F.datediff(F.to_date("o_orderdate"), F.to_date(F.lit(_EPOCH))).alias(
+                "day_idx"
+            ),
+            cents.alias("cents"),
+        )
+        .groupBy("day_idx")
+        .agg(F.sum("cents").alias("revenue_cents"))
+    )
+    c, d1, d7 = daily.alias("c"), daily.alias("d1"), daily.alias("d7")
+
+    def pct(cur, prev):
+        return F.round(
+            (cur - prev) * 1000000.0 / prev, 0
+        ).cast("long")
+
+    return (
+        c.join(d1, F.col("d1.day_idx") == F.col("c.day_idx") - 1, "left")
+        .join(d7, F.col("d7.day_idx") == F.col("c.day_idx") - 7, "left")
+        .select(
+            F.col("c.day_idx").alias("day_idx"),
+            F.col("c.revenue_cents").alias("revenue_cents"),
+            pct(F.col("c.revenue_cents"), F.col("d1.revenue_cents")).alias(
+                "dod_micro"
+            ),
+            pct(F.col("c.revenue_cents"), F.col("d7.revenue_cents")).alias(
+                "wow_micro"
+            ),
+        )
     )

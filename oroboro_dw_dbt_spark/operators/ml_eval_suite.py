@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from oroboro_dw_dbt_spark.operators.catalog import query
+from oroboro_dw_dbt_spark.operators.extended_suite import _CENTS
+from oroboro_dw_dbt_spark.operators.training_suite import _hits_sql
 from oroboro_dw_dbt_spark.sources.testdata import load_table
 
 # ---------------------------------------------------------------------------
@@ -741,4 +743,641 @@ def lab_pref_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c.doc_id").alias("chosen_id"),
         F.col("r.doc_id").alias("rejected_id"),
         (F.col("c.s") - F.col("r.s")).cast("bigint").alias("margin"),
+    )
+
+
+# Annotator votes: same latent truth + flip model as lab_agreement
+# (ml_eval_suite._VOTES_SQL) so the two label-quality entries measure
+# the same synthetic labeling process.
+_TRUTH = "((doc_id * 2654435761) % 100 < 50)"
+_VOTE = "({t} <> ((doc_id * {m} + {o}) % 100 < 20))"
+
+
+@query(
+    "lab_majority_vote",
+    oracle=f"""
+    WITH v AS (
+      SELECT doc_id, lang,
+             CASE WHEN {_TRUTH} THEN 1 ELSE 0 END AS t,
+             CASE WHEN {_VOTE.format(t=_TRUTH, m=31, o=7)} THEN 1 ELSE 0 END AS v1,
+             CASE WHEN {_VOTE.format(t=_TRUTH, m=53, o=11)} THEN 1 ELSE 0 END AS v2,
+             CASE WHEN {_VOTE.format(t=_TRUTH, m=97, o=3)} THEN 1 ELSE 0 END AS v3
+      FROM documents
+    ),
+    g AS (
+      SELECT lang, t, v1 + v2 + v3 AS s,
+             CASE WHEN v1 + v2 + v3 >= 2 THEN 1 ELSE 0 END AS gold
+      FROM v
+    )
+    SELECT lang,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(gold) AS BIGINT) AS n_gold_pos,
+           CAST(sum(CASE WHEN s IN (0, 3) THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_unanimous,
+           CAST(sum(CASE WHEN gold = t THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_correct
+    FROM g GROUP BY lang
+    """,
+    survey_ref="beyond-reference: majority-vote gold-label "
+    "construction with unanimity and latent-accuracy diagnostics — "
+    "the labeling step lab_agreement's kappa measures",
+)
+def lab_majority_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """3-annotator majority vote → per-language gold-label report.
+
+    Row-local vote construction (pure BIGINT mod arithmetic, zero
+    data movement) then ONE combining groupBy to |langs| rows. With
+    an odd annotator count the majority always exists — no tie rule
+    needed; n_unanimous vs n_docs is the consensus-rate diagnostic
+    and n_correct/n_docs the (here-knowable) label error rate."""
+    docs = load_table(spark, sf_dir, "documents")
+    t = ((F.col("doc_id") * F.lit(2654435761)) % 100 < 50).cast("int")
+
+    def vote(m: int, o: int) -> F.Column:
+        flip = (F.col("doc_id") * m + o) % 100 < 20
+        return (t.cast("boolean") != flip).cast("int")
+
+    s = vote(31, 7) + vote(53, 11) + vote(97, 3)
+    g = docs.select(
+        "lang",
+        t.alias("t"),
+        s.alias("s"),
+        (s >= 2).cast("int").alias("gold"),
+    )
+    return g.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("gold").cast("bigint").alias("n_gold_pos"),
+        F.sum(F.col("s").isin(0, 3).cast("int"))
+        .cast("bigint")
+        .alias("n_unanimous"),
+        F.sum((F.col("gold") == F.col("t")).cast("int"))
+        .cast("bigint")
+        .alias("n_correct"),
+    )
+
+
+# Poisson(1) inverse CDF at 1e-4 resolution: P(X<=k) cumulative,
+# scaled to 0..10000. A uniform integer hash u∈[0,10000) maps to the
+# resample weight via these thresholds — deterministic, no rand().
+_POIS = (3679, 7358, 9197, 9810, 9963)
+_B = 32
+
+
+@query(
+    "ml_bootstrap_ci",
+    oracle=f"""
+    WITH d AS (
+      SELECT doc_id,
+             CASE WHEN {_TRUTH} THEN 1 ELSE 0 END AS label,
+             CASE WHEN {_TRUTH} <> ((doc_id * 193 + 29) % 100 < 15)
+                  THEN 1 ELSE 0 END AS pred
+      FROM documents
+    ),
+    x AS (
+      SELECT d.*, b.b,
+             (d.doc_id * 1103515245 + b.b * 12345 + 7) % 10000 AS u
+      FROM d CROSS JOIN (SELECT unnest(range(0, {_B})) AS b) b
+    ),
+    w AS (
+      SELECT b, pred, label,
+             CASE WHEN u < {_POIS[0]} THEN 0
+                  WHEN u < {_POIS[1]} THEN 1
+                  WHEN u < {_POIS[2]} THEN 2
+                  WHEN u < {_POIS[3]} THEN 3
+                  WHEN u < {_POIS[4]} THEN 4
+                  ELSE 5 END AS w
+      FROM x
+    )
+    SELECT CAST(b AS BIGINT) AS b,
+           CAST(sum(w) AS BIGINT) AS n_w,
+           CAST(sum(CASE WHEN pred = label THEN w ELSE 0 END) AS BIGINT)
+             AS correct_w,
+           CAST(CAST(sum(CASE WHEN pred = label THEN w ELSE 0 END) * 1000000
+                     AS BIGINT) // sum(w) AS BIGINT) AS acc_ppm
+    FROM w GROUP BY b
+    """,
+    survey_ref="beyond-reference: Poisson-bootstrap confidence "
+    "intervals for eval metrics — 32 deterministic resamples in one "
+    "pass, integer-exact accuracy per resample",
+)
+def ml_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """32 Poisson-bootstrap resamples of classifier accuracy, exact.
+
+    The classic driver-side bootstrap (B passes over sampled copies)
+    is unusable at corpus scale; the Poisson bootstrap replaces it
+    with per-row integer weights — here a deterministic LCG-style
+    hash of (doc_id, b) through the Poisson(1) inverse CDF, so the
+    resamples are reproducible on any cluster and oracle-checkable.
+    One explode(0..31) + one combining groupBy: the corpus is read
+    once, shuffle carries 32 rows of state per partition. acc_ppm is
+    integer floor division — no float in the certified values; the
+    CI is read off the 32-row result (rank 2 / rank 30 ≈ 90% CI)."""
+    docs = load_table(spark, sf_dir, "documents")
+    truth = (F.col("doc_id") * F.lit(2654435761)) % 100 < 50
+    noise = (F.col("doc_id") * 193 + 29) % 100 < 15
+    d = docs.select(
+        "doc_id",
+        truth.cast("int").alias("label"),
+        (truth != noise).cast("int").alias("pred"),
+    )
+    x = d.select(
+        "*", F.explode(F.sequence(F.lit(0), F.lit(_B - 1))).alias("b")
+    ).withColumn(
+        "u",
+        (F.col("doc_id") * F.lit(1103515245) + F.col("b") * 12345 + 7)
+        % 10000,
+    )
+    w = (
+        F.when(F.col("u") < _POIS[0], 0)
+        .when(F.col("u") < _POIS[1], 1)
+        .when(F.col("u") < _POIS[2], 2)
+        .when(F.col("u") < _POIS[3], 3)
+        .when(F.col("u") < _POIS[4], 4)
+        .otherwise(5)
+    )
+    correct_w = F.when(F.col("pred") == F.col("label"), F.col("w")).otherwise(0)
+    return (
+        x.withColumn("w", w)
+        .groupBy(F.col("b").cast("bigint").alias("b"))
+        .agg(
+            F.sum("w").cast("bigint").alias("n_w"),
+            F.sum(correct_w).cast("bigint").alias("correct_w"),
+        )
+        .select(
+            "b",
+            "n_w",
+            "correct_w",
+            F.expr("correct_w * 1000000 div n_w").alias("acc_ppm"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Regression metrics: the eval family's missing half.
+# ---------------------------------------------------------------------------
+@query(
+    "ml_regression_metrics",
+    # y = event cents, ŷ = y + deterministic ±1000-cent noise. Every
+    # sufficient statistic is an exact integer (decimal(38,0) for the
+    # n·Σy² products); RMSE's sqrt is IEEE-exact (correctly rounded on
+    # every conforming libm), so even the derived doubles hash-match.
+    oracle=f"""
+    WITH d AS (
+      SELECT {_CENTS} AS y,
+             {_CENTS} + ((event_id * 37 + 11) % 2001 - 1000) AS yhat
+      FROM events
+    ),
+    s AS (
+      SELECT CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(y) AS HUGEINT) AS sy,
+             CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
+             CAST(sum(CAST(y - yhat AS HUGEINT) * (y - yhat)) AS BIGINT)
+               AS sse,
+             CAST(sum(abs(y - yhat)) AS BIGINT) AS sae
+      FROM d
+    )
+    SELECT n, sse, sae,
+           sqrt(CAST(sse AS DOUBLE) / n) AS rmse,
+           CAST(sae AS DOUBLE) / n AS mae,
+           1.0 - CAST(n AS DOUBLE) * sse
+                 / CAST(n * syy - sy * sy AS DOUBLE) AS r2
+    FROM s
+    """,
+    survey_ref="beyond-reference: regression metrics (RMSE/MAE/R²) "
+    "from one pass of exact integer sufficient statistics — "
+    "completing ml_eval's classification-only metric set",
+)
+def ml_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact RMSE / MAE / R² in a single aggregate pass.
+
+    SSE, SAE, Σy, Σy² are integers (cents); R² uses the mean-free
+    identity n·Σ(y−ȳ)² = n·Σy² − (Σy)², kept exact in decimal(38,0)
+    (DuckDB HUGEINT) — at 10⁹ rows of 10⁵-cent values n·Σy² ≈ 10²⁴,
+    past BIGINT but far inside 38 digits. One division (and one IEEE
+    sqrt) at the very end. Scale: a combining aggregate — map-side
+    partials, one 5-number row on the wire."""
+    e = load_table(spark, sf_dir, "events")
+    cents = (
+        F.round(F.col("value").cast("decimal(12,4)") * 100, 0)
+        .cast("bigint")
+    )
+    d = e.select(
+        cents.alias("y"),
+        (cents + ((F.col("event_id") * 37 + 11) % 2001 - 1000)).alias(
+            "yhat"
+        ),
+    )
+    err = F.col("y") - F.col("yhat")
+    dec = "decimal(38,0)"
+    s = d.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.col("y").cast(dec)).alias("sy"),
+        F.sum(F.col("y").cast(dec) * F.col("y")).alias("syy"),
+        F.sum(err * err).cast("bigint").alias("sse"),
+        F.sum(F.abs(err)).cast("bigint").alias("sae"),
+    )
+    return s.select(
+        "n",
+        "sse",
+        "sae",
+        F.sqrt(F.col("sse").cast("double") / F.col("n")).alias("rmse"),
+        (F.col("sae").cast("double") / F.col("n")).alias("mae"),
+        (
+            F.lit(1.0)
+            - F.col("n").cast("double")
+            * F.col("sse")
+            / (
+                F.col("n").cast(dec) * F.col("syy")
+                - F.col("sy") * F.col("sy")
+            ).cast("double")
+        ).alias("r2"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# A/B experiment readout: two-proportion z from exact counts.
+# ---------------------------------------------------------------------------
+@query(
+    "ml_ab_proportions",
+    # variant = user hash; converted = user has a >150-value purchase
+    # (mid-range rate at every sf — "any purchase" saturates to 1.0 and
+    # zeroes the z denominator). All four
+    # sufficient statistics are exact BIGINTs; rates and the pooled z
+    # are spelled as the IDENTICAL expression tree on both engines, so
+    # the final doubles match bit-for-bit (IEEE ops are deterministic
+    # given identical operand order).
+    oracle="""
+    WITH u AS (
+      SELECT user_id,
+             CASE WHEN (user_id * 2654435761) % 100 < 50
+                  THEN 'a' ELSE 'b' END AS variant,
+             max(CASE WHEN event_type = 'purchase' AND value > 150
+                      THEN 1 ELSE 0 END) AS converted
+      FROM events GROUP BY user_id
+    ),
+    s AS (
+      SELECT
+        CAST(sum(CASE WHEN variant = 'a' THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_a,
+        CAST(sum(CASE WHEN variant = 'a' THEN converted ELSE 0 END)
+             AS BIGINT) AS conv_a,
+        CAST(sum(CASE WHEN variant = 'b' THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_b,
+        CAST(sum(CASE WHEN variant = 'b' THEN converted ELSE 0 END)
+             AS BIGINT) AS conv_b
+      FROM u
+    )
+    SELECT n_a, conv_a, n_b, conv_b,
+           CAST(conv_a AS DOUBLE) / n_a AS rate_a,
+           CAST(conv_b AS DOUBLE) / n_b AS rate_b,
+           (CAST(conv_a AS DOUBLE) / n_a - CAST(conv_b AS DOUBLE) / n_b)
+             / sqrt(
+                 (CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
+                 * (1.0 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
+                 * (1.0 / n_a + 1.0 / n_b)
+               ) AS z
+    FROM s
+    """,
+    survey_ref="beyond-reference: A/B two-proportion z-test from "
+    "exact counts — the experimentation readout (complements the "
+    "drift family's chi-square)",
+)
+def ml_ab_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-proportion z-test over a deterministic 50/50 user split.
+
+    One per-user aggregate (did the user ever convert) then one
+    4-counter combining aggregate; rates and the pooled z derive from
+    those BIGINTs in a single final expression. Scale: the experiment
+    readout is O(users) map-side + 4 numbers on the wire — re-runnable
+    per metric/segment without touching the fact twice."""
+    u = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("user_id")
+        .agg(
+            F.max(
+                (
+                    (F.col("event_type") == "purchase")
+                    & (F.col("value") > 150)
+                ).cast("int")
+            ).alias("converted")
+        )
+        .select(
+            F.when(
+                (F.col("user_id") * F.lit(2654435761)) % 100 < 50, "a"
+            )
+            .otherwise("b")
+            .alias("variant"),
+            "converted",
+        )
+    )
+    s = u.agg(
+        F.sum((F.col("variant") == "a").cast("int"))
+        .cast("bigint")
+        .alias("n_a"),
+        F.sum(
+            F.when(F.col("variant") == "a", F.col("converted")).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("conv_a"),
+        F.sum((F.col("variant") == "b").cast("int"))
+        .cast("bigint")
+        .alias("n_b"),
+        F.sum(
+            F.when(F.col("variant") == "b", F.col("converted")).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("conv_b"),
+    )
+    rate_a = F.col("conv_a").cast("double") / F.col("n_a")
+    rate_b = F.col("conv_b").cast("double") / F.col("n_b")
+    pooled = (F.col("conv_a") + F.col("conv_b")).cast("double") / (
+        F.col("n_a") + F.col("n_b")
+    )
+    z = (rate_a - rate_b) / F.sqrt(
+        pooled
+        * (F.lit(1.0) - pooled)
+        * (F.lit(1.0) / F.col("n_a") + F.lit(1.0) / F.col("n_b"))
+    )
+    return s.select(
+        "n_a",
+        "conv_a",
+        "n_b",
+        "conv_b",
+        rate_a.alias("rate_a"),
+        rate_b.alias("rate_b"),
+        z.alias("z"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Multiclass classification report: the lang-ID model evaluated.
+# ---------------------------------------------------------------------------
+
+_LANG_PRED_SQL = f"""CASE
+      WHEN {_hits_sql('en')} + {_hits_sql('de')} + {_hits_sql('fr')}
+           + {_hits_sql('es')} = 0 THEN 'und'
+      WHEN {_hits_sql('en')} >= {_hits_sql('de')}
+           AND {_hits_sql('en')} >= {_hits_sql('fr')}
+           AND {_hits_sql('en')} >= {_hits_sql('es')} THEN 'en'
+      WHEN {_hits_sql('de')} >= {_hits_sql('fr')}
+           AND {_hits_sql('de')} >= {_hits_sql('es')} THEN 'de'
+      WHEN {_hits_sql('fr')} >= {_hits_sql('es')} THEN 'fr'
+      ELSE 'es' END"""
+
+
+@query(
+    "ml_multiclass_report",
+    # a REAL model evaluated on REAL labels: the text family's lang-ID
+    # heuristic (t_text_profile's lang_pred) scored against the corpus
+    # lang column — per-class support/precision/recall from one
+    # confusion pass, integer-exact with ppm fixed-point ratios
+    oracle=f"""
+    WITH p AS (
+      SELECT lang AS truth, {_LANG_PRED_SQL} AS pred FROM documents
+    ),
+    cells AS (
+      SELECT truth, pred, CAST(count(*) AS BIGINT) AS n
+      FROM p GROUP BY 1, 2
+    ),
+    per_truth AS (
+      SELECT truth AS lang,
+             CAST(sum(n) AS BIGINT) AS support,
+             CAST(sum(CASE WHEN pred = truth THEN n ELSE 0 END) AS BIGINT)
+               AS tp
+      FROM cells GROUP BY 1
+    ),
+    per_pred AS (
+      SELECT pred AS lang, CAST(sum(n) AS BIGINT) AS pred_n
+      FROM cells GROUP BY 1
+    )
+    SELECT t.lang, support, tp,
+           CAST(coalesce(pred_n, 0) AS BIGINT) AS pred_n,
+           CASE WHEN coalesce(pred_n, 0) = 0 THEN NULL
+                ELSE tp * 1000000 // pred_n END AS precision_ppm,
+           tp * 1000000 // support AS recall_ppm
+    FROM per_truth t LEFT JOIN per_pred USING (lang)
+    """,
+    survey_ref="beyond-reference: multiclass classification report — "
+    "per-class precision/recall of the text family's lang-ID model "
+    "against corpus labels (composes text analysis with ml_eval; the "
+    "binary confusion entry's k-class sibling)",
+)
+def ml_multiclass_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-class precision/recall of lang-ID, from ONE confusion pass.
+
+    The full k×k confusion matrix collapses to |classes|² cells in a
+    single combining groupBy; per-class tp/support/pred_n come from
+    conditional sums over that KB-sized table, never a second corpus
+    scan. precision is NULL (not 0) for never-predicted classes —
+    the honest spelling. This is the eval loop every curation
+    classifier (lang, quality, toxicity) runs after retraining."""
+    from oroboro_dw_dbt_spark.text.analysis import lang_id
+
+    docs = load_table(spark, sf_dir, "documents")
+    p = docs.select(
+        F.col("lang").alias("truth"), lang_id("text").alias("pred")
+    )
+    cells = p.groupBy("truth", "pred").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    per_truth = cells.groupBy(F.col("truth").alias("lang")).agg(
+        F.sum("n").cast("bigint").alias("support"),
+        F.sum(F.when(F.col("pred") == F.col("truth"), F.col("n")).otherwise(0))
+        .cast("bigint")
+        .alias("tp"),
+    )
+    per_pred = cells.groupBy(F.col("pred").alias("lang")).agg(
+        F.sum("n").cast("bigint").alias("pred_n")
+    )
+    m = per_truth.join(per_pred, "lang", "left").na.fill({"pred_n": 0})
+    return m.select(
+        "lang",
+        "support",
+        "tp",
+        "pred_n",
+        F.when(
+            F.col("pred_n") == 0, F.lit(None).cast("bigint")
+        )
+        .otherwise(F.expr("tp * 1000000 div pred_n"))
+        .alias("precision_ppm"),
+        F.expr("tp * 1000000 div support").alias("recall_ppm"),
+    )
+
+
+@query(
+    "ml_lift_gains",
+    oracle="""
+    WITH s AS (
+      SELECT vec_id, label % 2 AS y,
+             ((vec_id * 2654435761 + 40503) % 100000) % 600
+               + (label % 2) * 400 AS sx
+      FROM embeddings
+    ),
+    d AS (
+      SELECT y, ntile(10) OVER (ORDER BY sx DESC, vec_id) AS decile FROM s
+    ),
+    agg AS (
+      SELECT CAST(decile AS INT) AS decile,
+             CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS pos
+      FROM d GROUP BY decile
+    ),
+    cum AS (
+      SELECT decile, n, pos,
+             CAST(sum(n) OVER (ORDER BY decile) AS BIGINT) AS cum_n,
+             CAST(sum(pos) OVER (ORDER BY decile) AS BIGINT) AS cum_pos,
+             CAST(sum(n) OVER () AS BIGINT) AS tot_n,
+             CAST(sum(pos) OVER () AS BIGINT) AS tot_pos
+      FROM agg
+    )
+    SELECT decile, n, pos, cum_pos,
+           CAST(round(CAST(cum_pos AS DOUBLE) / tot_pos * 1e6, 0) AS BIGINT)
+             AS gains_micro,
+           CAST(round(CAST(cum_pos * tot_n AS DOUBLE) / (cum_n * tot_pos) * 1e6, 0)
+             AS BIGINT) AS lift_micro
+    FROM cum
+    """,
+    survey_ref="beyond-reference: decile lift & cumulative gains — the "
+    "model-triage table; pinned ntile tie-break, BIGINT statistics",
+)
+def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Decile lift/gains over the synthetic binary scores.
+
+    Scale: ntile is rank-based, so this entry is the exact-ranking
+    shape; at 100 TB the two-phase range-partition ranking
+    (w_rank_twophase) substitutes for the single-partition window with
+    identical output — or the histogram route (ml_* family) replaces
+    deciles with score-bucket bins at zero ordered work."""
+    s = _binary_scores(spark, sf_dir)
+    d = s.withColumn(
+        "decile", F.ntile(10).over(Window.orderBy(F.desc("sx"), "vec_id"))
+    )
+    agg = d.groupBy(F.col("decile").cast("int").alias("decile")).agg(
+        F.count("*").alias("n"), F.sum("y").alias("pos")
+    )
+    wc = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
+    wt = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    cum = agg.select(
+        "decile",
+        "n",
+        "pos",
+        F.sum("n").over(wc).alias("cum_n"),
+        F.sum("pos").over(wc).alias("cum_pos"),
+        F.sum("n").over(wt).alias("tot_n"),
+        F.sum("pos").over(wt).alias("tot_pos"),
+    )
+    return cum.select(
+        "decile",
+        "n",
+        "pos",
+        "cum_pos",
+        F.round(F.col("cum_pos").cast("double") / F.col("tot_pos") * 1e6, 0)
+        .cast("long")
+        .alias("gains_micro"),
+        F.round(
+            (F.col("cum_pos") * F.col("tot_n")).cast("double")
+            / (F.col("cum_n") * F.col("tot_pos"))
+            * 1e6,
+            0,
+        )
+        .cast("long")
+        .alias("lift_micro"),
+    )
+
+
+_PMI_MIN_COUNT = 5
+_PMI_TOPK = 20
+
+
+@query(
+    "ml_cooccurrence_pmi",
+    oracle=f"""
+    WITH toks AS (
+      SELECT doc_id, string_split(trim(text), ' ') AS L FROM documents
+    ),
+    uni AS (
+      SELECT L[i] AS t, CAST(count(*) AS BIGINT) AS c
+      FROM toks, unnest(range(1, len(L) + 1)) AS u(i)
+      WHERE L[i] <> '' GROUP BY 1
+    ),
+    bi AS (
+      SELECT L[i] AS a, L[i + 1] AS b, CAST(count(*) AS BIGINT) AS c_ab
+      FROM toks, unnest(range(1, len(L))) AS u(i)
+      WHERE L[i] <> '' AND L[i + 1] <> '' GROUP BY 1, 2
+    ),
+    tot AS (
+      SELECT (SELECT CAST(sum(c) AS BIGINT) FROM uni) AS n_uni,
+             (SELECT CAST(sum(c_ab) AS BIGINT) FROM bi) AS n_bi
+    )
+    SELECT a, b, c_ab, pmi_nano, rnk FROM (
+      SELECT bi.a, bi.b, bi.c_ab,
+             CAST(round(ln(CAST(bi.c_ab AS DOUBLE) * tot.n_uni * tot.n_uni
+                   / (tot.n_bi * ua.c * ub.c)) * 1e9, 0) AS BIGINT) AS pmi_nano,
+             CAST(row_number() OVER (ORDER BY
+               round(ln(CAST(bi.c_ab AS DOUBLE) * tot.n_uni * tot.n_uni
+                   / (tot.n_bi * ua.c * ub.c)) * 1e9, 0) DESC,
+               bi.a, bi.b) AS INT) AS rnk
+      FROM bi JOIN uni ua ON ua.t = bi.a JOIN uni ub ON ub.t = bi.b
+      CROSS JOIN tot
+      WHERE bi.c_ab >= {_PMI_MIN_COUNT}
+    ) WHERE rnk <= {_PMI_TOPK}
+    """,
+    survey_ref="beyond-reference: PMI collocations over adjacent-token "
+    "bigrams — exact BIGINT counts, one ln(), nano fixed-point, "
+    "ranked on the rounded value",
+)
+def ml_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 bigram collocations by PMI (min support 5).
+
+    pmi = ln(c_ab · N_u² / (N_b · c_a · c_b)) — every operand an
+    exact integer aggregate, so partitioning cannot move the value;
+    ranking runs on the ROUNDED fixed-point (a last-ulp libm
+    difference cannot reorder). Scale: unigram and bigram censuses
+    are combining groupBys over the token stream; the PMI join hits
+    only bigrams past min-support."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.split(F.trim("text"), " ").alias("L")
+    )
+    toks = d.select(F.explode("L").alias("t")).where(F.col("t") != "")
+    uni = toks.groupBy("t").agg(F.count("*").alias("c"))
+    bi = (
+        d.select(
+            F.explode(
+                F.arrays_zip(
+                    F.slice("L", 1, F.size("L") - 1).alias("a"),
+                    F.slice("L", 2, F.size("L") - 1).alias("b"),
+                )
+            ).alias("p")
+        )
+        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .where((F.col("a") != "") & (F.col("b") != ""))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("c_ab"))
+    )
+    tot = uni.agg(F.sum("c").alias("n_uni")).crossJoin(
+        F.broadcast(bi.agg(F.sum("c_ab").alias("n_bi")))
+    )
+    ua = uni.select(F.col("t").alias("a"), F.col("c").alias("ca"))
+    ub = uni.select(F.col("t").alias("b"), F.col("c").alias("cb"))
+    pmi_nano = F.round(
+        F.log(
+            F.col("c_ab").cast("double")
+            * F.col("n_uni")
+            * F.col("n_uni")
+            / (F.col("n_bi") * F.col("ca") * F.col("cb"))
+        )
+        * 1e9,
+        0,
+    ).cast("long")
+    scored = (
+        bi.where(F.col("c_ab") >= _PMI_MIN_COUNT)
+        .join(F.broadcast(ua), "a")
+        .join(F.broadcast(ub), "b")
+        .crossJoin(F.broadcast(tot))
+        .select("a", "b", "c_ab", pmi_nano.alias("pmi_nano"))
+    )
+    w = Window.orderBy(F.desc("pmi_nano"), "a", "b")
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
+        .where(F.col("rnk") <= _PMI_TOPK)
+        .select("a", "b", "c_ab", "pmi_nano", "rnk")
     )

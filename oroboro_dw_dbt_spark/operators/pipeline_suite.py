@@ -12,7 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the mix weights are the single source of truth shared with the
+# corpus-build DAG, so the sp_weighted_mix oracle and the
+# pipe_corpus_build graph cannot drift
+from oroboro_dw_dbt_spark.models.corpus_pipeline import MIX_DEFAULT as _MIX_DEFAULT
+from oroboro_dw_dbt_spark.models.corpus_pipeline import MIX_WEIGHTS as _MIX_WEIGHTS
 from oroboro_dw_dbt_spark.operators.catalog import query
+from oroboro_dw_dbt_spark.operators.training_suite import _TOKS
 from oroboro_dw_dbt_spark.sources.testdata import load_table
 from oroboro_dw_dbt_spark.text.pipeline import (
     PII_PATTERNS,
@@ -22,8 +28,6 @@ from oroboro_dw_dbt_spark.text.pipeline import (
     repetition_signals,
     token_chunks,
 )
-
-_TOKS = "string_split_regex(trim(text), '\\s+')"
 
 
 def _grams_sql(n: int) -> str:
@@ -246,14 +250,6 @@ def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Corpus mixing: deterministic per-source sampling rates
 # ---------------------------------------------------------------------------
-# single source of truth shared with the corpus-build DAG, so the
-# sp_weighted_mix oracle and the pipe_corpus_build graph cannot drift
-from oroboro_dw_dbt_spark.models.corpus_pipeline import (  # noqa: E402
-    MIX_DEFAULT as _MIX_DEFAULT,
-    MIX_WEIGHTS as _MIX_WEIGHTS,
-)
-
-
 def _mix_case_sql() -> str:
     bucket = "substr(md5('v1|' || CAST(doc_id AS VARCHAR)), 1, 4)"
     arms = []
@@ -574,3 +570,72 @@ def udtf_polymorphic_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.lateralJoin(FirstTokens(col("text").outer(), lit(3))).select(
         "doc_id", "g1", "g2", "g3", "n_tokens"
     )
+
+
+@query(
+    "ch_dataset_card",
+    oracle="""
+    WITH base AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(n_chars) AS BIGINT) AS total_chars,
+             CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+             CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+             CAST(round(quantile_cont(n_chars, 0.5) * 1000000, 0) AS BIGINT)
+               AS p50_chars_micro,
+             CAST(round(quantile_cont(n_chars, 0.95) * 1000000, 0) AS BIGINT)
+               AS p95_chars_micro
+      FROM documents
+    ),
+    toks AS (
+      SELECT CAST(count(*) AS BIGINT) AS total_tokens,
+             CAST(count(DISTINCT t) AS BIGINT) AS vocab_size
+      FROM (
+        SELECT unnest(string_split(trim(text), ' ')) AS t FROM documents
+      ) WHERE t <> ''
+    ),
+    dups AS (
+      SELECT CAST(sum(n - 1) AS BIGINT) AS n_exact_dups
+      FROM (SELECT count(*) AS n FROM documents GROUP BY md5(text))
+    )
+    SELECT base.*, toks.total_tokens, toks.vocab_size, dups.n_exact_dups
+    FROM base CROSS JOIN toks CROSS JOIN dups
+    """,
+    survey_ref="beyond-reference: the 1-row dataset card (doc/token/"
+    "char totals, cardinalities, exact-dup count, length percentiles)",
+)
+def ch_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus release card: one row of dataset-level statistics.
+
+    Three aggregates (document stats, token stats off the explode,
+    exact-dup census off the fingerprint groupBy), each fully partial-
+    aggregating, merged by 1-row broadcast cross joins. At 100 TB the
+    exact distinct/percentile columns swap for their sketch twins
+    (sk_approx_distinct / sk_approx_quantiles) with the same card
+    schema."""
+    d = load_table(spark, sf_dir, "documents")
+    base = d.agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_chars").alias("total_chars"),
+        F.countDistinct("lang").alias("n_langs"),
+        F.countDistinct("source").alias("n_sources"),
+        F.round(F.percentile("n_chars", F.lit(0.5)) * 1e6, 0)
+        .cast("long")
+        .alias("p50_chars_micro"),
+        F.round(F.percentile("n_chars", F.lit(0.95)) * 1e6, 0)
+        .cast("long")
+        .alias("p95_chars_micro"),
+    )
+    toks = (
+        d.select(F.explode(F.split(F.trim("text"), " +")).alias("t"))
+        .where(F.col("t") != "")
+        .agg(
+            F.count("*").alias("total_tokens"),
+            F.countDistinct("t").alias("vocab_size"),
+        )
+    )
+    dups = (
+        d.groupBy(F.md5("text").alias("fp"))
+        .agg(F.count("*").alias("n"))
+        .agg(F.sum(F.col("n") - 1).alias("n_exact_dups"))
+    )
+    return base.crossJoin(F.broadcast(toks)).crossJoin(F.broadcast(dups))

@@ -317,193 +317,437 @@ def sql_dialect_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Column profiling: the ANALYZE/docs statistics surface, as data.
+# Regex surface over documents.
 # ---------------------------------------------------------------------------
 @query(
-    "eng_profile_stats",
-    # one UNPIVOT-style pass per column family; stats values ride as
-    # strings so one schema carries numeric and text columns alike
+    "f_regex_suite",
+    # patterns are RE2-and-Java-common (character classes, literals,
+    # unanchored find); DuckDB needs the explicit 'g' flag where Spark's
+    # regexp_replace is always global
     oracle="""
-    SELECT 'c_custkey' AS col, CAST(count(*) AS BIGINT) AS n,
-           CAST(count(*) - count(c_custkey) AS BIGINT) AS n_null,
-           CAST(count(DISTINCT c_custkey) AS BIGINT) AS n_distinct,
-           CAST(min(c_custkey) AS VARCHAR) AS min_val,
-           CAST(max(c_custkey) AS VARCHAR) AS max_val
-    FROM customer
-    UNION ALL
-    SELECT 'c_acctbal', CAST(count(*) AS BIGINT),
-           CAST(count(*) - count(c_acctbal) AS BIGINT),
-           CAST(count(DISTINCT c_acctbal) AS BIGINT),
-           CAST(round(min(CAST(c_acctbal AS DECIMAL(12,4))), 2) AS VARCHAR),
-           CAST(round(max(CAST(c_acctbal AS DECIMAL(12,4))), 2) AS VARCHAR)
-    FROM customer
-    UNION ALL
-    SELECT 'c_mktsegment', CAST(count(*) AS BIGINT),
-           CAST(count(*) - count(c_mktsegment) AS BIGINT),
-           CAST(count(DISTINCT c_mktsegment) AS BIGINT),
-           min(c_mktsegment), max(c_mktsegment)
-    FROM customer
+    SELECT doc_id,
+           regexp_extract(text, '[a-z]*ck[a-z]*') AS first_ck_word,
+           CAST(len(regexp_extract_all(text, 'spark')) AS INT) AS n_spark,
+           regexp_replace(substr(text, 1, 60), '[aeiou]+', '_', 'g')
+             AS devoweled_head,
+           regexp_matches(text, 'query [a-z]+ join') AS has_query_x_join
+    FROM documents
     """,
-    survey_ref="engine lifecycle: column profiling statistics (the "
-    "ANALYZE TABLE / dbt docs surface) — n/nulls/distinct/min/max per "
-    "column in ONE scan via a multi-aggregate",
+    survey_ref="beyond-reference: regex function surface (extract, "
+    "count, global replace, boolean match) — row-local Column ops, "
+    "zero shuffle, shared RE2/Java-safe pattern subset",
 )
-def eng_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-column profile of the customer table: counts, null counts,
-    distinct cardinalities, min/max — the statistics an optimizer's
-    ANALYZE collects and a docs page displays.
-
-    One scan computes EVERY column's aggregates in a single
-    multi-aggregate (Catalyst plans the distinct counts via one
-    expand), then the wide row unpivots to the (col, stat...) long
-    form. At 100 TB this is the profiling pattern: never one scan per
-    column, and distinct counts switch to HLL sketches
-    (sk_approx_distinct / sk_hll_merge) when exactness isn't needed —
-    the exact form here is itself the oracle check."""
-    cust = load_table(spark, sf_dir, "customer")
-    bal = F.col("c_acctbal").cast("decimal(12,4)")
-    wide = cust.agg(
-        F.count(F.lit(1)).alias("n"),
-        # c_custkey
-        (F.count(F.lit(1)) - F.count("c_custkey")).alias("k_null"),
-        F.countDistinct("c_custkey").alias("k_dist"),
-        F.min("c_custkey").cast("string").alias("k_min"),
-        F.max("c_custkey").cast("string").alias("k_max"),
-        # c_acctbal
-        (F.count(F.lit(1)) - F.count("c_acctbal")).alias("b_null"),
-        F.countDistinct("c_acctbal").alias("b_dist"),
-        F.round(F.min(bal), 2).cast("string").alias("b_min"),
-        F.round(F.max(bal), 2).cast("string").alias("b_max"),
-        # c_mktsegment
-        (F.count(F.lit(1)) - F.count("c_mktsegment")).alias("s_null"),
-        F.countDistinct("c_mktsegment").alias("s_dist"),
-        F.min("c_mktsegment").alias("s_min"),
-        F.max("c_mktsegment").alias("s_max"),
+def f_regex_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.select(
+        "doc_id",
+        F.regexp_extract("text", "[a-z]*ck[a-z]*", 0).alias("first_ck_word"),
+        F.regexp_count("text", F.lit("spark")).cast("int").alias("n_spark"),
+        F.regexp_replace(F.substring("text", 1, 60), "[aeiou]+", "_").alias(
+            "devoweled_head"
+        ),
+        F.col("text").rlike("query [a-z]+ join").alias("has_query_x_join"),
     )
-    long = wide.select(
-        F.explode(
+
+
+# ---------------------------------------------------------------------------
+# Decimal arithmetic surface: promotion, exact products, power-of-two
+# division, mod, negation, comparison.
+# ---------------------------------------------------------------------------
+@query(
+    "m_decimal_suite",
+    # every operand is an exact decimal built from an integer; every
+    # result is value-exact at ≤ 6 dp, so the closing CAST to a pinned
+    # scale (then VARCHAR — m_cast_matrix precedent: engines' decimal
+    # wire types differ, strings don't) is lossless on both engines.
+    # Divisions are by powers of two only: DuckDB's decimal division
+    # goes through DOUBLE, which is exact exactly there.
+    oracle="""
+    WITH base AS (
+      SELECT l_orderkey, l_linenumber,
+             CAST(l_quantity AS BIGINT) AS qb
+      FROM lineitem WHERE l_orderkey % 101 = 0
+    )
+    SELECT l_orderkey, l_linenumber,
+      CAST(CAST(qb AS DECIMAL(12,2)) AS VARCHAR) AS d_exact,
+      CAST(CAST(CAST(qb AS DECIMAL(12,3)) * CAST(0.125 AS DECIMAL(4,3))
+                AS DECIMAL(18,6)) AS VARCHAR) AS d_eighth,
+      CAST(CAST(CAST(qb AS DECIMAL(18,6)) / 4 AS DECIMAL(18,6))
+           AS VARCHAR) AS d_quarter,
+      CAST(CAST(CAST(qb AS DECIMAL(10,1)) + CAST(l_linenumber AS DECIMAL(8,3))
+                AS DECIMAL(18,3)) AS VARCHAR) AS d_mixed_add,
+      CAST(CAST(CAST(qb AS DECIMAL(12,2)) % CAST(7 AS DECIMAL(12,2))
+                AS DECIMAL(18,2)) AS VARCHAR) AS d_mod7,
+      CAST(CAST(-CAST(qb AS DECIMAL(12,2)) AS DECIMAL(18,2))
+           AS VARCHAR) AS d_neg,
+      CAST(qb AS DECIMAL(12,2)) > CAST(25.5 AS DECIMAL(4,1)) AS gt_25_5
+    FROM base
+    """,
+    survey_ref="compat (m_safe_math / m_cast_matrix family): decimal "
+    "arithmetic surface — scale promotion on +, exact ×, power-of-two "
+    "÷, %, negation, cross-scale comparison",
+)
+def m_decimal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Decimal semantics as data: Spark's ANSI DecimalType promotion
+    rules produce the same VALUES as DuckDB's (different intermediate
+    precisions — both exact), certified through a pinned-scale cast."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_orderkey") % 101 == 0
+    )
+    qb = F.col("l_quantity").cast("bigint")
+    d = lambda p, s: f"decimal({p},{s})"  # noqa: E731
+    return li.select(
+        "l_orderkey",
+        "l_linenumber",
+        qb.cast(d(12, 2)).cast("string").alias("d_exact"),
+        (qb.cast(d(12, 3)) * F.lit("0.125").cast(d(4, 3)))
+        .cast(d(18, 6))
+        .cast("string")
+        .alias("d_eighth"),
+        (qb.cast(d(18, 6)) / 4).cast(d(18, 6)).cast("string").alias("d_quarter"),
+        (qb.cast(d(10, 1)) + F.col("l_linenumber").cast(d(8, 3)))
+        .cast(d(18, 3))
+        .cast("string")
+        .alias("d_mixed_add"),
+        (qb.cast(d(12, 2)) % F.lit(7).cast(d(12, 2)))
+        .cast(d(18, 2))
+        .cast("string")
+        .alias("d_mod7"),
+        (-qb.cast(d(12, 2))).cast(d(18, 2)).cast("string").alias("d_neg"),
+        (qb.cast(d(12, 2)) > F.lit("25.5").cast(d(4, 1))).alias("gt_25_5"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Bitwise function surface.
+# ---------------------------------------------------------------------------
+@query(
+    "f_bitwise_suite",
+    # all operands non-negative BIGINTs well inside 64 bits; shifts are
+    # small constants, so two's-complement semantics agree everywhere
+    oracle="""
+    SELECT o_orderkey,
+           CAST(o_orderkey & 255 AS BIGINT) AS and_255,
+           CAST(o_orderkey | 4096 AS BIGINT) AS or_4096,
+           CAST(xor(o_orderkey, 1023) AS BIGINT) AS xor_1023,
+           CAST(o_orderkey << 3 AS BIGINT) AS shl_3,
+           CAST(o_orderkey >> 2 AS BIGINT) AS shr_2,
+           CAST(bit_count(o_orderkey) AS INT) AS popcount,
+           CAST(~o_orderkey AS BIGINT) AS inverted
+    FROM orders WHERE o_orderkey % 11 = 0
+    """,
+    survey_ref="beyond-reference: bitwise function surface (&, |, xor, "
+    "shifts, popcount, complement) — the hash/partitioning primitive "
+    "set the sketch and sampling families build on",
+)
+def f_bitwise_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 11 == 0)
+    k = F.col("o_orderkey")
+    return o.select(
+        "o_orderkey",
+        k.bitwiseAND(F.lit(255)).cast("bigint").alias("and_255"),
+        k.bitwiseOR(F.lit(4096)).cast("bigint").alias("or_4096"),
+        k.bitwiseXOR(F.lit(1023)).cast("bigint").alias("xor_1023"),
+        F.shiftleft(k, 3).cast("bigint").alias("shl_3"),
+        F.shiftright(k, 2).cast("bigint").alias("shr_2"),
+        F.bit_count(k).cast("int").alias("popcount"),
+        F.bitwise_not(k).cast("bigint").alias("inverted"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# try_* arithmetic: overflow and division-by-zero as NULL, never error.
+# ---------------------------------------------------------------------------
+@query(
+    "m_try_suite",
+    # Spark's try_add/try_subtract/try_multiply/try_divide semantics
+    # pinned as data (m_cast_matrix precedent): the oracle states the
+    # expected outcomes literally
+    oracle="""
+    SELECT * FROM (VALUES
+      ('big_add', CAST(NULL AS VARCHAR), '9223372036854775806',
+                  '9223372036854775807', '9.223372036854776E18'),
+      ('big_sub', '-9223372036854775805', CAST(NULL AS VARCHAR),
+                  CAST(NULL AS VARCHAR), '-4.6116860184273879E18'),
+      ('at_max', '9223372036854775807', '9223372036854775805',
+                 '9223372036854775806', '9.223372036854776E18'),
+      ('big_mul', '4611686018427387908', '4611686018427387900',
+                  CAST(NULL AS VARCHAR), '1.15292150460684698E18'),
+      ('div_zero', '10', '10', '0', CAST(NULL AS VARCHAR)),
+      ('plain', '12', '-2', '35', '0.7142857142857143')
+    ) AS t(label, try_add_r, try_sub_r, try_mul_r, try_div_r)
+    """,
+    survey_ref="compat (m_safe_math family): try_* arithmetic surface — "
+    "BIGINT overflow and ÷0 degrade to NULL instead of the ANSI error, "
+    "the ingest-hardening mode for untrusted numeric feeds",
+)
+def m_try_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANSI-mode escape hatches as data: each row drives try_add /
+    try_subtract / try_multiply / try_divide through an overflow,
+    underflow, ÷0, or plain case. Row-local, zero shuffle; at 100 TB
+    this is the difference between a poison row killing a stage and a
+    NULL flowing into quarantine."""
+    return spark.sql(
+        """
+        SELECT label,
+               CAST(try_add(a, b) AS STRING) AS try_add_r,
+               CAST(try_subtract(a, b) AS STRING) AS try_sub_r,
+               CAST(try_multiply(a, b) AS STRING) AS try_mul_r,
+               CAST(try_divide(a, b) AS STRING) AS try_div_r
+        FROM VALUES
+          ('big_add',  9223372036854775807L, 1L),
+          ('big_sub',  -9223372036854775807L, 2L),
+          ('at_max',   9223372036854775806L, 1L),
+          ('big_mul',  4611686018427387904L, 4L),
+          ('div_zero', 10L, 0L),
+          ('plain',    5L, 7L)
+        AS t(label, a, b)
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# URL parsing surface.
+# ---------------------------------------------------------------------------
+@query(
+    "f_url_suite",
+    # the URL is synthesized from table columns, so every component is
+    # known by construction — the oracle states the components directly
+    # while Spark must recover them via parse_url
+    oracle="""
+    SELECT doc_id,
+           'https' AS proto,
+           source || '.example.com' AS host,
+           '/docs/' || doc_id AS path,
+           'lang=' || lang || '&n=' || n_chars AS query,
+           lang AS lang_param
+    FROM documents
+    """,
+    survey_ref="beyond-reference: URL parsing surface (parse_url "
+    "PROTOCOL/HOST/PATH/QUERY + keyed query param) — the web-corpus "
+    "normalization primitive (URL dedup keys, domain grouping)",
+)
+def f_url_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recover components of a synthesized URL via parse_url.
+
+    Row-local Column tree, zero shuffle. At 100 TB this is the first
+    step of web-corpus curation: registrable-domain grouping and
+    URL-normalized dedup keys both start from exactly these parts."""
+    docs = load_table(spark, sf_dir, "documents")
+    url = F.concat(
+        F.lit("https://"),
+        F.col("source"),
+        F.lit(".example.com/docs/"),
+        F.col("doc_id"),
+        F.lit("?lang="),
+        F.col("lang"),
+        F.lit("&n="),
+        F.col("n_chars"),
+    )
+    return docs.select(
+        "doc_id",
+        F.parse_url(url, F.lit("PROTOCOL")).alias("proto"),
+        F.parse_url(url, F.lit("HOST")).alias("host"),
+        F.parse_url(url, F.lit("PATH")).alias("path"),
+        F.parse_url(url, F.lit("QUERY")).alias("query"),
+        F.parse_url(url, F.lit("QUERY"), F.lit("lang")).alias("lang_param"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# String surface, second tier: pad / translate / repeat / reverse /
+# split_part / overlay.
+# ---------------------------------------------------------------------------
+@query(
+    "f_string_suite2",
+    # overlay has no DuckDB twin — the oracle reconstructs it from
+    # substr/concat, certifying Spark's builtin against first principles
+    oracle="""
+    SELECT doc_id,
+           lpad(source, 12, '*') AS padded_l,
+           rpad(lang, 6, '.') AS padded_r,
+           translate(source, 'src', 'XYZ') AS translated,
+           repeat(lang, 3) AS repeated,
+           reverse(source) AS reversed_src,
+           split_part(source || '|' || lang || '|' || CAST(doc_id AS VARCHAR),
+                      '|', 2) AS second_field,
+           substr(source, 1, 2) || 'ZZ'
+             || substr(source, 5) AS overlaid
+    FROM documents
+    """,
+    survey_ref="beyond-reference: string surface tier 2 (lpad/rpad, "
+    "translate, repeat, reverse, split_part, overlay-vs-first-"
+    "principles) — completes F1-F9's builtin matrix",
+)
+def f_string_suite2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.select(
+        "doc_id",
+        F.lpad("source", 12, "*").alias("padded_l"),
+        F.rpad("lang", 6, ".").alias("padded_r"),
+        F.translate("source", "src", "XYZ").alias("translated"),
+        F.repeat("lang", 3).alias("repeated"),
+        F.reverse("source").alias("reversed_src"),
+        F.split_part(
+            F.concat_ws("|", "source", "lang", F.col("doc_id").cast("string")),
+            F.lit("|"),
+            F.lit(2),
+        ).alias("second_field"),
+        F.overlay("source", F.lit("ZZ"), 3, 2).alias("overlaid"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Generator functions: stack / posexplode / inline.
+# ---------------------------------------------------------------------------
+@query(
+    "p_generator_suite",
+    # Spark's generators restated as UNION ALL + ordinal arithmetic:
+    # stack(2, a,b,c,d) = two rows of column pairs; posexplode carries
+    # the 0-based ordinal; inline flattens an array of structs
+    oracle="""
+    WITH src AS (
+      SELECT doc_id, source, lang, n_chars FROM documents
+      WHERE doc_id % 37 = 0
+    ),
+    stacked AS (
+      SELECT doc_id, source AS k, CAST(lang AS VARCHAR) AS v FROM src
+      UNION ALL
+      SELECT doc_id, 'chars', CAST(n_chars AS VARCHAR) FROM src
+    ),
+    exploded AS (
+      SELECT doc_id, CAST(i AS INT) AS pos,
+             CAST(doc_id * 10 + i AS BIGINT) AS val
+      FROM src, unnest(range(0, 3)) AS t(i)
+    )
+    SELECT s.doc_id, s.k, s.v, e.pos, e.val
+    FROM stacked s
+    JOIN exploded e ON e.doc_id = s.doc_id
+    """,
+    survey_ref="beyond-reference: generator-function surface (stack, "
+    "posexplode with ordinals, lateral fan-out composition) — the "
+    "builtin row-generator matrix beside the UDTF family",
+)
+def p_generator_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % 37 == 0
+    )
+    stacked = docs.select(
+        "doc_id",
+        F.expr(
+            "stack(2, source, CAST(lang AS STRING),"
+            " 'chars', CAST(n_chars AS STRING)) AS (k, v)"
+        ),
+    )
+    exploded = docs.select(
+        "doc_id",
+        F.posexplode(
             F.array(
-                F.struct(
-                    F.lit("c_custkey").alias("col"),
-                    F.col("n").cast("bigint").alias("n"),
-                    F.col("k_null").cast("bigint").alias("n_null"),
-                    F.col("k_dist").cast("bigint").alias("n_distinct"),
-                    F.col("k_min").alias("min_val"),
-                    F.col("k_max").alias("max_val"),
-                ),
-                F.struct(
-                    F.lit("c_acctbal").alias("col"),
-                    F.col("n").cast("bigint").alias("n"),
-                    F.col("b_null").cast("bigint").alias("n_null"),
-                    F.col("b_dist").cast("bigint").alias("n_distinct"),
-                    F.col("b_min").alias("min_val"),
-                    F.col("b_max").alias("max_val"),
-                ),
-                F.struct(
-                    F.lit("c_mktsegment").alias("col"),
-                    F.col("n").cast("bigint").alias("n"),
-                    F.col("s_null").cast("bigint").alias("n_null"),
-                    F.col("s_dist").cast("bigint").alias("n_distinct"),
-                    F.col("s_min").alias("min_val"),
-                    F.col("s_max").alias("max_val"),
-                ),
+                F.col("doc_id") * 10,
+                F.col("doc_id") * 10 + 1,
+                F.col("doc_id") * 10 + 2,
             )
-        ).alias("r")
+        ).alias("pos", "val"),
+    ).select(
+        "doc_id", F.col("pos").cast("int"), F.col("val").cast("bigint")
     )
-    return long.select("r.col", "r.n", "r.n_null", "r.n_distinct", "r.min_val", "r.max_val")
+    return stacked.join(exploded, "doc_id").select(
+        "doc_id", "k", "v", "pos", "val"
+    )
 
 
 # ---------------------------------------------------------------------------
-# Declarative data-quality constraints, surfaced as a violations report.
+# JSON function surface, tier 2.
 # ---------------------------------------------------------------------------
 @query(
-    "eng_constraint_report",
-    # the dbt-test layer (engine/tests.py) queried as data: one row per
-    # declared constraint with its violation count. Constraints chosen
-    # so SOME fail by construction (accepted_values excluding two
-    # segments; a deliberately-thinned FK reference) — a report whose
-    # rows are all zero certifies nothing.
+    "f_json_suite2",
+    # JSON synthesized from table columns → every extraction's ground
+    # truth is known by construction (the f_url_suite pattern)
     oracle="""
-    SELECT 'not_null(o_custkey)' AS constraint_name, 'orders' AS tbl,
-           CAST(count(*) FILTER (WHERE o_custkey IS NULL) AS BIGINT)
-             AS n_violations
-    FROM orders
-    UNION ALL
-    SELECT 'unique(o_orderkey)', 'orders',
-           CAST(COALESCE(sum(n) FILTER (WHERE n > 1), 0) AS BIGINT)
-    FROM (SELECT count(*) AS n FROM orders GROUP BY o_orderkey)
-    UNION ALL
-    SELECT 'accepted_values(c_mktsegment)', 'customer',
-           CAST(count(*) FILTER (WHERE c_mktsegment NOT IN
-                ('BUILDING', 'AUTOMOBILE', 'MACHINERY')) AS BIGINT)
-    FROM customer
-    UNION ALL
-    SELECT 'relationship(o_custkey -> customer)', 'orders',
-           CAST(count(*) AS BIGINT)
-    FROM orders
-    WHERE o_custkey NOT IN (SELECT c_custkey FROM customer
-                            WHERE c_custkey % 10 != 0)
+    SELECT doc_id,
+           lang AS path_lang,
+           CAST(n_chars AS STRING) AS path_n,
+           source AS path_tag1,
+           CAST(doc_id AS STRING) AS tup_id,
+           CASE WHEN n_chars > 500 THEN 'long' ELSE 'short' END AS tup_cls,
+           NULL AS path_missing
+    FROM documents
     """,
-    survey_ref="engine lifecycle: declarative data tests "
-    "(not_null/unique/accepted_values/relationship, engine/tests.py — "
-    "the dbt-test layer, marts_schema.yml:6-15) queried as a report",
+    survey_ref="beyond-reference: JSON path surface tier 2 "
+    "(get_json_object nested/array paths, json_tuple multi-extract, "
+    "absent-path NULL contract) — complements ev_json_extract/"
+    "ev_variant_extract",
 )
-def eng_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row per declared constraint with its violation count — the
-    data-quality dashboard the engine's test layer feeds.
+def f_json_suite2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """get_json_object / json_tuple over synthesized JSON documents.
 
-    Each count comes from the SAME violations() DataFrames `run()`
-    uses (anti-join for FKs, grouped HAVING for uniqueness, row-local
-    predicates otherwise), so the report certifies the test layer's
-    semantics, not a parallel reimplementation. Two constraints fail by
-    construction — accepted_values lists only 3 of the 5 segments, and
-    the FK reference is thinned to every custkey not divisible by 10 —
-    because an all-zeros report would certify nothing. At 100 TB each
-    constraint is one scan or one anti-join; dbt's pattern of running
-    them per-model after materialization holds unchanged."""
-    from oroboro_dw_dbt_spark.engine.tests import (
-        accepted_values,
-        not_null,
-        relationship,
-        unique_combination_of_columns,
+    Paths exercised: nested object ($.meta.lang), numeric leaf kept as
+    string ($.meta.n), array index ($.tags[1]), multi-field
+    json_tuple, and an absent path (NULL, never an error). Row-local
+    Column trees — the JSON log-extraction shape with zero shuffles."""
+    docs = load_table(spark, sf_dir, "documents")
+    cls = F.when(F.col("n_chars") > 500, "long").otherwise("short")
+    j = F.concat(
+        F.lit('{"id": "'),
+        F.col("doc_id").cast("string"),
+        F.lit('", "cls": "'),
+        cls,
+        F.lit('", "meta": {"lang": "'),
+        F.col("lang"),
+        F.lit('", "n": '),
+        F.col("n_chars").cast("string"),
+        F.lit('}, "tags": ["fixed", "'),
+        F.col("source"),
+        F.lit('"]}'),
+    )
+    raw = docs.select("doc_id", j.alias("j"))
+    tup = F.json_tuple(F.col("j"), "id", "cls")
+    return raw.select(
+        "doc_id",
+        F.get_json_object("j", "$.meta.lang").alias("path_lang"),
+        F.get_json_object("j", "$.meta.n").alias("path_n"),
+        F.get_json_object("j", "$.tags[1]").alias("path_tag1"),
+        tup,
+        F.get_json_object("j", "$.absent.path").alias("path_missing"),
+    ).toDF(
+        "doc_id",
+        "path_lang",
+        "path_n",
+        "path_tag1",
+        "tup_id",
+        "tup_cls",
+        "path_missing",
     )
 
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    thinned = cust.filter(F.col("c_custkey") % 10 != 0)
 
-    def count_row(name: str, tbl: str, violations_df: DataFrame) -> DataFrame:
-        return violations_df.agg(
-            F.lit(name).alias("constraint_name"),
-            F.lit(tbl).alias("tbl"),
-            F.count(F.lit(1)).cast("bigint").alias("n_violations"),
-        ).select("constraint_name", "tbl", "n_violations")
+# ---------------------------------------------------------------------------
+# Table-valued-function SQL surface: byte-identical text on both engines.
+# ---------------------------------------------------------------------------
+_TVF_SQL = """
+    SELECT t.id AS k,
+           v.name AS name,
+           CAST(t.id * v.mult AS BIGINT) AS scaled
+    FROM range(0, 10) AS t(id)
+    JOIN (VALUES ('a', 2), ('b', 3)) AS v(name, mult)
+      ON t.id % 2 = CASE v.name WHEN 'a' THEN 0 ELSE 1 END
+"""
 
-    uniq = unique_combination_of_columns("o_orderkey").violations(orders)
-    rows = [
-        count_row(
-            "not_null(o_custkey)", "orders", not_null("o_custkey").violations(orders)
-        ),
-        # uniqueness reports VIOLATING ROWS (sum of oversized groups)
-        uniq.agg(
-            F.lit("unique(o_orderkey)").alias("constraint_name"),
-            F.lit("orders").alias("tbl"),
-            F.coalesce(F.sum("n_rows"), F.lit(0)).cast("bigint").alias("n_violations"),
-        ).select("constraint_name", "tbl", "n_violations"),
-        count_row(
-            "accepted_values(c_mktsegment)",
-            "customer",
-            accepted_values(
-                "c_mktsegment", ("BUILDING", "AUTOMOBILE", "MACHINERY")
-            ).violations(cust),
-        ),
-        count_row(
-            "relationship(o_custkey -> customer)",
-            "orders",
-            relationship("o_custkey", thinned, "c_custkey").violations(orders),
-        ),
-    ]
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+
+@query(
+    "sql_tvf_surface",
+    # the strongest dialect-parity statement: the oracle string IS the
+    # Spark query string, byte for byte (range() TVF + VALUES inline
+    # table + lateral-style aliasing)
+    oracle=_TVF_SQL,
+    survey_ref="beyond-reference: table-valued-function SQL surface "
+    "(range() TVF, VALUES inline tables, table aliases with column "
+    "lists) — identical SQL text on both engines, zero translation",
+)
+def sql_tvf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """range() + VALUES through spark.sql, byte-identical to the oracle.
+
+    Generator TVFs are how tests, calendars and probe grids enter SQL
+    pipelines without a source table; certifying the same text on both
+    engines pins the surface exactly (the sql_recursive_cte /
+    sql_lateral_topn pattern, third instalment)."""
+    return spark.sql(_TVF_SQL)

@@ -1,5 +1,11 @@
-"""Trained-cell SemDeDup catalog entries and their DuckDB oracles.
+"""SemDeDup catalog entries and their DuckDB oracles.
 
+- ``dd_semdedup`` — SemDeDup-style semantic deduplication (Abbas et
+  al. 2023) over random-hyperplane LSH buckets: pairs are compared ONLY
+  within a bucket (bucket equi-join, never all-pairs), and every vector
+  semantically dominated (cosine ≥ τ) by a lower-id bucket-mate is
+  dropped — a single anti-join decision per vector, no iterative
+  closure.
 - ``dd_semdedup_ivf`` — SemDeDup (Abbas et al. 2023) over TRAINED
   Voronoi cells instead of random hyperplanes: a fixed-point Lloyd
   step (seeds = the C lowest vec_ids, one exact integer centroid
@@ -32,6 +38,7 @@ analog; SURVEY §6 scopes the dedup family.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from oroboro_dw_dbt_spark.dedup.semdedup import (
     IVF_CELLS,
@@ -39,13 +46,78 @@ from oroboro_dw_dbt_spark.dedup.semdedup import (
     IVF_FP,
     SEMDEDUP_TAU,
     _descent_level_sizes,
+    dominance_pairs,
     ivf_cells_capped,
     ivf_cells_for,
     quantized_vectors,
+    sem_planes_for,
     semdedup_ivf_core,
 )
 from oroboro_dw_dbt_spark.operators.catalog import query
+from oroboro_dw_dbt_spark.operators.training_suite import _planes_dot_sql
+from oroboro_dw_dbt_spark.similarity.search import _as_double, hyperplane_bucket, lsh_planes
 from oroboro_dw_dbt_spark.sources.testdata import load_table
+
+
+@query(
+    "dd_semdedup",
+    # Norms are hoisted per VECTOR (nrm column), not recomputed per
+    # pair: dot/(a.nrm*b.nrm) is bit-identical to the _COS spelling
+    # dot/(sqrt(aa)*sqrt(bb)) — same sqrt inputs, same product — and
+    # turns the per-pair cost from 3 folds into 1.
+    oracle=f"""
+    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    b AS (SELECT vec_id, v, sqrt(list_dot_product(b0.v, b0.v)) AS nrm,
+                 {_planes_dot_sql('b0')} AS bucket
+          FROM v b0),
+    dom AS (
+      SELECT c.vec_id AS victim, CAST(min(q.vec_id) AS BIGINT) AS removed_by
+      FROM b q JOIN b c ON q.bucket = c.bucket AND q.vec_id < c.vec_id
+      WHERE round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) >= {SEMDEDUP_TAU}
+      GROUP BY c.vec_id
+    )
+    SELECT b.vec_id, CAST(b.bucket AS INT) AS bucket,
+           CAST(d.victim IS NULL AS INT) AS keep,
+           d.removed_by
+    FROM b LEFT JOIN dom d ON d.victim = b.vec_id
+    """,
+    survey_ref="beyond-reference: SemDeDup semantic dedup — LSH-cell "
+    "pair restriction + lowest-id dominance anti-join, never all-pairs",
+)
+def dd_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semantic dedup over embeddings: keep/removed_by per vector.
+
+    Scale: the only corpus-wide shuffle is the bucket equi-join (cells
+    bound pair counts exactly as IVF cells do); dominance collapses to
+    a per-victim min() — one aggregate, no connected-components
+    iteration, because the keep-lowest-id policy is order-free.
+    Pair work inside a cell is quadratic in OCCUPANCY, so the cell
+    count GROWS with the corpus: planes = sem_planes_for(count) ≈
+    log2(N/32), floored at 6 so the sf0.01 hash is unchanged (the r06
+    10× probe measured 9.5× wall with the count pinned; the knob, not
+    the plan, is what scales). The trained-cell twin of this entry is
+    dd_semdedup_ivf (round7_suite) — k-means-style Voronoi cells, same
+    dominance plan. Norms are hoisted per vector (3 folds/pair → 1),
+    bit-identical to the per-pair spelling."""
+    v = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _as_double("embedding").alias("v")
+    )
+    planes = lsh_planes(sem_planes_for(v.count()), IVF_DIM)
+    b = v.select(
+        "vec_id",
+        "v",
+        hyperplane_bucket(F.col("v"), planes).alias("bucket"),
+    ).localCheckpoint(eager=True)
+    dom = dominance_pairs(b, "bucket", SEMDEDUP_TAU)
+    return (
+        b.join(dom, F.col("vec_id") == F.col("victim"), "left")
+        .select(
+            "vec_id",
+            F.col("bucket").cast("int").alias("bucket"),
+            F.col("victim").isNull().cast("int").alias("keep"),
+            "removed_by",
+        )
+    )
 
 
 # The gate-SF descent is d = 2 with G = ⌈√16⌉ = 4 pivots (the floor

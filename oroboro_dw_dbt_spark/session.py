@@ -18,6 +18,9 @@ One place to pin every config that affects correctness or scale:
   is 60% of physical RAM, not 24g. Every size rule that reads
   ``spark.driver.memory`` (the broadcast gate, the LSH spelling and
   checkpoint-level choices) then believes a heap the host can back.
+  A malformed knob (``SPARK_GRAFT_CPUS=0``, ``SPARK_GRAFT_DRIVER_MEM=lots``)
+  raises ``ValueError`` when read, before any JVM starts, instead of
+  surfacing later as ``local[0]`` or a JVM launch error.
 - Generated classes are reused across repeated builds. The codegen
   cache holds ``CODEGEN_CACHE_ENTRIES`` classes, not Spark's default
   100: a build of the reference mart has 117 distinct classes (after
@@ -42,9 +45,38 @@ from pyspark.sql import SparkSession
 CODEGEN_CACHE_ENTRIES = 1000
 
 
+def parse_mem(s: str) -> int:
+    """'24g' / '512m' / '4gb' / '1t' / bare bytes → bytes.
+
+    Spark accepts both the bare-letter ('4g') and the 'b'-suffixed
+    ('4gb') spellings for every memory conf; ADVICE r11 — the latter
+    used to raise here, crashing verify='auto' on a perfectly valid
+    spark.executor.memory. A trailing 'b' after a unit letter is
+    stripped; a LONE trailing 'b' ('1b') is Spark's explicit-bytes
+    spelling and parses as bare bytes."""
+    s = s.strip().lower()
+    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    if len(s) >= 2 and s[-1] == "b" and s[-2] in mult:
+        s = s[:-1]
+    elif len(s) >= 2 and s[-1] == "b" and s[-2].isdigit():
+        s = s[:-1]
+    if s and s[-1] in mult:
+        return int(float(s[:-1]) * mult[s[-1]])
+    return int(float(s))
+
+
 def host_cpus() -> int:
     """``SPARK_GRAFT_CPUS`` if set, else the host's core count."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if not env:
+        return os.cpu_count() or 1
+    try:
+        n = int(env)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS={env!r}: expected a positive integer core count")
+    return n
 
 
 def driver_memory() -> str:
@@ -52,6 +84,14 @@ def driver_memory() -> str:
     physical RAM, in MiB."""
     env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if env:
+        try:
+            size = parse_mem(env)
+        except (ValueError, OverflowError):
+            size = 0
+        if size < 1:
+            raise ValueError(
+                f"SPARK_GRAFT_DRIVER_MEM={env!r}: expected a memory size such as '4g' or '512m'"
+            )
         return env
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{int(0.6 * ram) >> 20}m"

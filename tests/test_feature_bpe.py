@@ -1,7 +1,6 @@
-"""Tests for the round-6 seventh/eighth waves: distributed BPE
-training (fold-kernel equivalence vs a plain-Python reference) and the
-feature-engineering + BM25 entries (semantic invariants, exactness of
-the integer-statistics route)."""
+"""Tests for distributed BPE training (fold-kernel equivalence vs a
+plain-Python reference) and the feature-engineering + BM25 entries
+(semantic invariants, exactness of the integer-statistics route)."""
 
 from __future__ import annotations
 
@@ -17,7 +16,7 @@ from oroboro_dw_dbt_spark.operators.feature_suite import (
     t_bm25_topk,
     ts_autocorr,
 )
-from oroboro_dw_dbt_spark.operators.round6d_suite import t_bpe_train
+from oroboro_dw_dbt_spark.operators.training_suite import t_bpe_train
 from oroboro_dw_dbt_spark.sources.testdata import load_table
 from oroboro_dw_dbt_spark.text import bpe
 

@@ -132,6 +132,23 @@ class TestWindowRotation:
 
 
 
+def test_window_modules_lead_the_catalog():
+    """The driver's window is the RECERTIFY names, then the first
+    entries in insertion order. Those must come from the relational,
+    analytics and TPC-H modules, whatever other modules are added,
+    split or moved; and no catalog module is filed by round."""
+    from itertools import groupby
+
+    ops_dir = Path(cat.__file__).resolve().parent
+    lead = [cat.QUERIES[n].builder.__module__.rsplit(".", 1)[-1] for n in list(cat.QUERIES)[:56]]
+    assert [(m, len(list(g))) for m, g in groupby(lead)] == [
+        ("relational", 15),
+        ("analytics_suite", 25),
+        ("tpch_suite", 16),
+    ]
+    assert not [p.name for p in ops_dir.glob("round[0-9]*")]
+
+
 class TestProbeEntries:
     def test_record_holds_sink_wall_and_spark_counts(self, spark, tmp_path):
         """The per-entry profiler times the noop sink and records the

@@ -1,6 +1,7 @@
-"""Tests for the round-6 sixth wave (round6c_suite): sequence
-matching, majority-vote labels, bootstrap CIs, URL canonicalization,
-and the interval-overlap join — semantic invariants plus
+"""Tests for 35 catalog entries across the event, window, ML-eval,
+engine, sketch, graph and training-data families: sequence matching,
+majority-vote labels, bootstrap CIs, URL canonicalization, the
+interval-overlap join and more — semantic invariants plus
 naive-equivalence proofs for the bucketed join."""
 
 from __future__ import annotations
@@ -9,14 +10,10 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from oroboro_dw_dbt_spark.operators.round6c_suite import (
-    _B,
-    dd_url_canonical,
-    ev_sequence_match,
-    j_interval_overlap,
-    lab_majority_vote,
-    ml_bootstrap_ci,
-)
+from oroboro_dw_dbt_spark.operators.events_suite import ev_sequence_match
+from oroboro_dw_dbt_spark.operators.extended_suite import j_interval_overlap
+from oroboro_dw_dbt_spark.operators.ml_eval_suite import _B, lab_majority_vote, ml_bootstrap_ci
+from oroboro_dw_dbt_spark.operators.training_suite import dd_url_canonical
 from oroboro_dw_dbt_spark.sources.testdata import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -221,9 +218,7 @@ class TestStatsSummary:
 
 class TestStreamJoinOuter:
     def test_expected_content(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            st_stream_join_outer,
-        )
+        from oroboro_dw_dbt_spark.operators.events_suite import st_stream_join_outer
         from oroboro_dw_dbt_spark.sources.pydatasource import (
             JOIN_SENTINEL_L,
         )
@@ -244,9 +239,7 @@ class TestStreamJoinOuter:
 
 class TestSessionWindow:
     def test_session_bounds_and_mass(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            w_session_window,
-        )
+        from oroboro_dw_dbt_spark.operators.extended_suite import w_session_window
 
         rows = w_session_window(spark, SF).collect()
         ev = load_table(spark, SF, "events")
@@ -277,9 +270,7 @@ class TestTransformWithState:
         import pytest
 
         pytest.importorskip("google.protobuf.descriptor")
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            st_transform_with_state,
-        )
+        from oroboro_dw_dbt_spark.operators.events_suite import st_transform_with_state
 
         got = {
             r["user_id"]: (r["n_events"], r["cents"])
@@ -304,9 +295,7 @@ class TestTransformWithState:
 
 class TestTextSource:
     def test_roundtrip_exact(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            eng_text_source,
-        )
+        from oroboro_dw_dbt_spark.operators.lifecycle_suite import eng_text_source
 
         rows = eng_text_source(spark, SF).collect()
         exp = {
@@ -380,9 +369,7 @@ class TestCloneRestore:
 
 class TestAbAndBoolAgg:
     def test_ab_counts_partition_users(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            ml_ab_proportions,
-        )
+        from oroboro_dw_dbt_spark.operators.ml_eval_suite import ml_ab_proportions
 
         r = ml_ab_proportions(spark, SF01).first()
         users = (
@@ -401,9 +388,7 @@ class TestAbAndBoolAgg:
         assert (r["z"] > 0) == (r["rate_a"] > r["rate_b"])
 
     def test_bool_agg_consistency(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            a_bool_agg_suite,
-        )
+        from oroboro_dw_dbt_spark.operators.extended_suite import a_bool_agg_suite
 
         for r in a_bool_agg_suite(spark, SF01).collect():
             # any_high ⇒ n_big > 0 (990 > 500); all_pos over positive data
@@ -419,9 +404,7 @@ class TestDynamicPartitionOverwrite:
         entry's mode must leave the other days' FILES untouched."""
         import os
 
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            eng_dynamic_partition_overwrite,
-        )
+        from oroboro_dw_dbt_spark.operators.lifecycle_suite import eng_dynamic_partition_overwrite
 
         rows = eng_dynamic_partition_overwrite(spark, SF).collect()
         days = {r["day"].day for r in rows}
@@ -435,9 +418,7 @@ class TestDynamicPartitionOverwrite:
 
 class TestLshRecall:
     def test_census_is_consistent(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            dd_lsh_recall_report,
-        )
+        from oroboro_dw_dbt_spark.operators.training_suite import dd_lsh_recall_report
 
         r = dd_lsh_recall_report(spark, SF01).first()
         assert r["n_tp"] + r["n_fn"] == r["n_truth"]
@@ -452,9 +433,7 @@ class TestLshRecall:
 
 class TestAnnRecallJsonSliding:
     def test_lsh_recall_bounds(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            ss_lsh_recall_report,
-        )
+        from oroboro_dw_dbt_spark.operators.training_suite import ss_lsh_recall_report
 
         rows = ss_lsh_recall_report(spark, SF01).collect()
         assert len(rows) == 8
@@ -474,18 +453,14 @@ class TestAnnRecallJsonSliding:
             assert r["n_hit_multiprobe"] >= r["n_hit"]
 
     def test_json_absent_path_is_null(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            f_json_suite2,
-        )
+        from oroboro_dw_dbt_spark.operators.scalar import f_json_suite2
 
         rows = f_json_suite2(spark, SF).collect()
         assert rows and all(r["path_missing"] is None for r in rows)
         assert all(r["tup_id"] == str(r["doc_id"]) for r in rows)
 
     def test_sliding_mass_is_4x(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            w_sliding_window,
-        )
+        from oroboro_dw_dbt_spark.operators.extended_suite import w_sliding_window
 
         rows = w_sliding_window(spark, SF).collect()
         n_events = load_table(spark, SF, "events").count()
@@ -496,9 +471,7 @@ class TestAnnRecallJsonSliding:
 
 class TestObserveAndProvenance:
     def test_observe_counts_match_direct_agg(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            p_observe_metrics,
-        )
+        from oroboro_dw_dbt_spark.operators.lifecycle_suite import p_observe_metrics
 
         r = p_observe_metrics(spark, SF).first()
         e = load_table(spark, SF, "events")
@@ -506,9 +479,7 @@ class TestObserveAndProvenance:
         assert r["n_neg"] == e.filter(F.col("value") < 0).count()
 
     def test_provenance_one_file_per_day(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            eng_file_provenance,
-        )
+        from oroboro_dw_dbt_spark.operators.lifecycle_suite import eng_file_provenance
 
         rows = eng_file_provenance(spark, SF).collect()
         days = [r["day"] for r in rows]
@@ -521,9 +492,7 @@ class TestObserveAndProvenance:
 class TestIncrementalIndexDegreeTvf:
     def test_incremental_index_equals_rebuild(self, spark):
         from oroboro_dw_dbt_spark.dedup.dedup import minhash_band_index
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            dd_incremental_index,
-        )
+        from oroboro_dw_dbt_spark.operators.training_suite import dd_incremental_index
 
         got = sorted(
             map(tuple, dd_incremental_index(spark, SF).collect())
@@ -541,17 +510,13 @@ class TestIncrementalIndexDegreeTvf:
         assert got3 == full
 
     def test_degree_mass(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            gr_degree_stats,
-        )
+        from oroboro_dw_dbt_spark.operators.graph_suite import gr_degree_stats
 
         rows = gr_degree_stats(spark, SF).collect()
         assert rows and all(r["degree"] >= 1 for r in rows)
 
     def test_tvf_rows(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            sql_tvf_surface,
-        )
+        from oroboro_dw_dbt_spark.operators.scalar import sql_tvf_surface
 
         rows = sorted(map(tuple, sql_tvf_surface(spark, SF).collect()))
         assert len(rows) == 10
@@ -562,19 +527,15 @@ class TestIncrementalIndexDegreeTvf:
 
 class TestSlidingStreamHistQuantiles:
     def test_stream_equals_batch_sliding(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            st_sliding_stream,
-            w_sliding_window,
-        )
+        from oroboro_dw_dbt_spark.operators.events_suite import st_sliding_stream
+        from oroboro_dw_dbt_spark.operators.extended_suite import w_sliding_window
 
         a = sorted(map(tuple, st_sliding_stream(spark, SF).collect()))
         b = sorted(map(tuple, w_sliding_window(spark, SF).collect()))
         assert a == b
 
     def test_quantile_brackets_contain_exact(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            sk_hist_quantiles_merge,
-        )
+        from oroboro_dw_dbt_spark.operators.scale_suite import sk_hist_quantiles_merge
 
         rows = {
             r["pct"]: (r["cents_lo"], r["cents_hi"])
@@ -601,9 +562,7 @@ class TestSlidingStreamHistQuantiles:
 
 class TestMulticlassReport:
     def test_report_invariants(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            ml_multiclass_report,
-        )
+        from oroboro_dw_dbt_spark.operators.ml_eval_suite import ml_multiclass_report
 
         rows = ml_multiclass_report(spark, SF01).collect()
         docs = load_table(spark, SF01, "documents").count()
@@ -621,10 +580,7 @@ class TestMulticlassReport:
 
 class TestToleranceHistoryNegatives:
     def test_tolerance_nulls_stale_matches(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            _TOL_S,
-            tj_asof_tolerance,
-        )
+        from oroboro_dw_dbt_spark.operators.extended_suite import _TOL_S, tj_asof_tolerance
         from oroboro_dw_dbt_spark.ops.temporal import asof_join
 
         ev = load_table(spark, SF, "events")
@@ -665,9 +621,7 @@ class TestToleranceHistoryNegatives:
 
     def test_hard_negatives_are_not_near_dups(self, spark):
         from oroboro_dw_dbt_spark.dedup.dedup import minhash_lsh_pairs
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            sp_hard_negatives,
-        )
+        from oroboro_dw_dbt_spark.operators.training_suite import sp_hard_negatives
 
         docs = load_table(spark, SF01, "documents")
         negs = {
@@ -686,11 +640,7 @@ class TestBloomMembership:
     def test_invariants_and_theory(self, spark):
         import math
 
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            _BF_BITS,
-            _BF_K,
-            sk_bloom_membership,
-        )
+        from oroboro_dw_dbt_spark.operators.scale_suite import _BF_BITS, _BF_K, sk_bloom_membership
 
         r = sk_bloom_membership(spark, SF01).first()
         # THE invariant: a Bloom filter never misses a present key
@@ -706,9 +656,7 @@ class TestBloomMembership:
 
 class TestBloomJoinPrune:
     def test_prune_is_lossless_and_actually_prunes(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            sk_bloom_join_prune,
-        )
+        from oroboro_dw_dbt_spark.operators.scale_suite import sk_bloom_join_prune
 
         got = sorted(
             map(tuple, sk_bloom_join_prune(spark, SF01).collect())
@@ -749,9 +697,7 @@ class TestConcurrencyAndCutoffCurve:
     def test_max_concurrency_vs_naive(self, spark):
         """Sweep-line answer == brute-force day-by-day census at
         sf0.001."""
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            ev_overlap_concurrency,
-        )
+        from oroboro_dw_dbt_spark.operators.events_suite import ev_overlap_concurrency
 
         iv = (
             load_table(spark, SF, "orders")
@@ -784,9 +730,7 @@ class TestConcurrencyAndCutoffCurve:
         assert got == expect
 
     def test_cutoff_curve_monotone_and_anchored(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            t_frequency_cutoff_curve,
-        )
+        from oroboro_dw_dbt_spark.operators.training_suite import t_frequency_cutoff_curve
         from oroboro_dw_dbt_spark.text.analysis import tokens
 
         rows = sorted(
@@ -813,10 +757,7 @@ class TestConcurrencyAndCutoffCurve:
 
 class TestKCore:
     def test_core_properties_and_fixpoint(self, spark):
-        from oroboro_dw_dbt_spark.operators.round6c_suite import (
-            _KCORE_K,
-            gr_kcore,
-        )
+        from oroboro_dw_dbt_spark.operators.graph_suite import _KCORE_K, gr_kcore
 
         rows = gr_kcore(spark, SF01).collect()
         survivors = {r["user_id"] for r in rows if r["in_core"]}

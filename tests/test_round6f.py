@@ -1,4 +1,4 @@
-"""Tests for the round-6 tenth wave: SemDeDup semantic dedup (full
+"""Tests for SemDeDup semantic dedup (full
 numpy recompute of the dominance semantics at sf0.001) and the
 dataset card (field-by-field cross-check)."""
 
@@ -8,12 +8,9 @@ import math
 
 import numpy as np
 
-from oroboro_dw_dbt_spark.dedup.semdedup import SEM_PLANES, SEMDEDUP_TAU
-from oroboro_dw_dbt_spark.operators.round6f_suite import (
-    _SEM_DIM,
-    ch_dataset_card,
-    dd_semdedup,
-)
+from oroboro_dw_dbt_spark.dedup.semdedup import IVF_DIM, SEM_PLANES, SEMDEDUP_TAU
+from oroboro_dw_dbt_spark.operators.pipeline_suite import ch_dataset_card
+from oroboro_dw_dbt_spark.operators.semdedup_suite import dd_semdedup
 from oroboro_dw_dbt_spark.similarity.search import lsh_planes
 from oroboro_dw_dbt_spark.sources.testdata import load_table
 
@@ -28,7 +25,7 @@ class TestSemDedup:
         has rounded cosine ≥ τ, removed_by = min such id."""
         emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding").collect()
         vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in emb}
-        planes = lsh_planes(SEM_PLANES, _SEM_DIM)
+        planes = lsh_planes(SEM_PLANES, IVF_DIM)
 
         def bucket(v):
             out = 0

@@ -1,6 +1,5 @@
-"""Tests for the round-6 eleventh wave (+ the leakage-safe split):
-driver-side recomputes of period-over-period, the capped bipartite
-projection, and PMI collocations."""
+"""Driver-side recomputes of period-over-period, the capped bipartite
+projection and PMI collocations, plus the leakage-safe split."""
 
 from __future__ import annotations
 
@@ -8,12 +7,10 @@ import math
 
 from pyspark.sql import functions as F
 
-from oroboro_dw_dbt_spark.operators.round6f_suite import sp_dedup_aware_split
-from oroboro_dw_dbt_spark.operators.round6g_suite import (
-    gr_bipartite_projection,
-    ml_cooccurrence_pmi,
-    ts_period_over_period,
-)
+from oroboro_dw_dbt_spark.operators.extended_suite import ts_period_over_period
+from oroboro_dw_dbt_spark.operators.graph_suite import gr_bipartite_projection
+from oroboro_dw_dbt_spark.operators.ml_eval_suite import ml_cooccurrence_pmi
+from oroboro_dw_dbt_spark.operators.training_suite import sp_dedup_aware_split
 from oroboro_dw_dbt_spark.sources.testdata import load_table
 
 SF = "/root/testdata/sf0.001"

@@ -1,4 +1,4 @@
-"""Round-7/8 wave: trained-cell SemDeDup and its hierarchical
+"""Trained-cell SemDeDup and its hierarchical
 (two-level, triangle-inequality-pruned) centroid assignment."""
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ from oroboro_dw_dbt_spark.dedup.semdedup import (
     ivf_cells_for,
     quantized_vectors,
 )
-from oroboro_dw_dbt_spark.operators.round7_suite import dd_semdedup_ivf
+from oroboro_dw_dbt_spark.operators.semdedup_suite import dd_semdedup_ivf
 from oroboro_dw_dbt_spark.sources.testdata import load_table
 
 SF = "/root/testdata/sf0.001"

@@ -7,8 +7,9 @@ import os
 import re
 from pathlib import Path
 
-from oroboro_dw_dbt_spark.dedup.dedup import _parse_mem
-from oroboro_dw_dbt_spark.session import driver_memory, host_cpus
+import pytest
+
+from oroboro_dw_dbt_spark.session import driver_memory, get_spark, host_cpus, parse_mem
 
 
 def test_cpus_default_to_host(monkeypatch):
@@ -23,9 +24,31 @@ def test_heap_default_fits_host(monkeypatch):
     24g whatever the host); the env value still wins."""
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    assert 0 < _parse_mem(driver_memory()) <= 0.6 * ram
+    assert 0 < parse_mem(driver_memory()) <= 0.6 * ram
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert driver_memory() == "3g"
+
+
+@pytest.mark.parametrize("value", ["0", "-2", "abc", "lots"])
+def test_malformed_cpus_raise_when_read(monkeypatch, value):
+    """A core count that is not a positive integer fails at the read,
+    naming the knob — not later as ``local[0]`` or a master-URL error."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        host_cpus()
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        get_spark("malformed_cpus")
+
+
+@pytest.mark.parametrize("value", ["0", "-2", "abc", "lots", "inf"])
+def test_malformed_driver_mem_raises_when_read(monkeypatch, value):
+    """A heap size ``parse_mem`` rejects (or a non-positive one) fails
+    at the read, naming the knob — before a JVM launch can fail on it."""
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
+        driver_memory()
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
+        get_spark("malformed_driver_mem")
 
 
 def test_knob_surface():

@@ -42,7 +42,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench import _await_quiet_host, _host_load  # noqa: E402
-from oroboro_dw_dbt_spark.session import driver_memory, get_spark  # noqa: E402
+from oroboro_dw_dbt_spark.session import driver_memory, get_spark, parse_mem  # noqa: E402
 
 
 def _parse_args(argv=None):
@@ -151,10 +151,8 @@ def resolve_stage_confs(sf_dir: str):
     paths = glob.glob(f"{sf_dir}/documents.parquet/*.parquet") or glob.glob(
         f"{sf_dir}/documents.parquet"
     )
-    from oroboro_dw_dbt_spark.dedup.dedup import _parse_mem
-
     est_docs = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
-    if est_docs * 1200 <= 0.25 * _parse_mem(driver_memory()):
+    if est_docs * 1200 <= 0.25 * parse_mem(driver_memory()):
         return None, None, None
     extra = {
         "spark.rdd.compress": "true",
