@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from oroboro_dw_dbt_spark.engine.materialize import materialize
 from oroboro_dw_dbt_spark.session import parse_mem
 from oroboro_dw_dbt_spark.text.analysis import (
     doc_fingerprint,
@@ -82,12 +83,8 @@ def ngram_jaccard_pairs(
     )
 
 
-def _shingled(docs: DataFrame, n: int, materialize: bool) -> DataFrame:
-    """(doc_id, sh) with shingling optionally cut from lineage: the
-    self-join and the verify step would otherwise recompute the shingle
-    arrays once per reference (4× at sf0.1 ≈ 4 full md5 passes).
-    localCheckpoint ≙ the persist-before-reuse a production pipeline
-    does; storage is freed with the DataFrame."""
+def _shingled(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, sh), at least 2×cores wide."""
     # Shingling + MinHash is compute-bound (md5 per shingle), so the
     # stage must be at least as wide as the executor cores. A small-SF
     # parquet file arrives as ONE split (openCost floor + single row
@@ -104,12 +101,7 @@ def _shingled(docs: DataFrame, n: int, materialize: bool) -> DataFrame:
     sc = docs.sparkSession.sparkContext
     if docs.rdd.getNumPartitions() < 2 * sc.defaultParallelism:
         docs = docs.repartition(2 * sc.defaultParallelism)
-    sh = docs.select("doc_id", shingles("text", n).alias("sh"))
-    # EAGER: a lazy checkpoint is not reliably shared between the
-    # branches of the downstream self-join inside a single job — each
-    # branch can recompute the full md5 pipeline (observed 141s vs 5s
-    # at sf0.1). Materializing at build time pins it.
-    return sh.localCheckpoint(eager=True) if materialize else sh
+    return docs.select("doc_id", shingles("text", n).alias("sh"))
 
 
 def _band_explode(sig_df: DataFrame, num_hashes: int, band_rows: int) -> DataFrame:
@@ -144,7 +136,7 @@ def minhash_band_index(
     """(doc_id, band, band_key) posting list — the LSH index itself.
     band_key concatenates `band_rows` signature elements; docs sharing a
     (band, band_key) bucket are candidate near-dups."""
-    sh = _shingles_df if _shingles_df is not None else _shingled(docs, n, False)
+    sh = _shingles_df if _shingles_df is not None else _shingled(docs, n)
     sig = with_minhash_signature(sh, "sh", num_hashes, out="sig").select("doc_id", "sig")
     return _band_explode(sig, num_hashes, band_rows)
 
@@ -160,10 +152,15 @@ def minhash_lsh_pairs(
     verified. The O(n²) compare only ever touches bucket collisions;
     shingles and the band index are materialized once and reused on both
     sides of the self-join (and in the verify step)."""
-    sh = _shingled(docs, n, materialize=True)
-    index = minhash_band_index(
-        docs, n, num_hashes, band_rows, _shingles_df=sh
-    ).localCheckpoint(eager=True)
+    # Shingles are cut from lineage EAGERLY: the self-join and the
+    # verify would otherwise recompute the shingle arrays once per
+    # reference (4× at sf0.1 ≈ 4 full md5 passes), and a lazy
+    # checkpoint is not reliably shared between the branches of one
+    # job (observed 141s vs 5s at sf0.1).
+    sh = materialize(_shingled(docs, n))
+    index = materialize(
+        minhash_band_index(docs, n, num_hashes, band_rows, _shingles_df=sh)
+    )
     a, b = index.alias("a"), index.alias("b")
     candidates = (
         a.join(
@@ -254,27 +251,6 @@ _AUTO_STORAGE_SHARE = 0.25
 _INDEX_BYTES_PER_DOC = 150
 
 
-# Carried bytes per consumer-scan task of an eager checkpoint.
-_CKPT_SCAN_BYTES = 8 * 1024 * 1024
-
-
-def _ckpt_scan_width(n_rows: int, bytes_per_row: int, inherited: int) -> int:
-    """Consumer-scan width for an eager checkpoint (optimization r13,
-    VERDICT r12 Next #6): the md5 stage must run 2×cores wide
-    (compute-bound — the 3.1→0.7 s widening above), but every
-    downstream stage then SCANS the checkpoint at that width — at tiny
-    carried state that is inherited-width × consumers near-empty tasks
-    (dd_minhash_lsh_star: 477 tasks at sf0.1, most over a ~3.5 MB
-    frame). AQE cannot help: it coalesces post-shuffle partitions, not
-    cached-block scans. Size the scan from the carried bytes instead
-    (~8 MB/task target), never wider than the checkpoint itself —
-    applied via coalesce() AFTER the eager materialization, so the
-    compute width and the materialized blocks are untouched and no
-    shuffle is added. At sf30+ the rule returns ≥ the inherited width
-    and the coalesce is a no-op."""
-    return max(1, min(inherited, -(-n_rows * bytes_per_row // _CKPT_SCAN_BYTES)))
-
-
 def _executor_storage_bytes(df: DataFrame) -> int:
     """Total JVM heap backing cached/checkpointed blocks for this
     session: driver heap in local mode, Σ executor heap on a cluster
@@ -292,7 +268,7 @@ def _executor_storage_bytes(df: DataFrame) -> int:
     return per_exec * inst
 
 
-def _auto_lsh_spelling(
+def auto_lsh_spelling(
     docs: DataFrame, n_docs: int | None
 ) -> tuple[str, str | None, dict]:
     """The decision rule from the verify/checkpoint_level docstrings,
@@ -411,26 +387,20 @@ def minhash_lsh_victims(
     probe asserts set equality at sf30). Returns (doc_id) victims.
 
     ``verify="auto"`` / ``checkpoint_level="auto"`` apply the decision
-    rule above as code (see ``_auto_lsh_spelling``): carry's per-doc
+    rule above as code (see ``auto_lsh_spelling``): carry's per-doc
     state × corpus rows vs 25% of executor storage; the choice is
     logged. ``approx_docs`` skips the sizing ``docs.count()`` when the
     caller already knows the corpus size (auto modes only)."""
-    from pyspark.storagelevel import StorageLevel
-
     if verify not in ("carry", "reshingle", "auto"):
         raise ValueError(
             f"verify must be 'carry', 'reshingle' or 'auto', got {verify!r}"
         )
     # ADVICE r10: an unvalidated level ('DISK', 'disk_only', …) used to
     # silently map to default storage — the exact OOM the flag exists
-    # to avoid. Mirror the verify validation.
-    if checkpoint_level not in (None, "disk", "auto"):
-        raise ValueError(
-            f"checkpoint_level must be None, 'disk' or 'auto', got {checkpoint_level!r}"
-        )
+    # to avoid. Past "auto", materialize() rejects any other level.
     n_docs = approx_docs  # known → post-checkpoint scans get data-sized
     if verify == "auto" or checkpoint_level == "auto":
-        auto_v, auto_ckpt, rec = _auto_lsh_spelling(docs, approx_docs)
+        auto_v, auto_ckpt, rec = auto_lsh_spelling(docs, approx_docs)
         n_docs = rec["n_docs"]
         if verify == "auto":
             verify = auto_v
@@ -442,42 +412,33 @@ def minhash_lsh_victims(
             "minhash_lsh_victims auto-spelling: verify=%s checkpoint_level=%s (%s)",
             verify, checkpoint_level, rec,
         )
-    big_level = (
-        StorageLevel.DISK_ONLY if checkpoint_level == "disk" else None
-    )
-    sh = _shingled(docs, n, False)
+    sh = _shingled(docs, n)
     if verify == "carry":
-        base = with_minhash_signature(
-            sh, "sh", num_hashes, out="sig", verify_out="vh"
-        ).select("doc_id", "sig", "vh")
         # ONE corpus pass computes shingles + both salted md5
         # arrays; everything downstream (band explode ×2
         # consumers, verify ×2 sides) derives from this frame.
-        base = base.localCheckpoint(eager=True, storageLevel=big_level)
-        if n_docs is not None:
-            base = base.coalesce(_ckpt_scan_width(
-                n_docs, _CARRY_BYTES_PER_DOC,
-                base.rdd.getNumPartitions(),
-            ))
+        base = materialize(
+            with_minhash_signature(
+                sh, "sh", num_hashes, out="sig", verify_out="vh"
+            ).select("doc_id", "sig", "vh"),
+            level=checkpoint_level, rows=n_docs, row_bytes=_CARRY_BYTES_PER_DOC,
+        )
         index = _band_explode(base, num_hashes, band_rows)
     else:
         sig = with_minhash_signature(sh, "sh", num_hashes, out="sig").select(
             "doc_id", "sig"
         )
-        index = _band_explode(sig, num_hashes, band_rows)
-        index = index.localCheckpoint(eager=True, storageLevel=big_level)
-        if n_docs is not None:
-            index = index.coalesce(_ckpt_scan_width(
-                n_docs, _INDEX_BYTES_PER_DOC,
-                index.rdd.getNumPartitions(),
-            ))
+        index = materialize(
+            _band_explode(sig, num_hashes, band_rows),
+            level=checkpoint_level, rows=n_docs, row_bytes=_INDEX_BYTES_PER_DOC,
+        )
     rep = index.groupBy("band", "band_key").agg(F.min("doc_id").alias("rep"))
-    edges = (
+    edges = materialize(
         index.join(rep, ["band", "band_key"])
         .where(F.col("doc_id") > F.col("rep"))
         .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
         .dropDuplicates()
-    ).localCheckpoint(eager=True)
+    )
     # Semi-join reduction BEFORE the verify joins (the sf1000 rung's
     # lesson): joining edges against the full corpus-sized vh frame
     # shuffles the whole checkpoint TWICE — ~2× corpus of shuffle
@@ -521,12 +482,9 @@ def minhash_lsh_victims(
                 )
             ).alias("vh"),
         )
-    vh = vh.localCheckpoint(eager=True)
     # n_cand is exact here (counted for the broadcast gate): the
     # verify scans this frame twice (doc_a side, doc_b side)
-    vh = vh.coalesce(_ckpt_scan_width(
-        n_cand, _CARRY_BYTES_PER_DOC, vh.rdd.getNumPartitions()
-    ))
+    vh = materialize(vh, rows=n_cand, row_bytes=_CARRY_BYTES_PER_DOC)
     jac = (
         F.size(F.array_intersect(F.col("sa.vh"), F.col("sb.vh"))).cast("double")
         / F.size(F.array_union(F.col("sa.vh"), F.col("sb.vh")))

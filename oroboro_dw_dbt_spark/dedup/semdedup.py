@@ -51,6 +51,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from oroboro_dw_dbt_spark.engine.materialize import materialize
 from oroboro_dw_dbt_spark.similarity.search import _as_double
 
 SEMDEDUP_TAU = 0.4  # dominance threshold of every SemDeDup entry
@@ -999,7 +1000,7 @@ def semdedup_ivf_core(
     # ‖x‖² once per vector: both hierarchical assignments' pruning
     # bounds need it, and it checkpoints with the rest of the frame
     v = v.withColumn("xn", _int_dot(F.col("vi"), F.col("vi")))
-    v = v.localCheckpoint(eager=True)  # reused by 4 downstream stages
+    v = materialize(v)  # reused by 4 downstream stages
     n_rows = v.count()  # checkpointed: a metadata-cheap count
     if callable(n_cells):
         # cells ∝ N callers pass the sizing RULE, not a pre-computed
@@ -1043,7 +1044,7 @@ def semdedup_ivf_core(
     cents = cents.withColumn("cn", _int_dot(F.col("c"), F.col("c")))
     # the updated centroids feed TWO hierarchical stages (grouping +
     # probe + argmin); pin them so the Lloyd lineage isn't re-run
-    cents = cents.localCheckpoint(eager=True)
+    cents = materialize(cents)
 
     a1 = assign_fn(v, cents, n_cells, n_rows=n_rows)
 
@@ -1055,7 +1056,7 @@ def semdedup_ivf_core(
     if occupancy_cap is not None:
         b = _cap_cell_occupancy(b, occupancy_cap)
         dom_col = "_dcell"
-    b = b.localCheckpoint(eager=True)
+    b = materialize(b)
     dom = dominance_pairs(b, dom_col, SEMDEDUP_TAU)
     return b.join(dom, F.col("vec_id") == F.col("victim"), "left").select(
         "vec_id",

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from oroboro_dw_dbt_spark.engine.materialize import materialize
 from oroboro_dw_dbt_spark.operators.catalog import query
 from oroboro_dw_dbt_spark.operators.relational import PRICE_DEC
 from oroboro_dw_dbt_spark.ops.graph import (
@@ -622,22 +623,20 @@ def gr_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth-capped walks and takes the same min."""
     nation = load_table(spark, sf_dir, "nation")
     pairs = _trade_pairs(spark, sf_dir)
-    sym = (
+    sym = materialize(
         pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     seeds = nation.filter(F.col("n_regionkey") == 0).select(
         F.col("n_nationkey").alias("node")
     )
-    state = (
+    state = materialize(
         sym.select("src")
         .distinct()
         .select(F.col("src").alias("node"))
         .join(seeds.withColumn("d0", F.lit(0)), "node", "left")
         .select("node", F.coalesce("d0", F.lit(None).cast("int")).alias("dist"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(8):
         nbr = (
@@ -646,10 +645,9 @@ def gr_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("n2"))
             .agg((F.min("dist") + 1).alias("via"))
         )
-        state = (
+        state = materialize(
             state.join(nbr, state["node"] == F.col("n2"), "left")
             .select("node", F.least("dist", "via").alias("dist"))
-            .localCheckpoint(eager=True)
         )
     return state.select(
         "node", F.coalesce(F.col("dist").cast("int"), F.lit(-1)).alias("dist")
@@ -818,14 +816,13 @@ def gr_hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("anc").alias("h_anc"),
             F.col("d").alias("h_d"),
         )
-        state = (
+        state = materialize(
             state.join(hop, state["anc"] == hop["h_node"])
             .select(
                 "node",
                 F.col("h_anc").alias("anc"),
                 (F.col("d") + F.col("h_d")).alias("d"),
             )
-            .localCheckpoint(eager=True)
         )
     return state.select(
         "node",

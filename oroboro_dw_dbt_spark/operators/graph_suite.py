@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from oroboro_dw_dbt_spark.engine.materialize import materialize
 from oroboro_dw_dbt_spark.operators.analytics_suite import _TRADE_PAIRS_SQL, _trade_pairs
 from oroboro_dw_dbt_spark.operators.catalog import query
 from oroboro_dw_dbt_spark.sources.testdata import load_table
@@ -288,7 +289,7 @@ def gr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     a, b = e.alias("a"), e.alias("b")
-    edges = (
+    edges = materialize(
         a.join(
             b,
             (F.col("a.hr") == F.col("b.hr"))
@@ -298,7 +299,6 @@ def gr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.user_id").alias("src"), F.col("b.user_id").alias("dst")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     all_nodes = edges.select(F.col("src").alias("u")).distinct()
     cur = edges
@@ -309,10 +309,9 @@ def gr_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("d") >= _KCORE_K)
             .select(F.col("src").alias("u"))
         )
-        cur = (
+        cur = materialize(
             cur.join(keep, cur.src == keep.u, "left_semi")
             .join(keep, cur.dst == keep.u, "left_semi")
-            .localCheckpoint(eager=True)
         )
     core = cur.groupBy(F.col("src").alias("u")).agg(
         F.count(F.lit(1)).cast("bigint").alias("core_deg")

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oroboro_dw_dbt_spark.engine.materialize import materialize
 from oroboro_dw_dbt_spark.operators.catalog import query
 from oroboro_dw_dbt_spark.operators.extended_suite import _CENTS, _CENTS_SQL, _cents
 from oroboro_dw_dbt_spark.sources.testdata import load_table
@@ -180,8 +181,8 @@ def eng_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     phases.append(agg(fmt.read(spark, table), "v3_compacted"))
     phases.append(agg(fmt.read(spark, table, version=2), "tt_v2"))
     # materialize the pre-vacuum phases NOW: vacuum deletes the very
-    # dirs those lazy plans point at (localCheckpoint pins the rows)
-    phases = [p.localCheckpoint(eager=True) for p in phases]
+    # dirs those lazy plans point at (the checkpoint pins the rows)
+    phases = [materialize(p) for p in phases]
     reclaimed = fmt.vacuum(table, keep_last=1)
     phases.append(agg(fmt.read(spark, table), "after_vacuum"))
     phases.append(
@@ -1429,7 +1430,7 @@ def eng_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     phases.append(agg(fmt.read(spark, table), "published"))
     fmt.drop_branch(table, "scratch")
     # pin pre-vacuum phases: vacuum deletes the dirs their plans read
-    phases = [p.localCheckpoint(eager=True) for p in phases]
+    phases = [materialize(p) for p in phases]
     reclaimed = fmt.vacuum(table, keep_last=1)
     phases.append(agg(fmt.read(spark, table), "after_vacuum"))
     phases.append(

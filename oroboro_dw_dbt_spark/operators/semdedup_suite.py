@@ -53,6 +53,7 @@ from oroboro_dw_dbt_spark.dedup.semdedup import (
     sem_planes_for,
     semdedup_ivf_core,
 )
+from oroboro_dw_dbt_spark.engine.materialize import materialize
 from oroboro_dw_dbt_spark.operators.catalog import query
 from oroboro_dw_dbt_spark.operators.training_suite import _planes_dot_sql
 from oroboro_dw_dbt_spark.similarity.search import _as_double, hyperplane_bucket, lsh_planes
@@ -96,18 +97,18 @@ def dd_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2(N/32), floored at 6 so the sf0.01 hash is unchanged (the r06
     10× probe measured 9.5× wall with the count pinned; the knob, not
     the plan, is what scales). The trained-cell twin of this entry is
-    dd_semdedup_ivf (round7_suite) — k-means-style Voronoi cells, same
+    dd_semdedup_ivf (this module) — k-means-style Voronoi cells, same
     dominance plan. Norms are hoisted per vector (3 folds/pair → 1),
     bit-identical to the per-pair spelling."""
     v = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
     )
     planes = lsh_planes(sem_planes_for(v.count()), IVF_DIM)
-    b = v.select(
+    b = materialize(v.select(
         "vec_id",
         "v",
         hyperplane_bucket(F.col("v"), planes).alias("bucket"),
-    ).localCheckpoint(eager=True)
+    ))
     dom = dominance_pairs(b, "bucket", SEMDEDUP_TAU)
     return (
         b.join(dom, F.col("vec_id") == F.col("victim"), "left")

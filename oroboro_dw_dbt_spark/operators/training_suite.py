@@ -2522,7 +2522,7 @@ def t_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn 10 BPE merges from documents; return the merge table.
 
     Scale: the corpus is touched exactly once (word-type groupBy);
-    every subsequent job runs on the localCheckpointed type table
+    every subsequent job runs on the checkpointed type table
     (31 rows here; MB-scale for natural language at any corpus size).
     The per-step driver transfer is ONE row — the argmax pair — which
     is the learned artifact itself, not data movement. See

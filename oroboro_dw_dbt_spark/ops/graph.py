@@ -12,10 +12,9 @@ MapReduce and Beyond"):
 repeated to fixpoint. Each sweep is one shuffle (join + groupBy-min);
 the iteration count is the graph diameter, which for near-dup clusters
 is tiny (dup clusters are dense, diameters of 1-3). Lineage is
-truncated per sweep with an eager localCheckpoint — without it the plan
-doubles every iteration and the job dies on plan explosion long before
-data size matters (cluster substitute: persist/checkpoint dir, same as
-the MinHash index note in SCALE.md).
+truncated per sweep with an eager checkpoint (``materialize``) — without
+it the plan doubles every iteration and the job dies on plan explosion
+long before data size matters.
 
 The result is deterministic (min over an unordered set), so the DuckDB
 oracle is a recursive-CTE transitive closure taking min(reachable ∪
@@ -27,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from oroboro_dw_dbt_spark.engine.materialize import materialize
+
 
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 25
@@ -35,16 +36,14 @@ def connected_components(
     component = the minimum node id reachable from the node. Raises if
     not converged within ``max_iter`` sweeps (diameter bound)."""
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = (
+    sym = materialize(
         sym.unionByName(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .dropDuplicates()
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = materialize(
         sym.select(F.col("a").alias("node"))
         .dropDuplicates()
         .withColumn("comp", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iter):
         nbr = (
@@ -53,13 +52,12 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        new = (
+        new = materialize(
             labels.join(nbr, "node", "left")
             .select(
                 "node",
                 F.least(F.col("comp"), F.coalesce("nbr_comp", "comp")).alias("comp"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = (
             new.alias("n")
@@ -81,9 +79,9 @@ def connected_components(
 # join of state against the edge list plus an aggregation, the DRIVER
 # owns the loop (the Pregel pattern on DataFrames; GraphFrames is this
 # productized). Scale shape at 100 TB of edges:
-# - the edge list is scanned once per iteration: persist it
-#   (DISK_ONLY on a cluster) and pre-partition by src so every
-#   iteration's join reuses one partitioning;
+# - the edge list is scanned once per iteration: materialize it once,
+#   pre-partitioned by src, so every iteration's join reuses one
+#   partitioning;
 # - the rank state is |V| rows — joined BY KEY against edges, never
 #   collected; per-edge contributions pre-combine map-side;
 # - iteration count is fixed (power iteration converges geometrically)
@@ -109,28 +107,24 @@ def pagerank(
 
     Lineage grows ~3× per iteration (contribs and dangling both
     re-reference the rank state), so every ``checkpoint_every`` rounds
-    the state is truncated with an eager localCheckpoint — the same
-    plan-explosion guard as connected_components (cluster substitute:
-    a checkpoint dir / persist, values unchanged since all arithmetic
-    is integer-exact).
+    the state is truncated with an eager checkpoint — the same
+    plan-explosion guard as connected_components.
     """
     edges = edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
     # carry each src's total out-weight on the edge rows once, so the
     # per-iteration join is rank ⋈ edges only. Materialize ONCE,
-    # hash-partitioned by src (optimization r12): localCheckpoint
+    # hash-partitioned by src (optimization r12): the checkpoint
     # preserves outputPartitioning, so when ranks outgrow the broadcast
     # threshold every iteration's sort-merge join reuses the edge
     # side's exchange — the EDGE LIST (the scaling side at 100 TB) is
     # shuffled once per run instead of once per iteration. Integer
     # arithmetic is partition-order-free, so results are bit-unchanged.
-    # (persist(DISK_ONLY) replaces localCheckpoint on a cluster.)
-    ew = edges.join(outw, "src").repartition("src").localCheckpoint(eager=True)
-    nodes = (
+    ew = materialize(edges.join(outw, "src").repartition("src"))
+    nodes = materialize(
         ew.select(F.col("src").alias("node"))
         .union(ew.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_nodes = nodes.count()  # one scalar; |V| is needed in the constants
     base = (15 * SCALE) // (100 * n_nodes)  # (1-d)/N at fixed point
@@ -185,7 +179,7 @@ def pagerank(
             ).cast("bigint").alias("r"),
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks)
     return ranks
 
 
@@ -264,7 +258,7 @@ def label_propagation(
     never collected."""
     from pyspark.sql.window import Window
 
-    sym = (
+    sym = materialize(
         edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
         .unionByName(
             edges.select(
@@ -275,13 +269,11 @@ def label_propagation(
         )
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = materialize(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     pick = Window.partitionBy("vnode").orderBy(
         F.col("wt").desc(), F.col("label").asc()
@@ -299,7 +291,7 @@ def label_propagation(
             .select(F.col("vnode").alias("node"), "label")
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            labels = labels.localCheckpoint(eager=True)
+            labels = materialize(labels)
     return labels
 
 
@@ -350,7 +342,7 @@ it{k} AS (
 # + one groupBy(dst) min — identical to a pagerank iteration, so the
 # same prescriptions hold (persist + pre-partition edges by src, state
 # checkpointed every few rounds; here rounds are few, so per-call
-# localCheckpoint of the input suffices). Bounded rounds beat a
+# materialization of the input suffices). Bounded rounds beat a
 # convergence loop on a cluster: no per-round driver count() barrier.
 
 
@@ -364,16 +356,14 @@ def sssp(
     # hash-partition the edge side once (optimization r12, same reuse
     # argument as pagerank): each round's dist ⋈ edges sort-merge join
     # then re-shuffles only the evolving dist frame, never the edges.
-    ew = (
+    ew = materialize(
         edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
         .repartition("src")
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = materialize(
         ew.select(F.col("src").alias("node"))
         .union(ew.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     dist = nodes.withColumn(
         "dist",
@@ -414,7 +404,7 @@ def sssp(
             F.min("d").cast("bigint").alias("dist")
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < rounds:
-            dist = dist.localCheckpoint(eager=True)
+            dist = materialize(dist)
     return dist
 
 

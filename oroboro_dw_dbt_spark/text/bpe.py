@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oroboro_dw_dbt_spark.engine.materialize import materialize
+
 EOW = "</w>"  # end-of-word marker symbol (no LIKE wildcards: cross-engine safe)
 N_MERGES = 10
 
@@ -271,8 +273,8 @@ def train(
     """The BPE merge loop: ``n_merges`` (lhs, rhs, pair_count) rules,
     plus the final segmented word-type table (word, freq, s).
 
-    The segmentation column is MATERIALIZED per pass (localCheckpoint
-    of the KB-scale type table; persist() on a cluster) — applying the
+    The segmentation column is MATERIALIZED per pass (an eager
+    checkpoint of the KB-scale type table) — applying the
     pass's merges to the stored string, never re-deriving from base
     characters. Re-deriving would nest ``apply_merge`` expressions,
     and each level references its input three times, so the expression
@@ -291,9 +293,9 @@ def train(
     — the difference between 50k jobs and ~6k on a real vocab run.
     """
     global LAST_TRAIN_PASSES
-    cur = words.select(
+    cur = materialize(words.select(
         "word", "freq", base_symbols(F.col("word")).alias("s")
-    ).localCheckpoint()
+    ))
     # exact symbol vocabulary, maintained driver-side: base symbols
     # once (alphabet-scale), then every merged token. Freshness checks
     # against it keep the batch selector sound.
@@ -389,9 +391,9 @@ def train(
             # empty batch must never spin the loop
         merges.extend(sel)
         vocab.update(l + r for l, r, _ in sel)
-        cur = cur.withColumn(
+        cur = materialize(cur.withColumn(
             "s", apply_merges(F.col("s"), [(l, r) for l, r, _ in sel])
-        ).localCheckpoint()
+        ))
     LAST_TRAIN_PASSES = passes
     return merges, cur
 

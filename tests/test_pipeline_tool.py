@@ -80,30 +80,22 @@ class TestPipelineSmoke:
 class TestChainPlanAudit:
     def test_chain_plans_have_zero_flags(self, spark):
         """VERDICT r11 Next #8, wired into the round's routine: the
-        4-stage chain AS pipeline_e2e composes it (stage-boundary
+        4-stage chain AS run_chain composes it (stage-boundary
         checkpoints included, headline recall knobs on) must audit
         clean — no cartesian/BNLJ, no BatchEvalPython, no wide scans,
         no unreduced scaling-table broadcast hints — at the smoke SF.
         The sf30 run is the round's manual routine; this keeps the
         composition from drifting into a flag unnoticed."""
-        from tools.explain_audit import (
-            audit_broadcast_hints,
-            audit_one,
-            chain_plan_frames,
-            plan_text,
-        )
+        from tools.explain_audit import chain_plans
 
-        frames = chain_plan_frames(spark, "/root/testdata/sf0.001")
-        assert set(frames) == {
+        audits = chain_plans(spark, "/root/testdata/sf0.001")
+        assert set(audits) == {
             "chain:quality_filter",
             "chain:minhash_lsh_dedup",
             "chain:semdedup_ivf",
             "chain:pack_shards",
         }
-        all_flags = {
-            name: audit_one(name, plan_text(df)) + audit_broadcast_hints(df)
-            for name, df in frames.items()
-        }
+        all_flags = {name: flags for name, (_plan, flags) in audits.items()}
         assert all(not f for f in all_flags.values()), all_flags
 
 
@@ -129,7 +121,7 @@ class TestShuffleWidth:
         return str(tmp_path)
 
     def test_disk_rung_constant_width(self, monkeypatch, tmp_path):
-        from tools.pipeline_e2e import resolve_stage_confs
+        from oroboro_dw_dbt_spark.models.corpus_pipeline import resolve_stage_confs
 
         # 8 docs × ~1.2 KB of live text overrun 25% of a 16 KiB heap
         monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "16k")
@@ -139,7 +131,7 @@ class TestShuffleWidth:
         assert "spark.sql.adaptive.advisoryPartitionSizeInBytes" not in extra
 
     def test_memory_rung_no_width(self, monkeypatch):
-        from tools.pipeline_e2e import resolve_stage_confs
+        from oroboro_dw_dbt_spark.models.corpus_pipeline import resolve_stage_confs
 
         monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
         ck, extra, n = resolve_stage_confs("/root/testdata/sf0.001")

@@ -60,3 +60,26 @@ def test_knob_surface():
         m for f in files for m in re.findall(r"SPARK_GRAFT_([A-Z_]+)", f.read_text())
     }
     assert names == {"CPUS", "DRIVER_MEM", "SF_DIR"}
+
+
+def test_one_materialization_seam():
+    """Every eager checkpoint goes through ``engine.materialize``: no
+    other package module and no tool calls ``localCheckpoint``, and
+    only the seam imports ``StorageLevel``."""
+    import ast
+
+    root = Path(__file__).resolve().parents[1]
+    seam = root / "oroboro_dw_dbt_spark" / "engine" / "materialize.py"
+    files = [*root.glob("oroboro_dw_dbt_spark/**/*.py"), *root.glob("tools/*.py")]
+    calls, imports = [], []
+    for f in files:
+        if f == seam:
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "localCheckpoint":
+                calls.append(f"{f.relative_to(root)}:{node.lineno}")
+            elif isinstance(node, ast.ImportFrom) and any(
+                a.name == "StorageLevel" for a in node.names
+            ):
+                imports.append(f"{f.relative_to(root)}:{node.lineno}")
+    assert calls == [] and imports == [], (calls, imports)

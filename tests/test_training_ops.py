@@ -191,7 +191,7 @@ class TestDedup:
         here against an explicit approx_docs (which drives the rule)
         and by the spellings-identical test below."""
         from oroboro_dw_dbt_spark.dedup import minhash_lsh_victims
-        from oroboro_dw_dbt_spark.dedup.dedup import _ckpt_scan_width
+        from oroboro_dw_dbt_spark.engine.materialize import _ckpt_scan_width
 
         assert _ckpt_scan_width(5_000, 720, 64) == 1  # 3.6 MB -> 1
         assert _ckpt_scan_width(200_000, 720, 64) == 18  # 144 MB -> 18
@@ -248,14 +248,14 @@ class TestDedup:
         fits 25% of executor storage → carry+memory (the sf30 rung); a
         50 M-doc corpus on this 24 g box → reshingle+disk (sf1000)."""
         from oroboro_dw_dbt_spark.dedup.dedup import (
-            _auto_lsh_spelling,
+            auto_lsh_spelling,
             minhash_lsh_victims,
         )
 
         docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-        v, ckpt, rec = _auto_lsh_spelling(docs, 50_000)  # ~sf1 size
+        v, ckpt, rec = auto_lsh_spelling(docs, 50_000)  # ~sf1 size
         assert (v, ckpt) == ("carry", None)
-        v, ckpt, rec = _auto_lsh_spelling(docs, 50_000_000)  # sf1000
+        v, ckpt, rec = auto_lsh_spelling(docs, 50_000_000)  # sf1000
         assert (v, ckpt) == ("reshingle", "disk")
         assert rec["carry_state_bytes"] > rec["storage_budget_bytes"]
         # end-to-end: auto resolves and produces the same victims

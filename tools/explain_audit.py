@@ -22,6 +22,7 @@ absence proves nothing. JVM-sidedness is covered by the
 BatchEvalPython check instead.)
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
+       python tools/explain_audit.py --chain [sf_dir]
 Writes per-query plans under /tmp/plan_audit/ and prints a PASS/FLAG
 line per query + a summary; exit 1 on any flag.
 """
@@ -215,92 +216,65 @@ def build_plan_frames(spark, sf_dir: str) -> dict[str, "object"]:
     return {f"build:{n}": df for n, df in graph.plan_frames(spark).items()}
 
 
-def chain_plan_frames(
+def audit_frame(name: str, df) -> tuple[str, list[str]]:
+    """(formatted plan, flags) for one frame."""
+    plan = plan_text(df)
+    return plan, audit_one(name, plan) + audit_broadcast_hints(df)
+
+
+def chain_plans(
     spark, sf_dir: str, margin: float = 0.1, spill: float = 0.3,
     nprobe: int = 16,
-) -> dict[str, "object"]:
-    """The 4-stage training-data chain (VERDICT r11 Next #8), built
-    from THE SAME stage builders tools/pipeline_e2e.py main() times
-    (corpus_frame/neardup_frame/semantic_frame/final_frame/
-    shards_frame — one composition, two consumers, so the audited
-    plan cannot drift from what the rungs run), with the same
-    stage-boundary eager checkpoints and the headline recall knobs on.
-    Yields each stage's pre-checkpoint frame: the tree that stage
-    actually executes on top of the previous stage's truncated
-    lineage, which the per-entry catalog audit can't see."""
-    from tools.pipeline_e2e import (
-        corpus_frame,
-        final_frame,
-        neardup_frame,
-        resolve_lsh_spelling,
-        semantic_frame,
-        semantic_vectors,
-        shards_frame,
-    )
+) -> dict[str, tuple[str, list[str]]]:
+    """``{"chain:<stage>": (plan, flags)}`` for the 4-stage chain
+    (VERDICT r11 Next #8) as ``run_chain`` composes it, headline recall
+    knobs on: each stage's pre-checkpoint frame, the tree it executes
+    on the previous stage's truncated lineage (which the per-entry
+    audit can't see), audited when its stage ends and not kept."""
+    from oroboro_dw_dbt_spark.models.corpus_pipeline import run_chain
 
-    frames: dict[str, object] = {}
-    corpus_pre = corpus_frame(spark, sf_dir)
-    frames["chain:quality_filter"] = corpus_pre
-    corpus = corpus_pre.localCheckpoint(eager=True)
-    n_corpus = corpus.count()
-    lsh_verify, lsh_ckpt, _ = resolve_lsh_spelling(corpus, n_corpus, None)
-    deduped_pre = neardup_frame(corpus, n_corpus, lsh_verify, lsh_ckpt)
-    frames["chain:minhash_lsh_dedup"] = deduped_pre
-    deduped = deduped_pre.localCheckpoint(eager=True)
-    v = semantic_vectors(spark, sf_dir, deduped)
-    sem, _ = semantic_frame(
-        v, v.count(), nprobe=nprobe, probe_margin=margin,
-        group_spill=spill,
+    audits: dict[str, tuple[str, list[str]]] = {}
+
+    def audit_stage(stage, frame):
+        audits[f"chain:{stage}"] = audit_frame(f"chain:{stage}", frame)
+
+    run_chain(
+        spark, sf_dir, level=None, nprobe=nprobe, probe_margin=margin,
+        group_spill=spill, spill_cap=8, after_stage=audit_stage,
     )
-    frames["chain:semdedup_ivf"] = sem
-    final = final_frame(deduped, sem).localCheckpoint(eager=True)
-    frames["chain:pack_shards"] = shards_frame(final)
-    return frames
+    return audits
 
 
 def main() -> int:
-    if len(sys.argv) > 1 and sys.argv[1] == "--chain":
-        # chain mode: audit the composed pipeline's stage plans
-        sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/spark_graft_sf30"
-        spark = get_spark("plan_audit_chain")
-        out_dir = Path("/tmp/plan_audit")
-        out_dir.mkdir(exist_ok=True)
-        n_flags = 0
-        frames = chain_plan_frames(spark, sf_dir)
-        for name, df in frames.items():
-            plan = plan_text(df)
-            (out_dir / f"{name.replace(':', '_')}.txt").write_text(plan)
-            flags = audit_one(name, plan) + audit_broadcast_hints(df)
-            if flags:
-                n_flags += len(flags)
-                print(f"FLAG {name}: {'; '.join(flags)}")
-            else:
-                print(f"pass {name}")
-        print(f"\n{n_flags} flags across {len(frames)} chain plans")
-        return 1 if n_flags else 0
-
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    names = sys.argv[2:] or [n for n in QUERIES if n not in SKIP]
-    spark = get_spark("plan_audit")
     out_dir = Path("/tmp/plan_audit")
     out_dir.mkdir(exist_ok=True)
-    n_flags = 0
-
-    builds = build_plan_frames(spark, sf_dir) if not sys.argv[2:] else {}
-    todo = [(n, None) for n in names if n not in SKIP]
-    todo += [(n, df) for n, df in builds.items()]
-    for name, df in todo:
-        if df is None:
-            df = QUERIES[name].builder(spark, sf_dir)
-        plan = plan_text(df)
+    if sys.argv[1:2] == ["--chain"]:
+        # chain mode: audit the composed pipeline's stage plans
+        sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
+        audits = chain_plans(get_spark("plan_audit_chain"), sf_dir).items()
+        what = "chain plans"
+    else:
+        sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+        names = sys.argv[2:] or [n for n in QUERIES if n not in SKIP]
+        spark = get_spark("plan_audit")
+        builds = build_plan_frames(spark, sf_dir) if not sys.argv[2:] else {}
+        todo = [(n, None) for n in names if n not in SKIP]
+        todo += [(n, df) for n, df in builds.items()]
+        audits = (
+            (n, audit_frame(n, QUERIES[n].builder(spark, sf_dir) if df is None else df))
+            for n, df in todo
+        )
+        what = "plans"
+    n_plans = n_flags = 0
+    for name, (plan, flags) in audits:
+        n_plans += 1
         (out_dir / f"{name.replace(':', '_')}.txt").write_text(plan)
-        flags = audit_one(name, plan) + audit_broadcast_hints(df)
         if flags:
             n_flags += len(flags)
             print(f"FLAG {name}: {'; '.join(flags)}")
         else:
             print(f"pass {name}")
-    print(f"\n{n_flags} flags across {len(todo)} plans (plans in {out_dir}/)")
+    print(f"\n{n_flags} flags across {n_plans} {what} (plans in {out_dir}/)")
     return 1 if n_flags else 0
 
 
