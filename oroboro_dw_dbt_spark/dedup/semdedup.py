@@ -11,9 +11,11 @@ Two cell families feed one dominance stage:
   dominance. Coordinates are micro fixed-point BIGINTs
   (:func:`quantized_vectors`), so every step is exact integer
   arithmetic and a DuckDB oracle certifies it bit-for-bit. Assignment
-  is either exact (:func:`assign_cells`: flat GEMM or the two-level
-  triangle-pruned :func:`hier_assign`) or the cells ∝ N greedy
-  descent (:func:`greedy_assign`, sized by :func:`ivf_cells_capped`).
+  is either exact (:func:`flat_assign`: one map-side GEMM against the
+  driver-collected centroid table, C ∝ √N from :func:`ivf_cells_for`)
+  or, at scale, the cells ∝ N greedy descent (:func:`greedy_assign`,
+  sized by :func:`ivf_cells_capped`, cells occupancy-capped). Both
+  score through one tiled exact argmin (:func:`_tiled_argmin`).
 
 Dominance kernel (:func:`dominance_pairs`): within each cell, a vector
 is removed iff some LOWER-id cell-mate is cosine-≥-τ similar, and
@@ -142,10 +144,10 @@ def ivf_cells_for(n: int) -> int:
     sqrt-scaling balances the two stage costs: nearest-centroid
     assignment is N·C dot products and within-cell pair work is
     ~N²/C, so C ∝ √N puts both at N^1.5 (the classic IVF operating
-    point; FAISS's rule of thumb is C = O(√N)). At 100 TB the
-    assignment stage itself goes hierarchical — probe only the
-    nearest coarse centroids, as ivf_topk does for queries — which
-    restores ~linear total work with this same downstream plan."""
+    point; FAISS's rule of thumb is C = O(√N)). Past that the scale
+    spelling is cells ∝ N (:func:`ivf_cells_capped`) with the greedy
+    descent, which keeps total work ~linear with this same
+    downstream plan."""
     return max(IVF_CELLS, math.ceil(math.sqrt(n / 8)))
 
 
@@ -161,21 +163,6 @@ def _int_dot(a, b):
     )
 
 
-# Conservative slack (micro-units) absorbing sqrt's ≤0.5-ulp rounding
-# in the pruning bounds (values ≤ 1.6e7 → ulp ≈ 4e-9; 1e-3 is ~10⁶×
-# that). Slack only ever ADMITS extra candidates — the exact integer
-# argmin downstream is unaffected, so correctness never rests on it.
-_HIER_EPS = 1e-3
-
-
-# Flat/hierarchical dispatch boundary: below this many centroids the
-# whole centroid table is a KB-scale driver constant (256 cells × 64
-# dims × 8 B = 131 KB) and the two-level probe's fixed price (pivot
-# selection, grouping, radii, cogroup exchanges) buys nothing — the
-# r07 flat path is ~2× faster at sf0.1 (VERDICT r08 What's-wrong #3).
-# Above it the hierarchical probe caps the broadcast at O(√C).
-_FLAT_MAX_CELLS = 256
-
 # Per-task candidate budget for the salted cogroup (ADVICE r08): a
 # group key's whole candidate set must never ride one pandas frame —
 # on no-pruning geometry that is ~N rows of dim-64 int64 on ONE task.
@@ -183,31 +170,18 @@ _FLAT_MAX_CELLS = 256
 # executor; the salt count scales with the corpus to hold this.
 _SALT_TARGET_ROWS = 200_000
 
-
-def assign_cells(
-    v: DataFrame, cent_df: DataFrame, n_cells: int, n_rows: int | None = None
-) -> DataFrame:
-    """EXACT nearest-centroid assignment, size-dispatched.
-
-    Small C (≤ ``_FLAT_MAX_CELLS``): :func:`flat_assign` — the whole
-    centroid table is collected once (KB-scale) and every vector is
-    scored by one int64 GEMM inside ``mapInPandas``; ZERO shuffles.
-    Large C: :func:`hier_assign` — the two-level triangle-inequality
-    probe that never broadcasts more than O(√C) rows. Both paths are
-    exact with the identical lowest-cell tie-break, so the dispatch
-    boundary cannot move a result bit (pinned by
-    tests/test_round7.py's flat-vs-hier equality test)."""
-    if n_cells <= _FLAT_MAX_CELLS:
-        return flat_assign(v, cent_df)
-    return hier_assign(v, cent_df, n_cells, n_rows=n_rows)
+# Score-matrix tile budget of :func:`_tiled_argmin`, in int64 elements
+# (~4M = 32 MB per temporary).
+_TILE_ELEMS = 1 << 22
 
 
 def flat_assign(v: DataFrame, cent_df: DataFrame) -> DataFrame:
-    """Exact nearest-centroid assignment with a driver-collected
-    centroid table: C·dim int64s (KBs at the dispatch boundary) ride
-    the task closure, every vector batch is scored by one int64 GEMM,
-    argmin over cell-ascending columns IS the lowest-id tie-break.
-    No shuffle, no cogroup — the whole assignment is map-side."""
+    """EXACT nearest-centroid assignment with a driver-collected
+    centroid table: C·dim int64s (KBs at the certified C = 16, ~1.3 MB
+    at C = 2,500) ride the task closure and every vector batch is
+    scored by :func:`_tiled_argmin`, so the lowest cell id wins ties
+    and no temporary outgrows one tile at any C. No shuffle, no
+    cogroup — the whole assignment is map-side."""
     import numpy as np
     import pandas as pd
 
@@ -218,20 +192,16 @@ def flat_assign(v: DataFrame, cent_df: DataFrame) -> DataFrame:
     cells = np.array([r["cell"] for r in rows], dtype=np.int64)
     cm = np.array([r["c"] for r in rows], dtype=np.int64)
     cn = np.array([r["cn"] for r in rows], dtype=np.int64)
+    tile_elems = _TILE_ELEMS  # bound on the driver: the closure ships it
 
     def it_kernel(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             vm = np.stack(pdf["vi"].to_numpy()).astype(np.int64, copy=False)
-            dots = _exact_int_gemm(vm, cm)
-            scores = cn[None, :] - 2 * dots
-            j = scores.argmin(axis=1)  # first-min = lowest cell id
+            _, cell = _tiled_argmin(vm, cm, cn, cells, tile_elems)
             yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "cell": cells[j],
-                }
+                {"vec_id": pdf["vec_id"].to_numpy(dtype=np.int64), "cell": cell}
             )
 
     return v.select("vec_id", "vi").mapInPandas(it_kernel, "vec_id long, cell long")
@@ -244,7 +214,7 @@ def _exact_int_gemm(vm, cm):
     dgemm computes the SAME integers exactly whenever every dot
     product's partial sums stay below 2^53 — true by a wide margin for
     micro-fixed-point coordinates (|vi| ≤ ~1e6, dim 64 → |dot| ≤
-    ~6.4e13 ≈ 2^46). The bound is CHECKED per batch, falling back to
+    ~6.4e13 ≈ 2^46). The bound is CHECKED per call, falling back to
     the exact int64 loop on data that could overflow the mantissa."""
     import numpy as np
 
@@ -260,61 +230,30 @@ def _exact_int_gemm(vm, cm):
     return vm @ cm.T  # pragma: no cover - beyond the quantizer's range
 
 
-def hier_assign(
-    v: DataFrame, cent_df: DataFrame, n_cells: int, n_rows: int | None = None
-) -> DataFrame:
-    """EXACT nearest-centroid assignment with a two-level probe:
-    broadcast O(√C) coarse rows, not all C centroids.
+def _tiled_argmin(vm, cm, cn, cells, tile_elems=_TILE_ELEMS):
+    """(score, cell) per row of ``vm``: the exact integer argmin of
+    ``cn − 2·(vm · cm.T)`` over centroid columns sorted by cell id, so
+    numpy's first-min IS the lowest-cell tie-break.
 
-    The flat spelling broadcasts every centroid to every vector — at
-    100 TB with C ∝ √N centroids that broadcast grows to ~GB (VERDICT
-    r07 Missing #2). Here the centroids themselves are grouped under
-    G = ⌈√C⌉ coarse pivots (the G lowest cell ids), each group carrying
-    its covering radius r_g = max distance pivot→member. Per vector:
+    Rows are scored in TILES of ~``tile_elems`` scores: a whole batch's
+    score matrix can be GBs (the sf100 pathology: one skewed group
+    scored 235k vectors × 6.8k centroids — a 13 GB int64 matrix, and
+    the kernel's three temporaries tripled it; the task spent its wall
+    in allocation and page faults, not FLOPs). ~4M-element tiles
+    (32 MB) keep every temporary cache-resident; per-row argmin is
+    independent, so tiling is exact."""
+    import numpy as np
 
-    1. score the G pivots map-side (ONE broadcast row holding the
-       pivot array — √C·dim ints, KBs where the flat broadcast was
-       MBs/GBs) and form U = min_g(d_g + r_g), an upper bound on the
-       true nearest-centroid distance;
-    2. keep only groups whose lower bound d_g − r_g ≤ U (triangle
-       inequality — the pruned groups PROVABLY contain no winner,
-       and every tie of the winning score survives, so the lowest-id
-       tie-break is preserved bit-for-bit);
-    3. cogroup the surviving (vec_id, group) pairs with the
-       group-keyed centroid table and score each group with ONE
-       int64 ``vi_mat @ c_mat.T`` (Arrow batches, exact integer
-       matmul — all values < 2⁶³, numpy integer matmul never leaves
-       int64); per-group winner = argmin over centroid columns
-       PRE-SORTED by cell id, so numpy's first-min rule IS the
-       lowest-id tie-break;
-    4. one map-side-combinable min_by folds the per-group winners
-       into the global (score, cell) argmin per vector.
-
-    Bounds use double sqrt on EXACT integer squared distances (all
-    < 2⁵³), padded by ``_HIER_EPS``; the scoring never leaves BIGINT,
-    so the assignment — and the certified sf0.01 hash — is identical
-    to the flat crossJoin's by construction, at any C. The GEMM step
-    replaces a per-pair Catalyst ``aggregate(zip_with(...))`` fold
-    that allocated a 64-element array per (vector, centroid) pair —
-    the measured dominant term of the sf10 chained-pipeline run —
-    with the same Arrow/GEMM idiom as the dominance kernel
-    (dedup/semdedup.py).
-    Salted cogroup (ADVICE r08): a group key's candidate set can be
-    ~N rows on no-pruning geometry — too big for one pandas frame on
-    one task. Candidates are salted by ``hash(vec_id) % S`` and the
-    KB-scale centroid side is replicated per salt, so each task holds
-    ≤ ~``_SALT_TARGET_ROWS`` candidates while every vector still meets
-    all of its group's centroids. The per-(g,salt) winners fold into
-    the global argmin through the same min_by — subgroup minima of a
-    min are the min, and the (score, cell) struct ordering preserves
-    the lowest-id tie-break bit-for-bit at any S (S=1 ≡ unsalted; the
-    salted-equality test pins it).
-
-    ``cent_df``: (cell, c array<long>, cn long). ``v`` must carry
-    ``xn`` = vi·vi; ``n_rows`` (if known) sizes the salt count."""
-    cand, grouped = _hier_parts(v, cent_df, n_cells)
-    salts = _salt_count(v, n_rows)
-    return _score_groups(cand, grouped.select("g", "cell", "c", "cn"), salts)
+    tile = max(256, tile_elems // max(1, len(cm)))
+    out_score = np.empty(len(vm), dtype=np.int64)
+    out_cell = np.empty(len(vm), dtype=np.int64)
+    for s in range(0, len(vm), tile):
+        vt = vm[s : s + tile]
+        scores = cn[None, :] - 2 * _exact_int_gemm(vt, cm)
+        j = scores.argmin(axis=1)
+        out_score[s : s + len(vt)] = scores[np.arange(len(vt)), j]
+        out_cell[s : s + len(vt)] = cells[j]
+    return out_score, out_cell
 
 
 def _salt_count(v: DataFrame, n_rows: int | None) -> int:
@@ -334,10 +273,11 @@ def _score_groups(cand: DataFrame, cent_side: DataFrame, salts: int) -> DataFram
     table into the exact per-vector (score, cell) argmin: a salted
     cogroup (each task holds ≤ ~``_SALT_TARGET_ROWS`` candidates, the
     KB-scale centroid side replicated per salt) scoring each group
-    with ONE int64 GEMM, then one map-side-combinable min_by. Lowest-
-    cell ties are preserved at any salt count: the kernel's first-min
-    over cell-ascending columns is the lowest id within a task, and
-    the (score, cell) struct ordering keeps it across tasks."""
+    with :func:`_tiled_argmin`, then one map-side-combinable min_by.
+    Lowest-cell ties are preserved at any salt count: the kernel's
+    first-min over cell-ascending columns is the lowest id within a
+    task, and the (score, cell) struct ordering keeps it across
+    tasks."""
     import numpy as np
     import pandas as pd
 
@@ -353,30 +293,17 @@ def _score_groups(cand: DataFrame, cent_side: DataFrame, salts: int) -> DataFram
         pdf_c = pdf_c.sort_values("cell")  # first-min argmin = lowest id
         vm = np.stack(pdf_v["vi"].to_numpy()).astype(np.int64, copy=False)
         cm = np.stack(pdf_c["c"].to_numpy()).astype(np.int64, copy=False)
-        cn = pdf_c["cn"].to_numpy(dtype=np.int64)
-        cells = pdf_c["cell"].to_numpy(dtype=np.int64)
-        # TILE the candidate rows: a whole group's score matrix can be
-        # GBs (the sf100 pathology: one skewed group scored 235k
-        # vectors × 6.8k centroids — a 13 GB int64 matrix, and the
-        # kernel's three temporaries tripled it; the task spent its
-        # wall in allocation and page faults, not FLOPs). ~4M-element
-        # tiles (32 MB) keep every temporary cache-resident; per-row
-        # argmin is independent, so tiling is exact.
-        tile = max(256, (1 << 22) // max(1, len(cm)))
-        out_score = np.empty(len(vm), dtype=np.int64)
-        out_cell = np.empty(len(vm), dtype=np.int64)
-        for s in range(0, len(vm), tile):
-            vt = vm[s : s + tile]
-            scores = cn[None, :] - 2 * _exact_int_gemm(vt, cm)
-            j = scores.argmin(axis=1)
-            r = np.arange(len(vt))
-            out_score[s : s + len(vt)] = scores[r, j]
-            out_cell[s : s + len(vt)] = cells[j]
+        score, cell = _tiled_argmin(
+            vm,
+            cm,
+            pdf_c["cn"].to_numpy(dtype=np.int64),
+            pdf_c["cell"].to_numpy(dtype=np.int64),
+        )
         return pd.DataFrame(
             {
                 "vec_id": pdf_v["vec_id"].to_numpy(dtype=np.int64),
-                "score": out_score,
-                "cell": out_cell,
+                "score": score,
+                "cell": cell,
             }
         )
 
@@ -399,143 +326,6 @@ def _score_groups(cand: DataFrame, cent_side: DataFrame, salts: int) -> DataFram
     return per_group.groupBy("vec_id").agg(
         F.min_by("cell", F.struct("score", "cell")).alias("cell")
     )
-
-
-def _kcenter_pivots(cent_df: DataFrame, n_groups: int) -> DataFrame:
-    """Deterministic greedy k-center pivot selection (Gonzalez 1985)
-    over a BOUNDED sample of centroids.
-
-    Pivot quality decides pruning power: group radii shrink only when
-    each pivot anchors a geometrically compact group, and the first-G-
-    ids choice can land every pivot in one corner. Greedy farthest-
-    point gives the classic 2-approximation to the optimal covering
-    radius. Runs on the driver over ≤ max(64, 4G) lowest-id centroid
-    rows — O(√C) rows collected, the same driver budget ivf_topk
-    already spends on its centroid list — with float64 distances
-    (selection needs determinism, not exactness: ANY pivot set is
-    correct, the bounds stay conservative) and index-order tie-breaks.
-    Start point = lowest cell id."""
-    import numpy as np
-
-    sample_n = max(64, 4 * n_groups)
-    rows = (
-        cent_df.orderBy("cell").limit(sample_n).select("cell", "c", "cn")
-    ).collect()
-    spark = cent_df.sparkSession
-    if not rows:  # empty corpus: empty pivots → empty assignment
-        return spark.createDataFrame([], "g long, sg array<long>, sgn long")
-    k = min(n_groups, len(rows))
-    mat = np.array([r["c"] for r in rows], dtype=np.float64)
-    chosen = [0]
-    d = ((mat - mat[0]) ** 2).sum(axis=1)
-    d[0] = -1.0
-    for _ in range(k - 1):
-        i = int(np.argmax(d))  # ties → first index → lowest cell id
-        chosen.append(i)
-        d = np.minimum(d, ((mat - mat[i]) ** 2).sum(axis=1))
-        d[i] = -1.0
-    return spark.createDataFrame(
-        [(rows[i]["cell"], rows[i]["c"], rows[i]["cn"]) for i in chosen],
-        "g long, sg array<long>, sgn long",
-    )
-
-
-def hier_candidate_count(v: DataFrame, cent_df: DataFrame, n_cells: int) -> int:
-    """(vector, centroid) pairs the probe actually scores (the GEMM
-    kernel performs Σ_g n_g·m_g multiplies — exactly this join's row
-    count) — the flat path always scores N·C; the gap is the measured
-    pruning."""
-    cand, grouped = _hier_parts(v, cent_df, n_cells)
-    return cand.join(grouped.select("g", "cell"), "g").count()
-
-
-def _hier_parts(
-    v: DataFrame, cent_df: DataFrame, n_cells: int
-) -> tuple[DataFrame, DataFrame]:
-    """The probe stage of :func:`hier_assign`: the surviving
-    (vec_id, vi, g) candidate frame and the group-keyed centroid
-    table (cell, c, cn, g, _d2)."""
-    n_groups = max(2, math.isqrt(max(1, n_cells - 1)) + 1)  # ⌈√C⌉
-    pivots = _kcenter_pivots(cent_df, n_groups)
-    # group every centroid under its nearest pivot (exact integer
-    # argmin, pivot id breaks ties — any grouping is CORRECT, this one
-    # is deterministic); C×G rows, both sides KB/MB-scale. Spelled as
-    # a constant-key broadcast HASH join, not crossJoin: same rows,
-    # but the plan stays inside the family's no-BNLJ invariant
-    # (tests/test_plans.py semdedup shapes)
-    grouped = (
-        cent_df.withColumn("_k", F.lit(1))
-        .join(F.broadcast(pivots.withColumn("_k", F.lit(1))), "_k")
-        .select(
-            "cell",
-            "c",
-            "cn",
-            "g",
-            (F.col("sgn") - 2 * _int_dot(F.col("c"), F.col("sg"))).alias(
-                "_rel"
-            ),
-            (F.col("cn") + F.col("sgn")
-             - 2 * _int_dot(F.col("c"), F.col("sg"))).alias("_d2"),
-        )
-        .groupBy("cell")
-        .agg(
-            F.min_by(
-                F.struct("g", "c", "cn", "_d2"), F.struct("_rel", "g")
-            ).alias("m")
-        )
-        .select("cell", "m.g", "m.c", "m.cn", F.col("m._d2").alias("_d2"))
-    )
-    radii = grouped.groupBy("g").agg(
-        F.max(F.sqrt(F.col("_d2").cast("double"))).alias("rg")
-    )
-    # ONE row: the whole coarse level as an array of (g, sg, sgn, rg)
-    coarse_row = (
-        pivots.join(radii, "g")
-        .agg(F.collect_list(F.struct("g", "sg", "sgn", "rg")).alias("gs"))
-    )
-
-    dg = lambda gcol: F.sqrt(  # noqa: E731
-        (F.col("xn") + gcol["sgn"]
-         - 2 * _int_dot(F.col("vi"), gcol["sg"])).cast("double")
-    )
-    cand = (
-        v.withColumn("_k", F.lit(1))
-        .join(F.broadcast(coarse_row.withColumn("_k", F.lit(1))), "_k")
-        .withColumn(
-            "_ds",
-            F.transform(
-                "gs",
-                lambda gc: F.struct(
-                    gc["g"].alias("g"),
-                    dg(gc).alias("d"),
-                    gc["rg"].alias("rg"),
-                ),
-            ),
-        )
-        .withColumn(
-            "_ub",
-            F.array_min(
-                F.transform("_ds", lambda d: d["d"] + d["rg"])
-            ),
-        )
-        .select(
-            "vec_id",
-            "vi",
-            F.explode(
-                F.filter(
-                    "_ds",
-                    lambda d: d["d"] - d["rg"]
-                    <= F.col("_ub") + F.lit(_HIER_EPS),
-                )
-            ).alias("_d"),
-        )
-        .select("vec_id", "vi", F.col("_d.g").alias("g"))
-    )
-    # surviving groups only: candidates meet centroids in a g-keyed
-    # COGROUP (two hash exchanges on g, never an O(C) broadcast — the
-    # flat crossJoin's scale ceiling); scoring happens in hier_assign's
-    # per-group GEMM kernel
-    return cand, grouped
 
 
 def ivf_cells_capped(n: int, occupancy: int = 128) -> int:
@@ -795,17 +585,15 @@ def greedy_assign(
     hash-ordered sample is a uniform draw from the centroid
     distribution itself: its nearest-pivot regions carry ~equal
     measure on ANY geometry. Exactness is not at stake — pivots only
-    steer the descent. The exact hier path keeps k-center (its
-    triangle pruning wants compact covering radii, and its results
-    are pivot-independent). The hash order also gives the levels a
+    steer the descent. The hash order also gives the levels a
     PREFIX property — P_1 ⊂ P_2 ⊂ … are prefixes of one ordering —
     so one bounded collect serves every level.
 
     Stage shapes: ≤ C^((d-1)/d) pivot rows ride the task closure
     (KB/MB — capped loudly at ``_DESCENT_MAX_PIVOT_ROWS``); centroid
     grouping is one mapInPandas over the C-row centroid table; the
-    fine stage is the same salted cogroup + min_by as the exact path
-    (:func:`_score_groups`). No O(C) broadcast, no window sort."""
+    fine stage is a salted cogroup + min_by (:func:`_score_groups`).
+    No O(C) broadcast, no window sort."""
     import numpy as np
     import pandas as pd
 
@@ -968,8 +756,8 @@ def semdedup_ivf_core(
     core's own checkpointed count, so cells ∝ N callers don't pay a
     separate pre-checkpoint corpus scan just to size C.
 
-    ``assign``: "exact" (the certified path — :func:`assign_cells`,
-    true nearest-centroid at N·C worst-case work) or "greedy" (the
+    ``assign``: "exact" (the certified path — :func:`flat_assign`,
+    true nearest-centroid at N·C work) or "greedy" (the
     cells ∝ N operating point — :func:`greedy_assign`, d-level
     descent, ~d·C^(1/d) work per vector, deterministic but
     approximate; pair with :func:`ivf_cells_capped`).
@@ -988,17 +776,8 @@ def semdedup_ivf_core(
     certified default) leaves cells whole."""
     if assign not in ("exact", "greedy"):
         raise ValueError(f"assign must be 'exact' or 'greedy', got {assign!r}")
-    if assign == "exact":
-        assign_fn = assign_cells
-    else:
-        def assign_fn(v_, cent_, n_, n_rows=None):
-            return greedy_assign(
-                v_, cent_, n_, n_rows=n_rows, nprobe=nprobe,
-                probe_margin=probe_margin, group_spill=group_spill,
-                spill_cap=spill_cap,
-            )
-    # ‖x‖² once per vector: both hierarchical assignments' pruning
-    # bounds need it, and it checkpoints with the rest of the frame
+    # ‖x‖² once per vector: the seeds' centroid norms, checkpointed
+    # with the rest of the frame
     v = v.withColumn("xn", _int_dot(F.col("vi"), F.col("vi")))
     v = materialize(v)  # reused by 4 downstream stages
     n_rows = v.count()  # checkpointed: a metadata-cheap count
@@ -1038,15 +817,25 @@ def semdedup_ivf_core(
             stacklevel=2,
         )
 
-    a0 = assign_fn(v, seeds, n_cells, n_rows=n_rows)
+    def assign_fn(cent: DataFrame) -> DataFrame:
+        if assign == "exact":
+            return flat_assign(v, cent)
+        return greedy_assign(
+            v, cent, n_cells, n_rows=n_rows, nprobe=nprobe,
+            probe_margin=probe_margin, group_spill=group_spill,
+            spill_cap=spill_cap,
+        )
+
+    a0 = assign_fn(seeds)
 
     cents = _lloyd_centroids(v, a0)
     cents = cents.withColumn("cn", _int_dot(F.col("c"), F.col("c")))
-    # the updated centroids feed TWO hierarchical stages (grouping +
-    # probe + argmin); pin them so the Lloyd lineage isn't re-run
+    # the updated centroids are read more than once (the greedy
+    # pivot collect + grouping); pin them so the Lloyd lineage isn't
+    # re-run
     cents = materialize(cents)
 
-    a1 = assign_fn(v, cents, n_cells, n_rows=n_rows)
+    a1 = assign_fn(cents)
 
     b = v.join(a1, "vec_id").select("vec_id", "cell", "v")
     # dominance runs on the occupancy-capped key (_dcell); the

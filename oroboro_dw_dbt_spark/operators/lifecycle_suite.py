@@ -1755,9 +1755,9 @@ def eng_dynamic_partition_overwrite(
     write amplification is O(corrected days), and readers never see a
     half-replaced partition (per-partition commit).
 
-    The mode is set per-entry and restored — it changes INSERT
-    OVERWRITE semantics session-wide and must not leak into other
-    entries' writes."""
+    The mode is a per-write option, not the session conf — the conf
+    changes INSERT OVERWRITE semantics session-wide and must not leak
+    into other entries' writes."""
     import tempfile
 
     e = load_table(spark, sf_dir, "events")
@@ -1773,12 +1773,12 @@ def eng_dynamic_partition_overwrite(
     fix = base.filter(F.dayofmonth("day").isin(5, 6, 7)).withColumn(
         "cents", F.col("cents") * 2
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        fix.write.partitionBy("day").mode("overwrite").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        fix.write.partitionBy("day")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(out)
+    )
     return (
         spark.read.parquet(out)
         .groupBy("day")

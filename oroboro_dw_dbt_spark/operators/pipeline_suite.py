@@ -485,13 +485,14 @@ def udtf_char_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF in a lateral join: each document fans out to its
     100-char chunk spans. The declarative twin (ch_token_chunks) is the
     production path — this entry certifies the UDTF API itself, with
-    spark.sql.execution.pythonUDTF.arrow.enabled so the plan carries an
-    ArrowEvalPythonUDTF batch node, not row-at-a-time pickling."""
+    ``useArrow=True`` so the plan carries an ArrowEvalPythonUDTF batch
+    node, not row-at-a-time pickling (per UDTF: the session conf would
+    leak into every later entry)."""
     from pyspark.sql.functions import col, lit, udtf
 
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-
-    @udtf(returnType="chunk_id int, start_pos int, chunk_chars int")
+    @udtf(
+        returnType="chunk_id int, start_pos int, chunk_chars int", useArrow=True
+    )
     class CharChunks:
         def eval(self, text: str, size: int):
             if not text:
@@ -543,9 +544,7 @@ def udtf_polymorphic_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
     from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
 
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-
-    @udtf
+    @udtf(useArrow=True)
     class FirstTokens:
         @staticmethod
         def analyze(text: AnalyzeArgument, n: AnalyzeArgument) -> AnalyzeResult:

@@ -540,21 +540,20 @@ def dd_semdedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: (1) seeds = the C lowest vec_ids PRESENT (C =
     ivf_cells_for(count), pinned at 16 for sf0.01 so the certified
     hash never moves); (2) assign every vector to its nearest seed
-    via :func:`assign_cells` — flat GEMM for KB-scale centroid tables
-    (this entry's C=16), else :func:`hier_assign`'s two-level probe
-    broadcasting ⌈√C⌉ coarse pivots, exact by triangle-inequality
-    pruning, argmin as a map-side-combinable min_by, never a window
-    sort over N·C rows and never an O(C) broadcast (the r07 flat
-    crossJoin's 100 TB ceiling, VERDICT r07 Missing #2); (3) exact
-    integer centroid update (BIGINT dim sums are order-free;
-    truncating div matches DuckDB //); (4) re-assign to the updated
-    centroids the same way; (5) dd_semdedup's dominance anti-join
-    within each cell. More Lloyd iterations loop stages 3-4 with the
+    via :func:`flat_assign` — the C·dim centroid table rides the task
+    closure and each vector batch is scored by one tiled exact int64
+    GEMM argmin, map-side, lowest cell id on ties, never a window sort
+    over N·C rows; (3) exact integer centroid update (BIGINT dim sums
+    are order-free; truncating div matches DuckDB //); (4) re-assign
+    to the updated centroids the same way; (5) dd_semdedup's dominance
+    anti-join within each cell. More Lloyd iterations loop stages 3-4 with the
     same plan; the float production fit is ivf_topk's pyspark.ml
     KMeans — this entry certifies the downstream plan with a
     quantizer both engines can compute bit-identically. The oracle
-    keeps the SQL flat-argmin spelling: both assignment paths are
-    exact, so the hashes must agree — and they certifiably do."""
+    keeps the SQL flat-argmin spelling. Exact assignment is N·C work;
+    the scale spelling is the occupancy-capped greedy family
+    (``dd_semdedup_ivf_greedy*``: cells ∝ N, ~d·C^(1/d) dots per
+    vector)."""
     v = quantized_vectors(load_table(spark, sf_dir, "embeddings"))
     # sizing rule passed as a callable: the core computes C from its
     # checkpointed count — no separate pre-checkpoint count job (r13,

@@ -79,9 +79,7 @@ def connected_components(
 # join of state against the edge list plus an aggregation, the DRIVER
 # owns the loop (the Pregel pattern on DataFrames; GraphFrames is this
 # productized). Scale shape at 100 TB of edges:
-# - the edge list is scanned once per iteration: materialize it once,
-#   pre-partitioned by src, so every iteration's join reuses one
-#   partitioning;
+# - the edge list is scanned once per iteration: materialize it once;
 # - the rank state is |V| rows — joined BY KEY against edges, never
 #   collected; per-edge contributions pre-combine map-side;
 # - iteration count is fixed (power iteration converges geometrically)
@@ -113,14 +111,12 @@ def pagerank(
     edges = edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
     # carry each src's total out-weight on the edge rows once, so the
-    # per-iteration join is rank ⋈ edges only. Materialize ONCE,
-    # hash-partitioned by src (optimization r12): the checkpoint
-    # preserves outputPartitioning, so when ranks outgrow the broadcast
-    # threshold every iteration's sort-merge join reuses the edge
-    # side's exchange — the EDGE LIST (the scaling side at 100 TB) is
-    # shuffled once per run instead of once per iteration. Integer
-    # arithmetic is partition-order-free, so results are bit-unchanged.
-    ew = materialize(edges.join(outw, "src").repartition("src"))
+    # per-iteration join is rank ⋈ edges only; materialized ONCE. No
+    # pre-partitioning by src: under AQE a checkpointed frame reports
+    # UnknownPartitioning, so a repartition here would only add one
+    # edge-list shuffle per run — each iteration's join re-shuffles
+    # the edge side either way.
+    ew = materialize(edges.join(outw, "src"))
     nodes = materialize(
         ew.select(F.col("src").alias("node"))
         .union(ew.select(F.col("dst").alias("node")))
@@ -251,11 +247,10 @@ def label_propagation(
     Each sweep: votes = edges⋈labels aggregated on (node, candidate
     label), then a row_number pick per node under the (weight DESC,
     label ASC) total order. At 100 TB of edges the same discipline as
-    pagerank applies: symmetrize + pre-partition the edge list ONCE and
-    let every sweep's join reuse that partitioning; the vote pick
-    windows over per-node candidate labels (bounded by distinct
-    neighbor labels, shrinking every sweep), and state is |V| rows,
-    never collected."""
+    pagerank applies: symmetrize + materialize the edge list ONCE; the
+    vote pick windows over per-node candidate labels (bounded by
+    distinct neighbor labels, shrinking every sweep), and state is |V|
+    rows, never collected."""
     from pyspark.sql.window import Window
 
     sym = materialize(
@@ -340,9 +335,9 @@ it{k} AS (
 #
 # Scale shape at 100 TB of edges: each sweep is one edges⋈dist shuffle
 # + one groupBy(dst) min — identical to a pagerank iteration, so the
-# same prescriptions hold (persist + pre-partition edges by src, state
-# checkpointed every few rounds; here rounds are few, so per-call
-# materialization of the input suffices). Bounded rounds beat a
+# same prescriptions hold (edges materialized once, state checkpointed
+# every few rounds; here rounds are few, so per-call materialization
+# of the input suffices). Bounded rounds beat a
 # convergence loop on a cluster: no per-round driver count() barrier.
 
 
@@ -353,12 +348,9 @@ def sssp(
     ``source`` over directed weighted ``edges`` (src, dst, w ≥ 0,
     integer). dist is NULL for nodes not reached within ``rounds``
     hops; with rounds ≥ |V|−1 that means truly unreachable."""
-    # hash-partition the edge side once (optimization r12, same reuse
-    # argument as pagerank): each round's dist ⋈ edges sort-merge join
-    # then re-shuffles only the evolving dist frame, never the edges.
+    # materialized once, not pre-partitioned (see pagerank)
     ew = materialize(
         edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
-        .repartition("src")
     )
     nodes = materialize(
         ew.select(F.col("src").alias("node"))

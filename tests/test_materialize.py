@@ -50,9 +50,10 @@ def test_rows_coalesce_to_scan_width(spark, rows, row_bytes):
 
 def test_no_rows_keeps_partitioning(spark):
     """Without rows/row_bytes nothing is coalesced and the checkpoint
-    keeps its hash partitioning, which ``ops.graph.pagerank`` means to
-    reuse across iterations. (Under AQE the checkpointed plan reports
-    UnknownPartitioning, so the partitioning is read with AQE off.)"""
+    keeps its hash partitioning. (Under AQE the checkpointed plan
+    reports UnknownPartitioning, so the partitioning is read with AQE
+    off; a later join re-shuffles it, which is why ``ops.graph`` does
+    not pre-partition its edge lists.)"""
     def frame():
         return spark.range(0, 1000, numPartitions=3).repartition(6, "id")
 

@@ -1,5 +1,5 @@
-"""Trained-cell SemDeDup and its hierarchical
-(two-level, triangle-inequality-pruned) centroid assignment."""
+"""Trained-cell SemDeDup: the exact (flat) and greedy centroid
+assignments, the Lloyd update and the core."""
 
 from __future__ import annotations
 
@@ -7,9 +7,7 @@ from pyspark.sql import functions as F
 
 from oroboro_dw_dbt_spark.dedup.semdedup import (
     _int_dot,
-    assign_cells,
     flat_assign,
-    hier_assign,
     ivf_cells_for,
     quantized_vectors,
 )
@@ -28,8 +26,9 @@ def _quantized(spark, sf_dir):
 
 def _flat_assign(v, cents):
     """The reference spelling: broadcast EVERY centroid, exact BIGINT
-    (score, cell) argmin — the r07 flat path hier_assign must match
-    bit-for-bit. One copy, used by every parity test."""
+    (score, cell) argmin in Catalyst — the spelling flat_assign's
+    GEMM kernel must match bit-for-bit. One copy, used by every parity
+    test."""
     return {
         r["vec_id"]: r["cell"]
         for r in v.crossJoin(
@@ -54,85 +53,6 @@ def _flat_assign(v, cents):
     }
 
 
-class TestHierAssign:
-    def test_identical_to_flat_argmin(self, spark):
-        """The exactness claim, checked: the pruned two-level probe
-        must produce the SAME (vec_id → cell) map as the flat
-        broadcast-every-centroid argmin, including lowest-id
-        tie-breaks — at both smoke SFs."""
-        for sf_dir in (SF, SF01):
-            v = _quantized(spark, sf_dir).localCheckpoint(eager=True)
-            n_cells = ivf_cells_for(v.count())
-            seeds = v.where(F.col("vec_id") < n_cells).select(
-                F.col("vec_id").alias("cell"),
-                F.col("vi").alias("c"),
-                F.col("xn").alias("cn"),
-            )
-            flat = _flat_assign(v, seeds)
-            hier = {
-                r["vec_id"]: r["cell"]
-                for r in hier_assign(v, seeds, n_cells).collect()
-            }
-            assert hier == flat, sf_dir
-
-    def test_coarse_probe_prunes_on_hierarchical_geometry(self, spark):
-        """The probe must be a probe when geometry allows: on a
-        corpus whose centroids form compact well-separated super-
-        clusters (what a production two-level quantizer produces BY
-        CONSTRUCTION), the triangle bound must discard most groups —
-        candidates ≪ N·C — while the assignment stays bit-identical
-        to the flat argmin. (On an unclustered high-dim corpus, e.g.
-        the uniform sf0.01 embeddings, distance concentration makes
-        ANY exact method score ~all centroids; there the win is the
-        O(√C) broadcast, not fewer dot products — measured and
-        documented in SCALE.md.)"""
-        import numpy as np
-
-        from oroboro_dw_dbt_spark.dedup.semdedup import (
-            hier_candidate_count,
-        )
-
-        rng = np.random.default_rng(7)
-        G_TRUE, FINE_PER, DIM = 8, 8, 16
-        n_cells = G_TRUE * FINE_PER  # 64 fine centroids
-        supers = rng.uniform(-5.0, 5.0, (G_TRUE, DIM))
-        fines = (
-            supers[:, None, :]
-            + rng.normal(0.0, 0.01, (G_TRUE, FINE_PER, DIM))
-        ).reshape(n_cells, DIM)
-        n = 600
-        pts = fines[rng.integers(0, n_cells, n)] + rng.normal(
-            0.0, 0.005, (n, DIM)
-        )
-        vi = np.floor(pts * 1_000_000).astype(np.int64)
-        ci = np.floor(fines * 1_000_000).astype(np.int64)
-        v = spark.createDataFrame(
-            [
-                (int(i), [int(x) for x in vi[i]], int((vi[i] * vi[i]).sum()))
-                for i in range(n)
-            ],
-            "vec_id long, vi array<long>, xn long",
-        ).localCheckpoint(eager=True)
-        cents = spark.createDataFrame(
-            [
-                (int(i), [int(x) for x in ci[i]], int((ci[i] * ci[i]).sum()))
-                for i in range(n_cells)
-            ],
-            "cell long, c array<long>, cn long",
-        ).localCheckpoint(eager=True)
-
-        probed = hier_candidate_count(v, cents, n_cells)
-        # perfect two-level pruning scores ~C/G_spark cells per vector;
-        # ≤ half of flat is the "meaningfully prunes" bar
-        assert probed <= 0.5 * n * n_cells, (probed, n * n_cells)
-
-        hier = {
-            r["vec_id"]: r["cell"]
-            for r in hier_assign(v, cents, n_cells).collect()
-        }
-        assert hier == _flat_assign(v, cents)
-
-
 class TestHierAssignRandomized:
     def _check(self, spark, vi, ci):
         import numpy as np
@@ -155,18 +75,15 @@ class TestHierAssignRandomized:
         # ground truth in numpy: exact integer scores, lowest-id ties
         scores = (ci * ci).sum(axis=1)[None, :] - 2 * (vi @ ci.T)
         expect = {i: int(scores[i].argmin()) for i in range(n)}
-        got = {
-            r["vec_id"]: r["cell"]
-            for r in hier_assign(v, cents, n_cells).collect()
-        }
-        assert got == expect
+        got = {r["vec_id"]: r["cell"] for r in flat_assign(v, cents).collect()}
+        assert got == _flat_assign(v, cents) == expect
 
     def test_seeded_geometries(self, spark):
-        """Exactness across adversarial geometries: uniform (no
-        pruning possible), clustered (heavy pruning), duplicated
-        centroids (argmin ties everywhere), and a lattice corpus
-        (many exact score ties at cell boundaries). Ground truth is
-        an independent numpy argmin with first-index tie-break."""
+        """flat_assign's exactness across adversarial geometries:
+        uniform, duplicated centroids (argmin ties everywhere), and a
+        lattice corpus (many exact score ties at cell boundaries).
+        Ground truth is the SQL reference and an independent numpy
+        argmin with first-index tie-break."""
         import numpy as np
 
         for seed in (1, 2, 3):
@@ -198,8 +115,9 @@ class TestHierAssignRandomized:
 
 
 class TestAssignDispatch:
-    """The size dispatch (VERDICT r08 Next #5) and the salted cogroup
-    (ADVICE r08) must both be invisible in the results."""
+    """The exact path's map-side plan and its row tiling, and the
+    salted cogroup (ADVICE r08), must all be invisible in the
+    results."""
 
     def _frames(self, spark, seed=11, n=200, n_cells=24, dim=8):
         import numpy as np
@@ -225,45 +143,70 @@ class TestAssignDispatch:
         expect = {i: int(scores[i].argmin()) for i in range(n)}
         return v, cents, expect
 
-    def test_flat_equals_hier_at_boundary(self, spark):
-        """flat_assign (map-side GEMM, zero shuffles) and hier_assign
-        (two-level probe) must agree bit-for-bit on the same inputs —
-        the dispatch boundary cannot move a result."""
-        v, cents, expect = self._frames(spark)
-        flat = {r["vec_id"]: r["cell"] for r in flat_assign(v, cents).collect()}
-        hier = {
-            r["vec_id"]: r["cell"] for r in hier_assign(v, cents, 24).collect()
-        }
-        assert flat == expect
-        assert hier == expect
-
     def test_assign_cells_dispatches_flat_without_shuffle(self, spark):
-        """At C <= _FLAT_MAX_CELLS the dispatched plan must contain no
-        exchange at all (the whole assignment is map-side)."""
+        """The exact assignment's plan contains no exchange at all (the
+        whole assignment is map-side)."""
         v, cents, expect = self._frames(spark)
-        out = assign_cells(v, cents, 24, n_rows=200)
+        out = flat_assign(v, cents)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert {r["vec_id"]: r["cell"] for r in out.collect()} == expect
 
-    def test_salted_cogroup_equals_unsalted(self, spark):
-        """hier_assign with many salts (n_rows forces S > 1) must
-        equal the unsalted spelling: subgroup minima of a min are the
-        min, and (score, cell) ordering keeps the lowest-id ties."""
+    def test_flat_assign_tiles_rows_exactly(self, spark, monkeypatch):
+        """At C = 300 (past the 256 cells where the exact path once
+        switched to a hierarchical probe) with a tile budget that
+        splits the one 1000-row batch into 4 row tiles, flat_assign
+        still equals the numpy argmin, lowest cell id on the duplicated
+        centroids' ties."""
+        import numpy as np
+
         from oroboro_dw_dbt_spark.dedup import semdedup as sd
 
-        v, cents, expect = self._frames(spark, seed=13)
-        # duplicated centroids on top: ties must still break low
+        rng = np.random.default_rng(17)
+        base = rng.integers(-(10**6), 10**6, (150, 8)).astype(np.int64)
+        ci = np.vstack([base, base])  # C = 300, every score tied twice
+        vi = rng.integers(-(10**6), 10**6, (1000, 8)).astype(np.int64)
+        v = spark.createDataFrame(
+            [(i, [int(x) for x in vi[i]]) for i in range(len(vi))],
+            "vec_id long, vi array<long>",
+        ).coalesce(1)
+        cents = spark.createDataFrame(
+            [
+                (i, [int(x) for x in ci[i]], int((ci[i] * ci[i]).sum()))
+                for i in range(len(ci))
+            ],
+            "cell long, c array<long>, cn long",
+        )
+        monkeypatch.setattr(sd, "_TILE_ELEMS", 1)  # tile = 256-row floor
+        out = flat_assign(v, cents)
+        scores = (ci * ci).sum(axis=1)[None, :] - 2 * (vi @ ci.T)
+        expect = {i: int(scores[i].argmin()) for i in range(len(vi))}
+        assert v.rdd.getNumPartitions() == 1 and len(vi) > 3 * 256
+        assert {r["vec_id"]: r["cell"] for r in out.collect()} == expect
+        assert max(expect.values()) < 150  # ties broke to the low copy
+
+    def test_salted_cogroup_equals_unsalted(self, spark):
+        """greedy_assign, the salted cogroup's caller, with many salts
+        (n_rows forces S > 1) must equal its unsalted (S = 1) run:
+        subgroup minima of a min are the min, and (score, cell)
+        ordering keeps the lowest-id ties."""
+        from oroboro_dw_dbt_spark.dedup import semdedup as sd
+        from oroboro_dw_dbt_spark.dedup.semdedup import greedy_assign
+
+        v, cents, _ = self._frames(spark, seed=13)
+        unsalted = {
+            r["vec_id"]: r["cell"] for r in greedy_assign(v, cents, 24).collect()
+        }
         orig = sd._SALT_TARGET_ROWS
         sd._SALT_TARGET_ROWS = 16  # 200 rows → S = 13
         try:
             salted = {
                 r["vec_id"]: r["cell"]
-                for r in hier_assign(v, cents, 24, n_rows=200).collect()
+                for r in greedy_assign(v, cents, 24, n_rows=200).collect()
             }
         finally:
             sd._SALT_TARGET_ROWS = orig
-        assert salted == expect
+        assert salted == unsalted and len(salted) == 200
 
 
 class TestGreedyAssign:
@@ -785,7 +728,7 @@ class TestLloydCentroidUpdate:
             F.col("vi").alias("c"),
             F.col("xn").alias("cn"),
         )
-        a0 = assign_cells(v, seeds, n_cells)
+        a0 = flat_assign(v, seeds)
         got = {
             r["cell"]: list(r["c"])
             for r in _lloyd_centroids(v, a0).collect()

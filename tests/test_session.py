@@ -83,3 +83,35 @@ def test_one_materialization_seam():
             ):
                 imports.append(f"{f.relative_to(root)}:{node.lineno}")
     assert calls == [] and imports == [], (calls, imports)
+
+
+def test_session_conf_mutation_surface():
+    """The package modules that set or unset a session conf at run time
+    (``<x>.conf.set``/``.unset``, or through a local ``conf``) are
+    exactly these. A conf set inside a catalog entry leaks into every
+    later entry of the session, so a per-call option is preferred; a
+    new mutation site must be added here on purpose."""
+    import ast
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "oroboro_dw_dbt_spark"
+    found = set()
+    for f in pkg.glob("**/*.py"):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("set", "unset")
+            ):
+                continue
+            owner = node.func.value
+            if (isinstance(owner, ast.Attribute) and owner.attr == "conf") or (
+                isinstance(owner, ast.Name) and owner.id == "conf"
+            ):
+                found.add(f.relative_to(pkg).as_posix())
+    assert found == {
+        "sources/testdata.py",
+        "engine/table_format.py",
+        "streaming/jobs.py",
+        "operators/events_suite.py",
+    }, sorted(found)
